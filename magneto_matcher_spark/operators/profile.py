@@ -272,13 +272,10 @@ def profile_rows(
     table_name: str,
     n_samples: int = 10,
     sample_mode: str = "mixed",
-    exact_distinct: bool = True,  # kept for API compat; exact is free now
     key_threshold: float = 0.8,
     numeric_threshold: float = 0.90,
 ) -> list[tuple]:
-    """Single-table convenience wrapper over :func:`profile_rows_multi`.
-    ``exact_distinct`` is accepted but ignored: the melt-based profiler gets
-    exact distinct counts for free (count of value groups, no Expand)."""
+    """Single-table convenience wrapper over :func:`profile_rows_multi`."""
     return profile_rows_multi(
         [(df, table_name)],
         n_samples=n_samples,
@@ -293,7 +290,6 @@ def profile_table(
     table_name: str,
     n_samples: int = 10,
     sample_mode: str = "mixed",
-    exact_distinct: bool = True,
     key_threshold: float = 0.8,
     numeric_threshold: float = 0.90,
 ) -> DataFrame:
@@ -304,7 +300,6 @@ def profile_table(
         table_name,
         n_samples=n_samples,
         sample_mode=sample_mode,
-        exact_distinct=exact_distinct,
         key_threshold=key_threshold,
         numeric_threshold=numeric_threshold,
     )

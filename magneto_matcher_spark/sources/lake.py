@@ -71,16 +71,6 @@ _SIMPLE_TYPES = {
 #: "bigint").
 SAFE_PROMOTIONS = {("int", "bigint"), ("float", "double")}
 
-# Persist the CoW batch across the touched-bucket probe + merged write
-# (two actions over one lineage).  Measured interleaved A/B (2M-event
-# Zipf feed, 5 batches, local[32], min-of-3): recompute 8.43 s vs persist
-# 9.16 s, recompute faster in every pair — caching the wide rows costs
-# more than re-running the parquet-scan + codegen-normalize lineage.  A
-# caller whose batch lineage is genuinely expensive (remote source,
-# Python stages) should persist before merge() or pass `touched`.  Flip
-# only with a new interleaved measurement.
-_COW_PROBE_PERSIST = False
-
 
 def _type_to_str(dt: T.DataType) -> str:
     return dt.simpleString()
@@ -265,10 +255,8 @@ class LakeTable:
         are cached (immutable) so repeated reads cost one load each."""
         if not snap:
             return []
-        if "manifest" in snap:  # legacy inline manifest
-            return snap["manifest"]
         out: list[dict] = []
-        for seg in snap.get("manifest_segs", []):
+        for seg in snap["manifest_segs"]:
             if seg not in self._seg_cache:
                 with open(os.path.join(self.root, seg)) as fh:
                     self._seg_cache[seg] = json.load(fh)
@@ -276,26 +264,8 @@ class LakeTable:
         return out
 
     def _segs_of(self, snap: dict | None) -> list[str]:
-        """Parent segments for a segment-reusing commit.  A legacy snapshot
-        (inline ``manifest`` written by the pre-segment format) is upgraded
-        write-through: its file list is materialized ONCE as a segment so a
-        reusing commit carries the existing files instead of silently
-        dropping them (data loss)."""
-        if not snap:
-            return []
-        if "manifest" in snap and not snap.get("manifest_segs"):
-            seg_rel = os.path.join(
-                "metadata", f"seg-legacy-{snap['snapshot_id']}.json"
-            )
-            seg_path = os.path.join(self.root, seg_rel)
-            if not os.path.exists(seg_path):
-                tmp = seg_path + ".tmp"
-                with open(tmp, "w") as fh:
-                    json.dump(snap["manifest"], fh)
-                os.replace(tmp, seg_path)
-            self._seg_cache[seg_rel] = list(snap["manifest"])
-            return [seg_rel]
-        return list(snap.get("manifest_segs", []))
+        """Parent segments for a segment-reusing commit."""
+        return list(snap["manifest_segs"]) if snap else []
 
     def current_snapshot(self) -> dict | None:
         sid = self.meta["current_snapshot_id"]
@@ -684,12 +654,9 @@ class LakeTable:
         self,
         winners: DataFrame,
         summary: dict | None = None,
-        op_col: str = "op",
-        touched: list[int] | None = None,
         pre_deduped: bool = True,
         dedup_strategy: str = "agg",
         n_salts: int = 32,
-        aligned: bool = False,
     ) -> int:
         """J6: key-partition-pruned MERGE (SURVEY §2.3).
 
@@ -715,107 +682,56 @@ class LakeTable:
         merge ONLY those buckets' rows with the batch (one hash aggregation),
         rewrite those buckets, keep every untouched file by reference.
 
-        ``touched``: optional precomputed bucket list.  Dedup has the same key
-        set as its input, so callers that already scanned the raw batch (the
-        CDC engine's stats pass) can hand the bucket set over — computing it
-        here would execute the whole winners lineage (normalize + dedup
-        shuffle) once for this collect and a second time for the write.
-
-        ``aligned``: caller's promise that ``winners`` is already partitioned
-        on the table's bucket layout — honoured only with ``pre_deduped=True``
-        (the in-merge dedup path re-partitions with its own pin and tracks
-        alignment separately).
-
         Write modes (``create(write_mode=...)``):
 
         - ``cow`` — copy-on-write: one fused max-LSN aggregation over
           target ∪ batch, then rewrite the touched buckets.  Read is a plain
           scan.  Right when batches are small relative to buckets or reads
           dominate.
-        - ``mor`` — merge-on-read: append the winners (with ``op``) as bucketed
-          DELTA files, no join, no rewrite — O(batch) per merge regardless of
-          table size.  Reads resolve base ∪ deltas via max-LSN dedup;
-          ``compact()`` folds deltas back into data files.  Right for
-          high-frequency ingest at 100 TB, where CoW would rewrite the table
-          every micro-batch.
+        - ``mor`` — merge-on-read: :meth:`stage_delta` then
+          :meth:`commit_delta` — append the winners (with ``op``) as
+          bucketed DELTA files, no join, no rewrite — O(batch) per merge
+          regardless of table size.  Reads resolve base ∪ deltas via
+          max-LSN dedup; ``compact()`` folds deltas back into data files.
+          Right for high-frequency ingest at 100 TB, where CoW would rewrite
+          the table every micro-batch.
         """
         from magneto_matcher_spark.plans.apply import dedup_max_lsn
 
-        snapshot_id = self._next_snapshot_id()
-        cols = self.column_names
-        lsn_col = self.lsn_col
-
         is_mor = self.meta.get("write_mode", "cow") == "mor"
-        n_aligned = self.aligned_partitions()
-        # `aligned` (the caller's promise that `winners` is already
-        # partitioned on the bucket layout) only applies when
-        # pre_deduped=True; the in-merge dedup below re-partitions with its
-        # own pin, tracked in a DISTINCT local so the parameter's meaning
-        # never flips mid-function.
-        delta_aligned = aligned
         if not pre_deduped and (is_mor or dedup_strategy == "salted"):
             # MoR delta files stay ≤1 row/key (read-amplification bound);
             # a hot-key CoW batch pre-shrinks two-phase before the fused agg.
-            # Keyhash tables pin the dedup's final exchange to n_buckets
+            # Keyhash MoR tables pin the dedup's final exchange to n_buckets
             # partitions so the delta write can reuse it (ONE exchange).
             winners = dedup_max_lsn(
-                winners, key=self.key, lsn_col=lsn_col,
+                winners, key=self.key, lsn_col=self.lsn_col,
                 strategy=dedup_strategy, n_salts=n_salts,
-                n_partitions=n_aligned if is_mor else None,
+                n_partitions=self.aligned_partitions() if is_mor else None,
             )
-            delta_aligned = is_mor and n_aligned is not None
-
-        batch = self._with_bucket(winners.select(*cols, op_col))
-
         if is_mor:
-            new_entries = self._write_data_files(
-                batch, f"delta-{snapshot_id}", kind="delta",
-                pre_partitioned=delta_aligned and n_aligned is not None,
-            )
-            cur = self.current_snapshot()
-            s = {
-                "delta-rows-written": sum(e["rows"] for e in new_entries),
-                "rows-written": sum(e["rows"] for e in new_entries),
-                "buckets-rewritten": 0,
-                "files-kept": len(self.manifest(cur)),
-            }
-            s.update(summary or {})
-            return self._commit(
-                "merge", s, base_segs=self._segs_of(cur), new_entries=new_entries
-            )
+            entries = self.stage_delta(winners, aligned=not pre_deduped)
+            return self.commit_delta(entries, summary)
 
-        persisted = False
-        if touched is None and _COW_PROBE_PERSIST:
-            # the touched-bucket probe is an ACTION over the full batch
-            # lineage; the merged write below re-executes that lineage.
-            # Persisting to avoid the re-execution was measured SLOWER at
-            # this engine's batch shapes (see _COW_PROBE_PERSIST) — kept
-            # as an opt-in for expensive lineages.
-            batch = batch.persist()
-            persisted = True
-        if touched is None:
-            touched = [
-                r["_bucket"] for r in batch.select("_bucket").distinct().collect()
-            ]
-        try:
-            cur = self.current_snapshot()
-            old_manifest = self.manifest(cur)
-            kept = [e for e in old_manifest if e["bucket"] not in set(touched)]
-
-            merged = self.merged_frame(
-                batch.drop("_bucket"), touched, op_col=op_col
-            )
-            new_entries = self._write_data_files(
-                self._with_bucket(merged.select(*cols, op_col)),
-                f"snap-{snapshot_id}",
-                split_tombstones_on=op_col,
-                # keyhash: merged_frame pinned its one fused-agg exchange to
-                # n_buckets partitions on the key — already bucket-laid-out
-                pre_partitioned=n_aligned is not None,
-            )
-        finally:
-            if persisted:
-                batch.unpersist()
+        snapshot_id = self._next_snapshot_id()
+        cols = self.column_names
+        batch = self._with_bucket(winners.select(*cols, "op"))
+        touched = [
+            r["_bucket"] for r in batch.select("_bucket").distinct().collect()
+        ]
+        kept = [
+            e for e in self.manifest(self.current_snapshot())
+            if e["bucket"] not in set(touched)
+        ]
+        merged = self.merged_frame(batch.drop("_bucket"), touched)
+        new_entries = self._write_data_files(
+            self._with_bucket(merged.select(*cols, "op")),
+            f"snap-{snapshot_id}",
+            split_tombstones_on="op",
+            # keyhash: merged_frame pinned its one fused-agg exchange to
+            # n_buckets partitions on the key — already bucket-laid-out
+            pre_partitioned=self.aligned_partitions() is not None,
+        )
         data_rows = sum(e["rows"] for e in new_entries if e["kind"] == "data")
         tomb_rows = sum(e["rows"] for e in new_entries if e["kind"] == "tombstone")
         s = {
@@ -830,9 +746,7 @@ class LakeTable:
         # (kept entries may span many parent segments minus touched buckets)
         return self._commit("merge", s, new_entries=kept + new_entries)
 
-    def merged_frame(
-        self, batch: DataFrame, touched: list[int], op_col: str = "op"
-    ) -> DataFrame:
+    def merged_frame(self, batch: DataFrame, touched: list[int]) -> DataFrame:
         """The CoW merge plan: MERGE as ONE aggregation, not a full-outer
         join — (touched-bucket target ∪ batch) → max_by(payload,
         struct(lsn, is_target)) per key.
@@ -864,8 +778,8 @@ class LakeTable:
         Buckets that do carry delta files (mixed-mode tables) fall back to
         the resolved read."""
         cols = self.column_names
-        out_cols = [*cols, op_col]
-        target = self._raw_target_view(touched, op_col=op_col)
+        out_cols = [*cols, "op"]
+        target = self._raw_target_view(touched)
         unioned = target.withColumn("_tgt", F.lit(1)).unionByName(
             batch.select(*out_cols).withColumn("_tgt", F.lit(0))
         )
@@ -886,7 +800,7 @@ class LakeTable:
             .select([F.col(f"_w.{c}").alias(c) for c in out_cols])
         )
 
-    def _raw_target_view(self, touched: list[int], op_col: str = "op") -> DataFrame:
+    def _raw_target_view(self, touched: list[int]) -> DataFrame:
         """Touched-bucket rows for the merge aggregation, WITHOUT resolution:
         data files as op='U', tombstone files with their op column, no dedup
         (pure-CoW buckets are already ≤1 row per key across both kinds).
@@ -902,33 +816,33 @@ class LakeTable:
         parts: list[DataFrame] = []
         if data:
             parts.append(
-                self._read_manifest(data, schema_id).withColumn(op_col, F.lit("U"))
+                self._read_manifest(data, schema_id).withColumn("op", F.lit("U"))
             )
         if tombs:
-            parts.append(self._read_manifest(tombs, schema_id, extra_cols=(op_col,)))
+            parts.append(self._read_manifest(tombs, schema_id, extra_cols=("op",)))
         if not parts:
             empty = self.spark.createDataFrame([], self._schema_for(schema_id))
-            return empty.withColumn(op_col, F.lit("U"))
+            return empty.withColumn("op", F.lit("U"))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
 
-    def stage_delta(
-        self, winners: DataFrame, op_col: str = "op", aligned: bool = False
-    ) -> list[dict]:
+    def stage_delta(self, winners: DataFrame, aligned: bool = False) -> list[dict]:
         """Write a batch's MoR delta files WITHOUT committing; returns the
         manifest entries for :meth:`commit_delta`.
 
-        This is the concurrent-ingest split of the MoR merge: delta writes
-        touch no shared state (each stage gets its own directory), so multiple
-        micro-batches can stage in parallel threads while commits stay
-        serialized in LSN order (the engine's exactly-once contract).
-        Requires a schema-stable window: callers must resolve drift before
-        staging (the engine serializes on drift)."""
+        The write half of the MoR merge: delta writes touch no shared state
+        (each stage gets its own directory), so multiple micro-batches can
+        stage in parallel threads while commits stay serialized in LSN order
+        (the engine's exactly-once contract).  Requires a schema-stable
+        window: callers must resolve drift before staging (the engine
+        serializes on drift).  ``aligned``: the caller's promise that
+        ``winners``' last exchange is ``repartition(aligned_partitions(),
+        *key)``, so the write skips its bucket repartition."""
         if self.meta.get("write_mode", "cow") != "mor":
             raise ValueError("stage_delta requires write_mode='mor'")
-        batch = self._with_bucket(winners.select(*self.column_names, op_col))
+        batch = self._with_bucket(winners.select(*self.column_names, "op"))
         return self._write_data_files(
             batch, f"delta-stage-{uuid.uuid4().hex[:12]}", kind="delta",
             pre_partitioned=aligned and self.aligned_partitions() is not None,
@@ -1084,12 +998,12 @@ class LakeTable:
             self.meta["expired_offset_end"] = best
 
         live_files = {e["path"] for s in kept for e in self.manifest(s)}
-        live_segs = {seg for s in kept for seg in s.get("manifest_segs", [])}
+        live_segs = {seg for s in kept for seg in s["manifest_segs"]}
         dead_files: set[str] = set()
         dead_segs: set[str] = set()
         for s in expired:
             dead_files.update(e["path"] for e in self.manifest(s))
-            dead_segs.update(s.get("manifest_segs", []))
+            dead_segs.update(s["manifest_segs"])
         dead_files -= live_files
         dead_segs -= live_segs
 

@@ -1,11 +1,19 @@
 """The CDC engine — Structured Streaming / batch-replay driver (SURVEY.md §3.4).
 
-Per micro-batch (``foreachBatch`` or replay loop):
+Every micro-batch goes through one two-step pipeline, whichever driver
+delivers it (``apply_batch``/``foreachBatch``, sequential or concurrent
+``replay``):
 
-    committed-offset skip → normalize payload (P8) → schema-drift
-    detect/resolve (Magneto matcher between batch column profile and table
-    column profile) → max-LSN dedup (salted two-phase) → bucket-pruned MERGE →
-    snapshot commit stamped with offsets + per-partition lineage + metrics.
+- **stage** (``CdcEngine._stage``): footer/scan stats → empty / null-LSN /
+  committed-watermark skip → schema-drift resolve (Magneto matcher between
+  batch and table column profiles) → normalize payload (P8) → dedup
+  strategy pick.  MoR then runs the max-LSN dedup and writes the batch's
+  delta files uncommitted (``LakeTable.stage_delta``); CoW writes nothing.
+- **commit** (``CdcEngine._commit``): re-check the watermark, then ONE
+  snapshot commit stamped with offsets + per-file lineage —
+  ``commit_delta`` for MoR, the fused ``merge`` for CoW (its MERGE reads
+  the prior table state, so it can only run after the previous commit) —
+  then compact/expire and one ``BatchMetrics`` record.
 
 Exactly-once: Spark's checkpoint gives at-least-once delivery of batches; the
 engine stamps the consumed LSN range of every batch into the snapshot summary
@@ -24,6 +32,8 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -63,8 +73,32 @@ def _arrow_type_str(t) -> str | None:
 
 
 class BatchMetrics(dict):
-    """Per-micro-batch metrics record (A11): events in, winners, rows written,
-    duration, throughput, lag."""
+    """Per-micro-batch metrics record (A11), one shape for every driver.
+
+    Every record: ``source``, ``events_in``, ``offsets_start``,
+    ``offsets_end``, ``skipped``, ``stage_s``, ``commit_s`` and
+    ``duration_s`` (= ``stage_s + commit_s`` before rounding).
+
+    Skipped batches add ``reason`` (``"empty"`` or
+    ``"offsets<=committed(<watermark>)"``).  Applied batches add
+    ``snapshot_id``, ``rows_written`` and ``buckets_rewritten`` (from the
+    batch's own commit summary, taken before maintenance), ``compacted``,
+    ``dedup_used``, ``hot_key_frac_est`` (None unless 'auto' sampled),
+    ``events_per_sec`` and ``lsn_lag``."""
+
+
+@dataclass
+class _Staged:
+    """A batch between stage and commit: its record so far, lineage spans
+    and dedup pick, plus what the commit writes — MoR's staged delta
+    entries, or CoW's normalized frame (merged at commit)."""
+
+    metrics: BatchMetrics
+    spans: dict[str, list[int]]
+    strategy: str = "agg"
+    hot_est: float | None = None
+    frame: DataFrame | None = None
+    entries: list[dict] | None = None
 
 
 class CdcEngine:
@@ -114,10 +148,6 @@ class CdcEngine:
         self.auto_min_events = auto_min_events
         self.expire_keep = expire_keep
         self.metrics_log: list[BatchMetrics] = []
-
-    def _maybe_expire(self) -> None:
-        if self.expire_keep is not None:
-            self.table.expire_snapshots(keep_last=self.expire_keep)
 
     def _resolve_dedup_strategy(
         self, batch: DataFrame, n_events: int
@@ -234,139 +264,151 @@ class CdcEngine:
             batch = batch.withColumn(name, F.col(name).cast(tt))
         return batch
 
-    # ------------- batch apply -------------
+    # ------------- the batch pipeline: stage → commit -------------
 
-    def apply_batch(
-        self,
-        batch: DataFrame,
-        source_desc: str | None = None,
-        stats: tuple[int, int, int] | None = None,
-    ) -> BatchMetrics:
-        """``stats``: optional precomputed (n_events, min_lsn, max_lsn[,
-        per_file_spans]) — the replay driver reads them (including each
-        file's LSN span) from the batch's parquet footers (zero Spark jobs);
-        the streaming path computes them per SOURCE FILE with one
-        aggregation scan (groupBy(input_file_name()) shuffles only ~one
-        partially-aggregated row per file — file names, unlike scan
-        partition ids, are stable across a restart-resumed replay)."""
-        t0 = time.time()
+    def _stage(self, source: str, batch: DataFrame | None = None) -> _Staged:
+        """Everything before the commit.  ``batch=None`` means ``source`` is
+        a replay batch dir: its stats (count, LSN range, each file's LSN
+        span) come from the parquet footers with zero Spark jobs, and an
+        empty dir is never read (schema inference on it would throw).  A
+        frame is stat'ed per SOURCE FILE with one aggregation scan (file
+        names, unlike scan partition ids, are stable across a
+        restart-resumed replay)."""
+        t0 = time.perf_counter()
         lsn_col = self.table.lsn_col
-
-        spans: dict[str, list[int]] = {}
-        if stats is not None:
-            n_events, lo, hi = stats[:3]
-            if len(stats) > 3 and stats[3]:
-                spans = stats[3]
-        else:
-            n_events, lo, hi, spans = _scan_stats(batch, lsn_col)
-
+        stats = None
+        if batch is None:
+            stats = _footer_stats(source, lsn_col)
+            if stats is None or stats[0]:
+                batch = _read_batch_dir(self.table.spark, source)
+        n_events, lo, hi, spans = stats or _scan_stats(batch, lsn_col)
         metrics = BatchMetrics(
-            events_in=n_events,
-            offsets_start=lo,
-            offsets_end=hi,
-            source=source_desc or "",
+            source=source, events_in=n_events, offsets_start=lo,
+            offsets_end=hi, skipped=False,
         )
+        staged = _Staged(metrics, spans)
         if n_events == 0:
-            metrics.update(skipped=True, reason="empty", duration_s=time.time() - t0)
-            self._emit(metrics)
-            return metrics
-
-        if hi is None:
+            metrics.update(skipped=True, reason="empty")
+        elif hi is None:
             # rows exist but every LSN is null — a malformed feed; ordering
             # and the exactly-once watermark are both undefined.  Fail loud
             # instead of a TypeError deep in the comparison.
             raise ValueError(
-                f"batch {source_desc!r} has {n_events} rows but no non-null "
+                f"batch {source!r} has {n_events} rows but no non-null "
                 f"'{lsn_col}' values — cannot order or watermark it"
             )
-        committed = self.table.committed_offset_end()
-        if hi <= committed:
-            metrics.update(
-                skipped=True, reason=f"offsets<=committed({committed})",
-                duration_s=time.time() - t0,
-            )
-            self._emit(metrics)
-            return metrics
-
-        t_stats = time.time() - t0
-        # drift first, normalize second: a drift-renamed column (e.g.
-        # tool_name → tool) must land under its table name BEFORE the
-        # name-keyed normalizer runs, or renamed payloads would be written
-        # un-normalized (null-normalize/trim/cast skipped).
-        batch = self._resolve_drift(batch)
-        batch = normalize_payload(batch)
-        strategy, hot_est = self._resolve_dedup_strategy(batch, n_events)
-        cow = self.table.meta.get("write_mode", "cow") == "cow"
-        if cow:
-            # fused path: the max-LSN dedup happens INSIDE the merge
-            # aggregation (sources/lake.py merge(pre_deduped=False)) — one
-            # partial-aggregated shuffle of target ∪ batch instead of a
-            # dedup shuffle + persist + two-sided merge join.  'salted'
-            # batches still pre-shrink two-phase inside merge().
-            to_merge = batch
-            metrics["dedup_used"] = f"fused-{strategy}"
+        elif hi <= (committed := self.table.committed_offset_end()):
+            metrics.update(skipped=True, reason=f"offsets<=committed({committed})")
         else:
-            # MoR consumes winners exactly once (the delta write) — dedup
-            # up front so delta files stay ≤1 row/key.  On keyhash tables
-            # the dedup's final exchange is pinned to n_buckets partitions
-            # so the delta write reuses it (one exchange per batch).
-            to_merge = dedup_max_lsn(
-                batch,
-                key=self.table.key,
-                lsn_col=lsn_col,
-                strategy=strategy,
-                n_salts=self.n_salts,
-                n_partitions=self.table.aligned_partitions(),
+            # drift first, normalize second: a drift-renamed column (e.g.
+            # tool_name → tool) must land under its table name BEFORE the
+            # name-keyed normalizer runs, or renamed payloads would be
+            # written un-normalized (null-normalize/trim/cast skipped).
+            batch = normalize_payload(self._resolve_drift(batch))
+            staged.strategy, staged.hot_est = self._resolve_dedup_strategy(
+                batch, n_events
             )
-            metrics["dedup_used"] = strategy
-        if hot_est is not None:
-            metrics["hot_key_frac_est"] = round(hot_est, 4)
+            if self.table.meta.get("write_mode", "cow") == "mor":
+                # MoR consumes winners exactly once (the delta write) — dedup
+                # up front so delta files stay ≤1 row/key.  On keyhash tables
+                # the dedup's final exchange is pinned to n_buckets
+                # partitions so the delta write reuses it (one exchange).
+                n_aligned = self.table.aligned_partitions()
+                winners = dedup_max_lsn(
+                    batch,
+                    key=self.table.key,
+                    lsn_col=lsn_col,
+                    strategy=staged.strategy,
+                    n_salts=self.n_salts,
+                    n_partitions=n_aligned,
+                )
+                staged.entries = self.table.stage_delta(
+                    winners, aligned=n_aligned is not None
+                )
+            else:
+                staged.frame = batch
+        metrics["stage_s"] = time.perf_counter() - t0
+        return staged
 
-        # per-partition lineage: source offsets plus each input file's (or
-        # scan partition's) LSN span — a restart-resumed replay must
-        # reproduce this map exactly (tested in test_engine)
-        t1 = time.time()
-        lineage = {
-            "source": source_desc or "",
-            "start": int(lo),
-            "end": int(hi),
-            "files": spans,
-        }
-        snapshot_id = self.table.merge(
-            to_merge,
-            summary={
-                "offsets.start": int(lo),
-                "offsets.end": int(hi),
+    def _commit(self, staged: _Staged) -> BatchMetrics:
+        """Make the staged batch visible in one snapshot commit stamped with
+        offsets + lineage, run maintenance, emit the record.  Commits run
+        serially in feed order; a batch whose range fell under the watermark
+        since it was staged (a redelivery race) is discarded instead."""
+        t0 = time.perf_counter()
+        metrics = staged.metrics
+        committed = self.table.committed_offset_end()
+        if not metrics["skipped"] and metrics["offsets_end"] <= committed:
+            if staged.entries is not None:
+                self.table.discard_staged(staged.entries)
+            metrics.update(skipped=True, reason=f"offsets<=committed({committed})")
+        if not metrics["skipped"]:
+            lo, hi = int(metrics["offsets_start"]), int(metrics["offsets_end"])
+            # per-file lineage: source offsets plus each input file's LSN
+            # span — a restart-resumed replay must reproduce this map
+            # exactly (tested in test_engine)
+            lineage = {
+                "source": metrics["source"], "start": lo, "end": hi,
+                "files": staged.spans,
+            }
+            summary = {
+                "offsets.start": lo,
+                "offsets.end": hi,
                 "source.lineage": json.dumps(lineage),
-            },
-            pre_deduped=not cow,
-            dedup_strategy=strategy,
-            n_salts=self.n_salts,
-            aligned=not cow and self.table.aligned_partitions() is not None,
-        )
-        # the MERGE snapshot's summary, captured BEFORE compaction/expiry —
-        # afterwards the current snapshot may be the compaction's (whose
-        # rows-written describes the rewrite, not this batch) and expiry may
-        # have dropped the merge snapshot entirely
-        summ = self.table.summary(snapshot_id)
-        compacted = self._maybe_compact() if not cow else False
-        self._maybe_expire()
-        t_merge = time.time() - t1
-        dur = time.time() - t0
+            }
+            mor = staged.entries is not None
+            if mor:
+                snapshot_id = self.table.commit_delta(staged.entries, summary=summary)
+            else:
+                # fused path: the max-LSN dedup happens INSIDE the merge
+                # aggregation — one partial-aggregated shuffle of target ∪
+                # batch; 'salted' batches still pre-shrink two-phase there
+                snapshot_id = self.table.merge(
+                    staged.frame,
+                    summary=summary,
+                    pre_deduped=False,
+                    dedup_strategy=staged.strategy,
+                    n_salts=self.n_salts,
+                )
+            # this commit's summary, captured BEFORE compaction/expiry —
+            # afterwards the current snapshot may be the compaction's (whose
+            # rows-written describes the rewrite, not this batch) and expiry
+            # may have dropped the batch's snapshot entirely
+            summ = self.table.summary(snapshot_id)
+            compacted = mor and self._maybe_compact()
+            if self.expire_keep is not None:
+                self.table.expire_snapshots(keep_last=self.expire_keep)
+            metrics.update(
+                snapshot_id=snapshot_id,
+                rows_written=int(summ.get("rows-written", -1)),
+                buckets_rewritten=int(summ.get("buckets-rewritten", -1)),
+                compacted=compacted,
+                dedup_used=staged.strategy if mor else f"fused-{staged.strategy}",
+                hot_key_frac_est=(
+                    None if staged.hot_est is None else round(staged.hot_est, 4)
+                ),
+                lsn_lag=hi - lo,
+            )
+        commit_s = time.perf_counter() - t0
+        dur = metrics["stage_s"] + commit_s
         metrics.update(
-            skipped=False,
-            snapshot_id=snapshot_id,
-            rows_written=int(summ.get("rows-written", -1)),
-            buckets_rewritten=int(summ.get("buckets-rewritten", -1)),
+            stage_s=round(metrics["stage_s"], 3),
+            commit_s=round(commit_s, 3),
             duration_s=dur,
-            stats_s=round(t_stats, 3),
-            merge_s=round(t_merge, 3),
-            compacted=compacted,
-            events_per_sec=n_events / dur if dur > 0 else float("inf"),
-            lsn_lag=int(hi - lo),
         )
+        if not metrics["skipped"]:
+            metrics["events_per_sec"] = (
+                metrics["events_in"] / dur if dur > 0 else float("inf")
+            )
         self._emit(metrics)
         return metrics
+
+    def apply_batch(
+        self, batch: DataFrame, source_desc: str | None = None
+    ) -> BatchMetrics:
+        """Stage then commit one micro-batch frame (the ``foreachBatch``
+        entry point; also callable directly)."""
+        return self._commit(self._stage(source_desc or "", batch))
 
     def _maybe_compact(self) -> bool:
         """MoR read-amplification bound: compact when delta rows exceed
@@ -405,53 +447,27 @@ class CdcEngine:
         """Batch replay driver: apply parquet batch dirs in order (bench mode +
         deterministic tests). Resumable: already-committed batches skip.
 
-        Batch stats (count + LSN range) come from the parquet footers —
-        driver-side metadata reads, no Spark job — halving the per-batch job
-        count vs an aggregation scan.
+        Each dir is staged, then committed (``_stage`` → ``_commit``).  Batch
+        stats (count + LSN range) come from the parquet footers — driver-side
+        metadata reads, no Spark job.
 
-        ``concurrency > 1`` (MoR tables, schema-stable feeds only): stage the
-        delta writes of several micro-batches in parallel driver threads —
-        Spark schedules their jobs concurrently, filling each other's stage
+        ``concurrency > 1`` (MoR tables, schema-stable feeds only): stage
+        several batches in parallel driver threads — Spark schedules their
+        dedup + delta-write jobs concurrently, filling each other's stage
         barriers — then commit serially in feed order.  Final state is
         identical because MoR resolution is a pure function of the delta set
         (max-LSN per key), not of commit interleaving; exactly-once is
-        enforced at the serial commit.  Falls back to the sequential path for
-        CoW tables (each batch reads the prior table state) or when a batch's
-        on-disk schema deviates from the live schema (drift must serialize)."""
+        enforced at the serial commit.  CoW tables (whose merge runs at
+        commit, after the previous one) and feeds whose on-disk schema
+        deviates from the live schema (drift must serialize) stage one batch
+        at a time."""
         if concurrency > 1 and self._can_replay_concurrently(batch_paths):
-            return self._replay_concurrent(batch_paths, concurrency)
-        out = []
-        for path in batch_paths:
-            stats = _footer_stats(path, self.table.lsn_col)
-            if stats is not None and stats[0] == 0:
-                # empty batch dir: don't read it — schema inference on an
-                # empty parquet directory throws before the skip could run
-                metrics = BatchMetrics(
-                    events_in=0, offsets_start=None, offsets_end=None,
-                    source=path, skipped=True, reason="empty", duration_s=0.0,
-                )
-                self._emit(metrics)
-                out.append(metrics)
-                continue
-            if _dir_schemas_uniform(path):
-                df = self.table.spark.read.parquet(path)
-            else:
-                # files inside one dir straddle a producer-side change
-                # (widened column / added column): single-footer inference
-                # either fails at scan time (narrow file sampled) or
-                # silently upcasts (wide file sampled), and Spark's
-                # mergeSchema refuses numeric widening across files — so
-                # read each schema-uniform file group exactly, cast up to
-                # the SAFE_PROMOTIONS union, and union the groups.  The
-                # drift resolver then promotes/adds/fails-loud on the
-                # union schema deterministically.
-                df = _read_mixed_dir(self.table.spark, path)
-            out.append(self.apply_batch(df, source_desc=path, stats=stats))
-        return out
+            with ThreadPoolExecutor(max_workers=concurrency) as pool:
+                staged = list(pool.map(self._stage, batch_paths))
+            return [self._commit(s) for s in staged]
+        return [self._commit(self._stage(path)) for path in batch_paths]
 
     def _can_replay_concurrently(self, batch_paths: list[str]) -> bool:
-        import glob as _glob
-
         import pyarrow.parquet as pq
 
         if self.table.meta.get("write_mode", "cow") != "mor":
@@ -465,15 +481,7 @@ class CdcEngine:
         # (e.g. a foreign backfill straddling a producer-side widening)
         # must serialize through the drift path, and sampling files[0]
         # would let the drifted tail bypass promote/fail-loud entirely.
-        # Footer reads are driver-side metadata (no Spark job); they
-        # release the GIL, so the sweep is thread-pooled like
-        # _footer_stats' — the gate must not add an O(total files) serial
-        # stall in front of a long resumable replay.
-        files = [
-            fp
-            for path in batch_paths
-            for fp in _glob.glob(os.path.join(path, "*.parquet"))
-        ]
+        files = [fp for path in batch_paths for fp in _parquet_files(path)]
 
         def _ok(fp: str) -> bool:
             schema = pq.read_schema(fp)
@@ -491,123 +499,7 @@ class CdcEngine:
                     return False
             return True
 
-        if not files:
-            return True
-        if len(files) == 1:
-            return _ok(files[0])
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(16, len(files))) as pool:
-            return all(pool.map(_ok, files))
-
-    def _replay_concurrent(
-        self, batch_paths: list[str], concurrency: int
-    ) -> list[BatchMetrics]:
-        from concurrent.futures import ThreadPoolExecutor
-
-        spark = self.table.spark
-        lsn_col = self.table.lsn_col
-        watermark = self.table.committed_offset_end()
-
-        def stage(path: str):
-            t0 = time.time()
-            stats = _footer_stats(path, lsn_col)
-            if stats is None:
-                # same helper as apply_batch's fallback, so both code paths
-                # record identical source.lineage.files for the same batch
-                stats = _scan_stats(spark.read.parquet(path), lsn_col)
-            n, lo, hi = stats[:3]
-            spans = stats[3] if len(stats) > 3 else {}
-            if n > 0 and hi is None:
-                raise ValueError(
-                    f"batch {path!r} has {n} rows but no non-null "
-                    f"'{lsn_col}' values — cannot order or watermark it"
-                )
-            if n == 0 or hi <= watermark:
-                return (path, n, lo, hi, spans, None, time.time() - t0)
-            batch = normalize_payload(spark.read.parquet(path))
-            strategy, _ = self._resolve_dedup_strategy(batch, n)
-            n_aligned = self.table.aligned_partitions()
-            winners = dedup_max_lsn(
-                batch,
-                key=self.table.key,
-                lsn_col=lsn_col,
-                strategy=strategy,
-                n_salts=self.n_salts,
-                n_partitions=n_aligned,
-            )
-            entries = self.table.stage_delta(
-                winners, aligned=n_aligned is not None
-            )
-            return (path, n, lo, hi, spans, entries, time.time() - t0)
-
-        with ThreadPoolExecutor(max_workers=concurrency) as pool:
-            staged = list(pool.map(stage, batch_paths))
-
-        out = []
-        for path, n, lo, hi, spans, entries, stage_s in staged:
-            t0 = time.time()
-            metrics = BatchMetrics(
-                events_in=n, offsets_start=lo, offsets_end=hi, source=path
-            )
-            if entries is None:
-                metrics.update(
-                    skipped=True,
-                    reason="empty" if n == 0 else f"offsets<=committed({watermark})",
-                    duration_s=stage_s,
-                )
-                self._emit(metrics)
-                out.append(metrics)
-                continue
-            committed = self.table.committed_offset_end()
-            if hi <= committed:  # lost a redelivery race
-                self.table.discard_staged(entries)
-                metrics.update(
-                    skipped=True,
-                    reason=f"offsets<=committed({committed})",
-                    duration_s=stage_s,
-                )
-                self._emit(metrics)
-                out.append(metrics)
-                continue
-            lineage = {
-                "source": path,
-                "start": int(lo),
-                "end": int(hi),
-                "files": spans,
-            }
-            snapshot_id = self.table.commit_delta(
-                entries,
-                summary={
-                    "offsets.start": int(lo),
-                    "offsets.end": int(hi),
-                    "source.lineage": json.dumps(lineage),
-                },
-            )
-            summ = self.table.summary(snapshot_id)  # merge's, pre-compact/expire
-            compacted = self._maybe_compact()
-            self._maybe_expire()
-            dur = stage_s + (time.time() - t0)
-            metrics.update(
-                skipped=False,
-                snapshot_id=snapshot_id,
-                rows_written=int(summ.get("rows-written", -1)),
-                buckets_rewritten=0,
-                duration_s=dur,
-                stats_s=0.0,
-                # phase attribution: stage = read+dedup+delta write (runs
-                # concurrently across batches), commit = serial LSN-ordered
-                # metadata commit + maintenance
-                stage_s=round(stage_s, 3),
-                commit_s=round(time.time() - t0, 3),
-                merge_s=dur,
-                compacted=compacted,
-                events_per_sec=n / dur if dur > 0 else float("inf"),
-                lsn_lag=int(hi - lo),
-            )
-            self._emit(metrics)
-            out.append(metrics)
-        return out
+        return all(_footer_map(_ok, files))
 
     def run_streaming(
         self,
@@ -666,37 +558,34 @@ class CdcEngine:
         return query
 
 
-def _dir_schemas_uniform(path: str) -> bool:
-    """True when every parquet file in ``path`` carries the same (name,
-    type) schema — driver-side footer reads only (parallelized like
-    ``_footer_stats``; these are the same footers the stats pass just
-    opened, so the OS page cache serves them).  Non-uniform dirs must be
-    read via ``_read_mixed_dir`` so the drift resolver sees the union
-    schema."""
-    import glob as _glob
+def _parquet_files(path: str) -> list[str]:
+    import glob
 
-    import pyarrow.parquet as pq
+    return sorted(glob.glob(os.path.join(path, "*.parquet")))
 
-    files = _glob.glob(os.path.join(path, "*.parquet"))
+
+def _footer_map(fn, files: list[str]) -> list:
+    """``fn`` over each file in a thread pool: footer reads are tiny
+    driver-side I/O and pyarrow releases the GIL, so the per-batch metadata
+    stretch doesn't grow with file count."""
     if len(files) <= 1:
-        return True
-
-    def _sig(fp: str) -> tuple:
-        return tuple((f.name, str(f.type)) for f in pq.read_schema(fp))
-
-    from concurrent.futures import ThreadPoolExecutor
-
+        return [fn(f) for f in files]
     with ThreadPoolExecutor(max_workers=min(16, len(files))) as pool:
-        sigs = list(pool.map(_sig, files))
-    return len(set(sigs)) == 1
+        return list(pool.map(fn, files))
 
 
-def _read_mixed_dir(spark, path: str) -> DataFrame:
-    """Read a batch dir whose files disagree on schema (a producer-side
-    change landed mid-batch): group files by exact RAW (name, arrow-type)
-    signature, read each group with its own schema, cast columns whose raw
-    types differ ACROSS groups up to the SAFE_PROMOTIONS union, and union
-    the groups by name (missing columns null-filled).
+def _read_batch_dir(spark, path: str) -> DataFrame:
+    """Read one replay batch dir.  When every file carries the same (name,
+    raw arrow type) schema this is a plain ``spark.read.parquet(path)``.
+
+    Files that disagree (a producer-side change landed mid-batch) can't be
+    read that way: single-footer inference either fails at scan time
+    (narrow file sampled) or silently upcasts (wide file sampled), and
+    Spark's mergeSchema refuses numeric widening across files.  So group
+    files by exact RAW signature, read each group with its own schema, cast
+    columns whose raw types differ ACROSS groups up to the SAFE_PROMOTIONS
+    union, and union the groups by name (missing columns null-filled).  The
+    drift resolver then promotes/adds/fails-loud on the union schema.
 
     Classification (``_arrow_type_str``) is only required where raw types
     actually differ: a column whose raw type is identical in every file —
@@ -704,17 +593,17 @@ def _read_mixed_dir(spark, path: str) -> DataFrame:
     column whose raw types DIFFER and include an unclassifiable one fails
     loud ('not provably identical' takes the safe path), same contract as
     the drift resolver."""
-    import glob as _glob
-
     import pyarrow.parquet as pq
 
+    files = _parquet_files(path)
     groups: dict[tuple, list[str]] = {}
     arrow_types: dict[tuple, list] = {}
-    for fp in sorted(_glob.glob(os.path.join(path, "*.parquet"))):
-        schema = pq.read_schema(fp)
+    for fp, schema in zip(files, _footer_map(pq.read_schema, files)):
         sig = tuple((f.name, str(f.type)) for f in schema)
         groups.setdefault(sig, []).append(fp)
         arrow_types[sig] = [(f.name, f.type) for f in schema]
+    if len(groups) <= 1:
+        return spark.read.parquet(path)
 
     # per-column raw variants across groups
     raw_variants: dict[str, set] = {}
@@ -754,8 +643,8 @@ def _read_mixed_dir(spark, path: str) -> DataFrame:
         union_types[name] = target
 
     parts = []
-    for sig, files in groups.items():
-        df = spark.read.parquet(*files)
+    for sig, group_files in groups.items():
+        df = spark.read.parquet(*group_files)
         for name, raw in sig:
             want = union_types.get(name)
             if want is not None and classified[(name, raw)] != want:
@@ -775,8 +664,8 @@ def _scan_stats(
     lack statistics.  Lineage keys are stable per source file across a
     restart-resumed replay (scan partition ids are not: split planning
     varies with maxPartitionBytes / cores); non-file sources yield one
-    'unpartitioned' span.  Shared by apply_batch and the concurrent stager
-    so both code paths record the SAME ``source.lineage.files`` map."""
+    'unpartitioned' span.  Labels match ``_footer_stats``' so both stats
+    paths record the SAME ``source.lineage.files`` map."""
     rows = (
         df.groupBy(F.input_file_name().alias("_src"))
         .agg(
@@ -884,11 +773,9 @@ def _footer_stats(
     the BASELINE.json north-star checkbox).
     Returns None when any file lacks column statistics (falls back to a scan).
     """
-    import glob as _glob
-
     import pyarrow.parquet as pq
 
-    files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
+    files = _parquet_files(path)
     if not files:
         return (0, None, None, {})
 
@@ -911,16 +798,7 @@ def _footer_stats(
             f_hi = st.max if f_hi is None else max(f_hi, st.max)
         return (md.num_rows, f_lo, f_hi, f_null)
 
-    # footer reads release the GIL — parallelize the per-file scan so the
-    # driver-serial stats stretch doesn't grow with file count per commit
-    if len(files) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(16, len(files))) as pool:
-            results = list(pool.map(_one, files))
-    else:
-        results = [_one(files[0])]
-
+    results = _footer_map(_one, files)
     n = 0
     n_null = 0
     lo = hi = None

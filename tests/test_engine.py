@@ -1085,3 +1085,100 @@ def test_write_change_files_rerun_and_empty_feed(spark, tmp_path, feed):
 
     empty = feed.filter("lsn < 0")
     assert write_change_files(empty, str(tmp_path / "empty"), 3) == []
+
+
+def test_every_driver_emits_one_record_shape(spark, tmp_path, feed):
+    """Sequential replay, concurrent MoR replay, availableNow streaming and a
+    direct apply_batch all go through one stage → commit pipeline, so their
+    applied records share one key set and their skipped records another;
+    every record splits its duration into stage + commit."""
+    paths = write_change_files(feed, str(tmp_path / "feed"), n_batches=2)
+    empty = tmp_path / "empty_batch"
+    empty.mkdir()
+
+    def mk(name, mode):
+        return LakeTable.create(spark, str(tmp_path / name), TABLE_SCHEMA,
+                                key=TRANSCRIPT_KEY, n_buckets=4, write_mode=mode)
+
+    by_driver = {}
+    seq = CdcEngine(mk("seq", "cow"))
+    by_driver["sequential"] = seq.replay([str(empty), *paths]) + seq.replay(paths[:1])
+
+    conc = CdcEngine(mk("conc", "mor"))
+    by_driver["concurrent"] = (
+        conc.replay(paths, concurrency=3) + conc.replay(paths, concurrency=3)
+    )
+
+    stream = CdcEngine(mk("stream", "cow"))
+    stream.run_streaming(str(tmp_path / "feed"), str(tmp_path / "ck1"),
+                         schema=CHANGE_FEED_SCHEMA)
+    # a fresh checkpoint redelivers everything: every batch skips
+    stream.run_streaming(str(tmp_path / "feed"), str(tmp_path / "ck2"),
+                         schema=CHANGE_FEED_SCHEMA)
+    by_driver["streaming"] = stream.metrics_log
+
+    direct = CdcEngine(mk("direct", "mor"))
+    batch = spark.read.parquet(paths[0])
+    by_driver["apply_batch"] = [
+        direct.apply_batch(batch, "b0"), direct.apply_batch(batch, "b0-again")
+    ]
+
+    for name, ms in by_driver.items():
+        assert {m["skipped"] for m in ms} == {False, True}, name
+    for skipped in (False, True):
+        shapes = {
+            name: {frozenset(m) for m in ms if m["skipped"] == skipped}
+            for name, ms in by_driver.items()
+        }
+        assert len(set().union(*shapes.values())) == 1, shapes
+    for name, ms in by_driver.items():
+        for m in ms:
+            assert m["stage_s"] + m["commit_s"] == pytest.approx(
+                m["duration_s"], abs=2e-3
+            ), (name, m)
+
+
+def test_stage_commit_call_pattern(spark, tmp_path, feed, monkeypatch):
+    """Each applied MoR batch (sequential or concurrent) stages one delta
+    write and makes one delta commit, never a merge; each applied CoW batch
+    makes exactly one merge.  Normalize and (MoR) dedup run once per batch
+    through the engine module's names."""
+    import magneto_matcher_spark.streaming.engine as engine_mod
+
+    calls = {}
+
+    def count(owner, attr):
+        orig = getattr(owner, attr)
+
+        def wrapper(*a, **k):
+            calls[attr] = calls.get(attr, 0) + 1
+            return orig(*a, **k)
+
+        monkeypatch.setattr(owner, attr, wrapper)
+
+    for attr in ("stage_delta", "commit_delta", "merge"):
+        count(LakeTable, attr)
+    for attr in ("normalize_payload", "dedup_max_lsn"):
+        count(engine_mod, attr)
+
+    paths = write_change_files(feed, str(tmp_path / "feed"), n_batches=3)
+    runs = [("mor", 1), ("mor", 3), ("cow", 1)]
+    for mode, concurrency in runs:
+        calls.clear()
+        table = LakeTable.create(
+            spark, str(tmp_path / f"{mode}{concurrency}"), TABLE_SCHEMA,
+            key=TRANSCRIPT_KEY, n_buckets=4, write_mode=mode,
+        )
+        metrics = CdcEngine(table).replay(paths, concurrency=concurrency)
+        n = sum(not m["skipped"] for m in metrics)
+        assert n == 3
+        mor = mode == "mor"
+        want = {
+            "stage_delta": n if mor else 0,
+            "commit_delta": n if mor else 0,
+            "merge": 0 if mor else n,
+            "normalize_payload": n,
+            "dedup_max_lsn": n if mor else 0,
+        }
+        got = {attr: calls.get(attr, 0) for attr in want}
+        assert got == want, (mode, concurrency)

@@ -700,34 +700,20 @@ def test_evolve_rejects_colliding_renames(spark, tmp_path):
         t.evolve(adds=[("n1", "string"), ("n1", "string")])  # dup adds
 
 
-def test_legacy_inline_manifest_parent_upgrades_without_data_loss(spark, tmp_path):
-    """A parent snapshot written by the pre-segment format (inline
-    ``manifest`` list) must be upgraded write-through on the next
-    segment-reusing commit — NOT silently dropped (which would orphan every
-    existing file and lose the table on the next expire)."""
+def test_pre_segment_snapshot_fails_loud(spark, tmp_path):
+    """A snapshot in the pre-segment format (inline ``manifest`` list, no
+    ``manifest_segs``) is not supported: reading it must raise, not serve
+    an empty table."""
     t = LakeTable.create(
         spark, str(tmp_path / "leg"), TABLE_SCHEMA, key=TRANSCRIPT_KEY,
         n_buckets=4, write_mode="mor",
     )
-    b1 = spark.createDataFrame(
-        [_ev(1, "I", "c1", 0, "a"), _ev(2, "I", "c2", 0, "b")], CHANGE_FEED_SCHEMA
-    )
+    b1 = spark.createDataFrame([_ev(1, "I", "c1", 0, "a")], CHANGE_FEED_SCHEMA)
     t.merge(dedup_max_lsn(b1))
-    # rewrite the snapshot as the legacy inline format
     snap = t.current_snapshot()
     snap["manifest"] = t.manifest(snap)
     del snap["manifest_segs"]
     t._write_metadata()
 
-    t2 = LakeTable.load(spark, t.root)
-    assert t2.read().count() == 2  # legacy read path works
-    b2 = spark.createDataFrame([_ev(3, "I", "c3", 0, "c")], CHANGE_FEED_SCHEMA)
-    t2.merge(dedup_max_lsn(b2))  # segment-reusing MoR commit over legacy parent
-    state = {r["conv_id"]: r["text"] for r in t2.read().collect()}
-    assert state == {"c1": "a", "c2": "b", "c3": "c"}, state
-    # evolve (another seg-reusing commit) also keeps the files
-    t2.evolve(adds=[("extra", "string")])
-    assert t2.read().count() == 3
-    # and expiry does not GC the upgraded parent's files
-    t2.expire_snapshots(keep_last=1)
-    assert t2.read().count() == 3
+    with pytest.raises(KeyError, match="manifest_segs"):
+        LakeTable.load(spark, t.root).read()
