@@ -82,17 +82,6 @@ def embed_text(
 # E2: exact brute-force cosine kNN (broadcast corpus + mapInPandas matmul)
 # --------------------------------------------------------------------------
 
-def cosine_expr(a, b):
-    """SQL-expressible cosine of two array<float/double> columns — the
-    crossJoin strategy (J3a) and the DuckDB-oracle twin of the kernel."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
-
-
 def knn_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -188,22 +177,26 @@ def simhash_buckets_udf(dim: int, n_bits: int, n_tables: int, seed: int = 42):
 
 def cosine_pairs_udf():
     """Row-wise cosine of two array<float/double> columns as ONE
-    Arrow-batched numpy kernel — the vectorized twin of :func:`cosine_expr`
-    (identical algebra: dot/(‖q‖·‖c‖), 0.0 when either norm is 0).  The
-    expression form runs as interpreted non-codegen HOFs
-    (aggregate/zip_with with lambdas) costing ~dim interpreted ops per
-    candidate pair; this crosses the Arrow boundary once per batch and does
-    the same float64 arithmetic in BLAS."""
+    Arrow-batched numpy kernel: dot/(‖q‖·‖c‖), 0.0 when either norm is 0
+    or either vector is null — the same rule as the SQL-expressible
+    ``aggregate``/``zip_with`` form, which runs as interpreted non-codegen
+    HOFs costing ~dim interpreted ops per candidate pair; this crosses the
+    Arrow boundary once per batch and does the arithmetic in BLAS.  Not
+    bit-identical to that form: it upcasts to float64 before multiplying
+    (the expression form multiplies array<float> elements in float32) and
+    sums in a different order, so scores can differ in the last bits."""
 
     @F.pandas_udf(T.DoubleType())
     def _cos(qs: pd.Series, cs: pd.Series) -> pd.Series:
-        q = np.array(qs.tolist(), dtype=np.float64)
-        c = np.array(cs.tolist(), dtype=np.float64)
-        if q.size == 0:
-            return pd.Series(np.zeros(len(qs)))
-        dot = np.einsum("ij,ij->i", q, c)
-        denom = np.linalg.norm(q, axis=1) * np.linalg.norm(c, axis=1)
-        return pd.Series(np.where(denom > 0, dot / np.where(denom > 0, denom, 1.0), 0.0))
+        out = np.zeros(len(qs))
+        ok = (qs.notna() & cs.notna()).to_numpy()
+        if ok.any():
+            q = np.array(qs[ok].tolist(), dtype=np.float64)
+            c = np.array(cs[ok].tolist(), dtype=np.float64)
+            dot = np.einsum("ij,ij->i", q, c)
+            denom = np.linalg.norm(q, axis=1) * np.linalg.norm(c, axis=1)
+            out[ok] = np.where(denom > 0, dot / np.where(denom > 0, denom, 1.0), 0.0)
+        return pd.Series(out)
 
     return _cos
 
@@ -475,7 +468,7 @@ def knn_topk_ivf(
 
 
 # --------------------------------------------------------------------------
-# E3 / E4: score normalization + threshold/top-k emit
+# E3: score normalization
 # --------------------------------------------------------------------------
 
 def normalize_scores(
@@ -487,25 +480,4 @@ def normalize_scores(
     return candidates.withColumn(
         score_col,
         F.when(mx == mn, F.lit(1.0)).otherwise((F.col(score_col) - mn) / (mx - mn)),
-    )
-
-
-def topk_threshold(
-    scored: DataFrame,
-    k: int,
-    threshold: float,
-    partition_col: str = "src_col",
-    order_col: str = "tgt_col",
-    score_col: str = "score",
-) -> DataFrame:
-    """E4/W1: per-partition top-k by score (deterministic tie-break) with a
-    floor threshold (embedding_matcher.py:94-107)."""
-    w = Window.partitionBy(partition_col).orderBy(
-        F.col(score_col).desc(), F.col(order_col)
-    )
-    return (
-        scored.filter(F.col(score_col) >= threshold)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
     )

@@ -43,76 +43,17 @@ def widen_narrow_scan(df: DataFrame) -> DataFrame:
     return df
 
 
-def tokens_expr(text: Column) -> Column:
-    """Whitespace tokenization with empty-token filtering."""
-    return F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != "")
-
-
 def token_count_rc_expr(text: Column) -> Column:
     """Whitespace token count as ONE codegen'd regexp pass —
-    ``regexp_count(text, '\\S+')`` ≡ ``size(tokens_expr(text))`` (tokens are
-    exactly the maximal non-whitespace runs), without materializing the
-    token array."""
+    ``regexp_count(text, '\\S+')`` ≡ the size of the whitespace split with
+    empty tokens filtered (tokens are exactly the maximal non-whitespace
+    runs), without materializing the token array."""
     return F.regexp_count(text, F.lit(r"\S+"))
-
-
-def token_count_expr(text: Column) -> Column:
-    """Whitespace token count."""
-    return F.size(tokens_expr(text))
-
-
-def bpe_ish_token_count_expr(text: Column) -> Column:
-    """BPE-ish token estimate: word-piece regex splits on word boundaries,
-    digits, and punctuation runs — a deterministic proxy for subword counts."""
-    pieces = F.filter(
-        F.split(text, r"(?i)(?=[^a-z0-9])|(?<=[^a-z0-9])"), lambda t: F.trim(t) != ""
-    )
-    return F.size(pieces)
-
-
-def stopword_hits_expr(
-    toks: Column, lang: str, *, lower_tokens: bool = False
-) -> Column:
-    """Count of tokens that are ``lang`` stopwords — THE stopword-hit rule,
-    defined once and shared by ``stopword_ratio_expr``,
-    ``quality_score_expr``, ``lang_score_expr`` and ``lang_id`` so a change
-    to the rule (or ``LANG_STOPWORDS``' lowering convention) cannot
-    silently diverge the quality score from its oracle.
-
-    ``lower_tokens``: lower each token before matching (for callers holding
-    an unlowered token array; equals tokenizing ``lower(text)`` because
-    whitespace is case-stable)."""
-    sw = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
-    if lower_tokens:
-        return F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
-    return F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-
-
-def stopword_ratio_expr(
-    text: Column, lang: str = "en", toks: Column | None = None
-) -> Column:
-    """``toks``: optionally a pre-projected ``tokens_expr(text)`` column
-    (NOT lowered)."""
-    if toks is None:
-        toks = tokens_expr(F.lower(text))
-        n_sw = stopword_hits_expr(toks, lang)
-    else:
-        n_sw = stopword_hits_expr(toks, lang, lower_tokens=True)
-    n = F.size(toks)
-    return F.when(n > 0, n_sw / n).otherwise(F.lit(0.0))
 
 
 def punct_ratio_expr(text: Column) -> Column:
     n_punct = F.length(F.regexp_replace(text, r"[a-zA-Z0-9\s]", ""))
     return F.when(F.length(text) > 0, n_punct / F.length(text)).otherwise(F.lit(0.0))
-
-
-def mean_word_len_expr(text: Column, toks: Column | None = None) -> Column:
-    """``toks``: optionally a pre-projected ``tokens_expr(text)`` column."""
-    if toks is None:
-        toks = tokens_expr(text)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))
 
 
 def stopword_count_rc_expr(lowered_text: Column, lang: str) -> Column:
@@ -129,7 +70,7 @@ def stopword_count_rc_expr(lowered_text: Column, lang: str) -> Column:
     return F.regexp_count(lowered_text, F.lit(pat))
 
 
-def quality_score_expr(text: Column, toks: Column | None = None) -> Column:
+def quality_score_expr(text: Column) -> Column:
     """Composite document quality in [0,1]: length band + low punctuation +
     healthy stopword ratio + sane mean word length (heuistics in the spirit of
     C4/Gopher-style quality filters, deterministic and SQL-expressible).
@@ -141,10 +82,7 @@ def quality_score_expr(text: Column, toks: Column | None = None) -> Column:
     higher-order functions (the previous shape's per-token
     ``filter``/``aggregate`` lambdas run interpreted outside whole-stage
     codegen).  Identical integer counts feed identical double arithmetic,
-    so scores are bit-equal to the array form (oracle-pinned).
-
-    ``toks`` is accepted for API compatibility and ignored — the regexp
-    form needs no shared token array."""
+    so scores are bit-equal to the array form (oracle-pinned)."""
     n = token_count_rc_expr(text)
     len_ok = F.when((n >= 5) & (n <= 5000), F.lit(1.0)).otherwise(F.lit(0.0))
     punct_ok = F.when(punct_ratio_expr(text) < 0.2, F.lit(1.0)).otherwise(F.lit(0.0))
@@ -153,11 +91,6 @@ def quality_score_expr(text: Column, toks: Column | None = None) -> Column:
     mwl = F.length(F.regexp_replace(text, r"\s", "")) / n
     mwl_ok = F.when((mwl >= 2.0) & (mwl <= 12.0), F.lit(1.0)).otherwise(F.lit(0.0))
     return (len_ok + punct_ok + sw_ok + mwl_ok) / 4.0
-
-
-def lang_score_expr(text: Column, lang: str) -> Column:
-    """Stopword-hit count for one language."""
-    return stopword_hits_expr(tokens_expr(F.lower(text)), lang)
 
 
 def lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:

@@ -13,7 +13,7 @@ Dedup strategies (all semantically identical; tests assert equality):
   partial half combines hot keys map-side BELOW the exchange; with the
   keyhash pin (``n_partitions``) the explicit repartition IS the exchange
   and both halves sit above it — one exchange of raw rows, combine after
-  the wire (the measured one-exchange tradeoff; see lake.merged_frame's
+  the wire (the measured one-exchange tradeoff; see merge_into_frame's
   plan-shape note).  This is the scale-default.
 - ``salted``  — the explicit two-phase version of ``agg`` for when the payload
   is too wide for map-side combine to help (wide rows blow the hash-agg memory
@@ -22,8 +22,7 @@ Dedup strategies (all semantically identical; tests assert equality):
   not per-salt — max is associative, so two-phase max_by is exact.
 
 At 100 TB: the batch is the small side; dedup is the only full shuffle of the
-batch and it shrinks the batch to ≤ |keys| rows *before* the MERGE join, so the
-expensive join never sees duplicate keys.
+batch and it shrinks the batch to ≤ |keys| rows *before* the MERGE aggregation.
 """
 
 from __future__ import annotations
@@ -139,80 +138,70 @@ def dedup_max_lsn(
 
 def merge_into_frame(
     target: DataFrame,
-    winners: DataFrame,
+    batch: DataFrame,
     key: list[str] | None = None,
     lsn_col: str = "lsn",
-    op_col: str = "op",
-    keep_tombstones: bool = False,
+    n_partitions: int | None = None,
 ) -> DataFrame:
-    """J6: MERGE semantics over plain DataFrames (no storage layer).
+    """J6: THE MERGE kernel — the CoW lake merge (``LakeTable.merged_frame``)
+    and :func:`apply_batch_to_frame` both run it.
 
-        MERGE INTO target t USING winners s ON <key>
+        MERGE INTO target t USING batch s ON <key>
         WHEN MATCHED AND s.op = 'D' AND s.lsn > t.lsn THEN DELETE
         WHEN MATCHED AND s.lsn > t.lsn THEN UPDATE SET *
         WHEN NOT MATCHED AND s.op != 'D' THEN INSERT *
 
-    ``target`` carries the transcripts columns + ``lsn`` (the LSN that wrote
-    each row) so replay is idempotent: a batch whose winner LSN ≤ the stored
-    LSN is a no-op.  ``winners`` must already be deduped (≤ 1 row per key).
+    as ONE aggregation: (target ∪ batch) → ``max_by(row, struct(lsn,
+    is_target))`` per key.  Both sides carry ``target``'s columns, ``op``
+    included; delete winners stay in the output as ``op='D'`` tombstones, so
+    a stale 'U' below a delete's LSN cannot resurrect the key.  The
+    ``is_target`` tiebreak keeps the stored row on an equal-LSN redelivery
+    (replay is idempotent), and the batch need not be deduped: the same
+    aggregation is the within-batch max-LSN dedup.
 
-    ``keep_tombstones=False`` (the contract path) drops deleted keys from the
-    state — correct when batches arrive in per-key LSN order (the change-feed
-    writes LSN-contiguous batches).  ``keep_tombstones=True`` retains delete
-    winners as rows with ``op='D'`` (filter them with
-    :func:`final_state_view`), which makes the merge invariant under ANY
-    partition of the event set into batches: an older 'U' arriving after the
-    delete loses the LSN comparison against the tombstone instead of
-    resurrecting the key.  This is the frame-level analog of the lake layer's
-    MoR delete deltas (sources/lake.py).
-
-    Implemented as one full-outer join on the key.  The physical scale story
-    lives in the lake layer (bucket-pruned copy-on-write, sources/lake.py);
-    this frame-level version is the semantics kernel and the Phase-1 slice.
-    """
+    ``n_partitions`` pins the exchange to ``repartition(n, *key)``, which
+    satisfies the groupBy's distribution, so a keyhash table's rewrite can
+    write ``pre_partitioned`` — ONE exchange for dedup + merge + bucket
+    layout.  Both aggregate halves then sit above that exchange (rows cross
+    the wire un-combined); measured ~1.6x faster on delta writes than
+    combining below a default exchange and shuffling again to the bucket
+    layout.  Hot-key batches route to the salted dedup first."""
     key = key or TRANSCRIPT_KEY
-    data_cols = [c for c in target.columns if c not in key]
-
-    t = target.alias("t")
-    s = winners.alias("s")
-    joined = t.join(s, on=key, how="full_outer")
-
-    s_lsn, t_lsn = F.col(f"s.{lsn_col}"), F.col(f"t.{lsn_col}")
-    s_op = F.col(f"s.{op_col}")
-    s_present = s_lsn.isNotNull()
-    t_present = t_lsn.isNotNull()
-    s_wins = s_present & (~t_present | (s_lsn > t_lsn))
-
-    picked = [
-        F.when(s_wins, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-        for c in data_cols
-    ]
-
-    if keep_tombstones:
-        t_op = F.col(f"t.{op_col}") if op_col in target.columns else F.lit("U")
-        out_cols = [*key, *picked]
-        if op_col not in data_cols:
-            out_cols.append(F.when(s_wins, s_op).otherwise(t_op).alias(op_col))
-        return joined.select(*out_cols)
-
-    # row survives unless the winning side is a delete
-    keep = F.when(s_wins, s_op != F.lit("D")).otherwise(t_present)
-    return joined.filter(keep).select(*key, *picked)
+    cols = target.columns
+    unioned = target.withColumn("_tgt", F.lit(1)).unionByName(
+        batch.select(*cols).withColumn("_tgt", F.lit(0))
+    )
+    if n_partitions is not None:
+        unioned = unioned.repartition(n_partitions, *[F.col(c) for c in key])
+    payload = F.struct(*[F.col(c) for c in cols])
+    order = F.struct(F.col(lsn_col), F.col("_tgt"))
+    return (
+        unioned.groupBy(*key)
+        .agg(F.max_by(payload, order).alias("_w"))
+        .select([F.col(f"_w.{c}").alias(c) for c in cols])
+    )
 
 
 def apply_batch_to_frame(
     target: DataFrame,
     batch: DataFrame,
     key: list[str] | None = None,
-    dedup_strategy: str = "agg",
     keep_tombstones: bool = False,
 ) -> DataFrame:
-    """Phase-1 end-to-end slice: normalize → dedup → merge; returns new state."""
-    key = key or TRANSCRIPT_KEY
-    winners = dedup_max_lsn(normalize_payload(batch), key=key, strategy=dedup_strategy)
-    return merge_into_frame(
-        target, winners, key=key, keep_tombstones=keep_tombstones
-    )
+    """Phase-1 end-to-end slice: normalize → :func:`merge_into_frame`;
+    returns the new state (an op-less ``target`` reads as all-'U').
+
+    ``keep_tombstones=False`` (the contract path: batches arrive in per-key
+    LSN order) drops deleted keys and ``op``.  ``keep_tombstones=True``
+    keeps delete winners as ``op='D'`` rows (:func:`final_state_view` hides
+    them), which makes the merge invariant under ANY partition of the event
+    set into batches."""
+    if "op" not in target.columns:
+        target = target.withColumn("op", F.lit("U"))
+    merged = merge_into_frame(target, normalize_payload(batch), key=key)
+    if keep_tombstones:
+        return merged
+    return merged.filter(F.col("op") != F.lit("D")).drop("op")
 
 
 def final_state_view(state: DataFrame) -> DataFrame:

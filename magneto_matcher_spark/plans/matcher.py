@@ -4,11 +4,14 @@ Reference lifecycle (magneto/magneto.py:189-272): clean both tables → strategy
 cascade (strsim → embedding → equal, later strategies OVERWRITE earlier scores
 for the same pair) → per-source-column top-k → optional BP / LLM rerank.
 
-Spark lifecycle: per-strategy candidate DataFrames unioned with a priority
-column; the dict-overwrite semantics become a ``row_number() over (partition
-by src_col, tgt_col order by priority desc) = 1`` dedup (J5); top-k is a
-window (W1).  The whole cascade is ONE lazy Catalyst DAG over metadata-sized
-frames — only the BP reranker's driver-side Hungarian materializes early.
+Spark lifecycle: profiling is the data-scale work and runs distributed (both
+tables in ONE fused ``profile_rows_multi`` action); the candidate cascade runs
+over |src_cols|x|tgt_cols| pairs — metadata-sized — so ``get_matches``
+computes it on the driver in numpy/Python (zero Spark jobs).  The Spark-first
+operators (``equal_candidates``, ``embedding_candidates``,
+``strsim_candidates``, J5 ``cascade_dedup`` = ``row_number() over (partition
+by src_col, tgt_col order by priority desc) = 1``, W1 ``topk_matches``) are the
+DataFrame form of the same cascade; tests pin the driver cascade to them.
 
 Default parameters mirror the reference (magneto.py:29-43):
 ``include_strsim_matches=False, include_embedding_matches=True,
@@ -30,13 +33,9 @@ from magneto_matcher_spark.functions.cleaning import (
 )
 from magneto_matcher_spark.localframe import local_df
 from magneto_matcher_spark.operators.embedding import embed_text, knn_topk
-from magneto_matcher_spark.operators.profile import (
-    profile_rows_multi,
-    profile_table,
-)
+from magneto_matcher_spark.operators.profile import profile_rows_multi
 from magneto_matcher_spark.operators.serialize import serialize_profiles
-from magneto_matcher_spark.operators.strsim import strsim_candidates
-from magneto_matcher_spark.schemas import CANDIDATES_SCHEMA, MATCHES_SCHEMA
+from magneto_matcher_spark.schemas import MATCHES_SCHEMA
 from pyspark.sql import types as _T
 
 #: get_matches' OUTPUT shape — the MATCHES columns plus the winning strategy;
@@ -62,14 +61,6 @@ DEFAULT_PARAMS = {
     "use_bp_reranker": False,
     "use_llm_reranker": False,
     "embedding_dim": 256,
-    # candidate-cascade execution: the pair space is |src_cols|x|tgt_cols| —
-    # METADATA-sized (the data-scale work is the profiling, which is always
-    # distributed).  'driver' computes the cascade in numpy/Python on the
-    # collected profiles (microseconds, zero Spark jobs); 'distributed' runs
-    # the DataFrame/pandas-UDF plan (the path for very wide tables); 'auto'
-    # picks driver below DRIVER_CASCADE_MAX_PAIRS pairs.  Both paths produce
-    # identical rows (pinned by tests/test_matching.py parity test).
-    "execution": "auto",
     # apply_strategies_in_order (reference magneto.py:168-187): an explicit
     # strategy order, e.g. ["equal", "embedding", "strsim"] — strategies run
     # in list order and LATER strategies overwrite earlier scores for the
@@ -82,10 +73,6 @@ DEFAULT_PARAMS = {
 #: default J5 priorities — the reference's fixed cascade order
 #: strsim → embedding → equal (magneto.py:237-244), later overwrites earlier
 DEFAULT_PRIORITIES = {"strsim": 1, "embedding": 2, "equal": 3}
-
-#: above this many (src, tgt) column pairs 'auto' switches to the
-#: distributed cascade (~450x450 columns; far beyond any real schema)
-DRIVER_CASCADE_MAX_PAIRS = 200_000
 
 
 def equal_candidates(
@@ -148,14 +135,14 @@ def embedding_candidates(
 
 
 # --------------------------------------------------------------------------
-# driver-local cascade (metadata-sized pair spaces; parity-pinned twins of the
-# distributed operators)
+# driver-local cascade (metadata-sized pair spaces; parity-pinned to the
+# DataFrame operators)
 # --------------------------------------------------------------------------
 
 def _clean_equal_key(name: str) -> str:
     """Python twin of equal_candidates' P11 key cleaning — Java-regex ASCII
-    whitespace + Spark trim (space-only) semantics, so driver and
-    distributed cascades agree on names containing exotic whitespace."""
+    whitespace + Spark trim (space-only) semantics, so the driver cascade
+    and equal_candidates agree on names containing exotic whitespace."""
     import re
 
     from magneto_matcher_spark.functions.cleaning import _JAVA_WS
@@ -230,7 +217,7 @@ def _embedding_pairs(
 
     def embed(rows):
         texts = [serialize_text(mode, r[1], r[3], r[10]) for r in rows]
-        # float32 first (the distributed path stores array<float>), then f64
+        # float32 first (embed_text stores array<float>), then f64
         return np.array(
             [_hashed_ngram_vector(t or "", dim) for t in texts], dtype=np.float64
         )
@@ -310,8 +297,12 @@ def get_matches(
     """Entry point 1 (§3.1): full cascade → MATCHES rows.
 
     ``profiles`` short-circuits re-profiling when the caller (e.g. the CDC
-    drift resolver) already has them.
+    drift resolver) already has them.  ``overrides`` are ``DEFAULT_PARAMS``
+    keys; any other key raises ``ValueError``.
     """
+    unknown = sorted(set(overrides) - set(DEFAULT_PARAMS))
+    if unknown:
+        raise ValueError(f"unknown get_matches parameters: {unknown}")
     params = {**DEFAULT_PARAMS, **overrides}
     spark = source_df.sparkSession
 
@@ -337,19 +328,9 @@ def get_matches(
         source_df = clean_df(source_df)
         target_df = clean_df(target_df)
 
-    n_pairs = len(source_df.columns) * len(target_df.columns)
-    execution = params["execution"]
-    if execution == "auto":
-        execution = "driver" if n_pairs <= DRIVER_CASCADE_MAX_PAIRS else "distributed"
-
-    if execution == "driver":
-        matches, src_samples = _get_matches_driver(
-            source_df, target_df, src_table, tgt_table, params, profiles
-        )
-    else:
-        matches, src_samples = _get_matches_distributed(
-            source_df, target_df, src_table, tgt_table, params, profiles
-        )
+    matches, src_samples = _get_matches_driver(
+        source_df, target_df, params, profiles
+    )
     if matches is None:
         return spark.createDataFrame([], MATCHES_OUT_SCHEMA)
 
@@ -394,9 +375,7 @@ def get_matches(
     )
 
 
-def _get_matches_driver(
-    source_df, target_df, src_table, tgt_table, params, profiles
-):
+def _get_matches_driver(source_df, target_df, params, profiles):
     """Driver-local cascade over collected profiles — zero Spark jobs for the
     candidate math; only the (distributed) profiling remains, and both
     tables profile in ONE fused ``profile_rows_multi`` action (a single
@@ -439,51 +418,6 @@ def _get_matches_driver(
         "priority int, rank int",
     )
     return matches, src_samples
-
-
-def _get_matches_distributed(
-    source_df, target_df, src_table, tgt_table, params, profiles
-):
-    """The DataFrame/pandas-UDF cascade — one lazy Catalyst DAG; the path for
-    pair spaces too wide for the driver."""
-    spark = source_df.sparkSession
-    pri = params["_priorities"]
-    parts = []
-    if params["include_strsim_matches"]:
-        parts.append(
-            strsim_candidates(spark, source_df.columns, target_df.columns,
-                              priority=pri["strsim"],
-                              flavor=params["strsim_flavor"])
-        )
-    if params["include_embedding_matches"]:
-        if profiles is not None:
-            src_prof, tgt_prof = profiles
-        else:
-            src_prof = profile_table(
-                source_df, src_table,
-                n_samples=params["sampling_size"],
-                sample_mode=params["sampling_mode"],
-            )
-            tgt_prof = profile_table(
-                target_df, tgt_table,
-                n_samples=params["sampling_size"],
-                sample_mode=params["sampling_mode"],
-            )
-        parts.append(
-            embedding_candidates(src_prof, tgt_prof, params,
-                                 priority=pri["embedding"])
-        )
-    if params["include_equal_matches"]:
-        parts.append(equal_candidates(spark, source_df.columns,
-                                      target_df.columns,
-                                      priority=pri["equal"]))
-
-    if not parts:
-        return None, None
-    candidates = parts[0]
-    for p in parts[1:]:
-        candidates = candidates.unionByName(p)
-    return topk_matches(cascade_dedup(candidates), params["topk"]), None
 
 
 def matcher_drift_resolver(batch: DataFrame, table) -> tuple[dict, list]:

@@ -663,20 +663,12 @@ class LakeTable:
         ``winners`` = the batch with ``op`` column and the current payload
         columns; ``pre_deduped=True`` promises ≤1 row per key.
         ``pre_deduped=False`` hands the raw (normalized) batch over and FUSES
-        the max-LSN dedup into the merge aggregation itself — for CoW this
-        collapses three shuffle boundaries (batch dedup, two-sided merge join)
-        into ONE partial-aggregated shuffle of target ∪ batch, and removes the
-        persist the separate-dedup path needed.  ``dedup_strategy='salted'``
-        still pre-shrinks a hot-key batch two-phase before the fused agg.
-        Semantics::
-
-            WHEN MATCHED AND s.op='D' AND s.lsn > t.lsn THEN DELETE
-            WHEN MATCHED AND s.lsn > t.lsn              THEN UPDATE SET *
-            WHEN NOT MATCHED AND s.op != 'D'            THEN INSERT *
-
-        (ties keep the target row: the fused aggregation orders by
-        ``struct(lsn, is_target)``, so equal-LSN redelivery is a no-op, same
-        as the join kernel's strict ``s.lsn > t.lsn``).
+        the max-LSN dedup into the merge aggregation itself — for CoW the
+        batch dedup and the merge are ONE shuffle of target ∪ batch.
+        ``dedup_strategy='salted'`` still pre-shrinks a hot-key batch
+        two-phase before the fused agg.  Semantics: the MERGE kernel's
+        (plans/apply.py ``merge_into_frame``; ties keep the target row, so
+        equal-LSN redelivery is a no-op).
 
         Physical plan: bucket the batch, prune the manifest to touched buckets,
         merge ONLY those buckets' rows with the batch (one hash aggregation),
@@ -747,28 +739,14 @@ class LakeTable:
         return self._commit("merge", s, new_entries=kept + new_entries)
 
     def merged_frame(self, batch: DataFrame, touched: list[int]) -> DataFrame:
-        """The CoW merge plan: MERGE as ONE aggregation, not a full-outer
-        join — (touched-bucket target ∪ batch) → max_by(payload,
-        struct(lsn, is_target)) per key.
-
-        Identical semantics to the join kernel (plans/apply.py
-        merge_into_frame): the ``is_target`` tiebreak makes equal-LSN
-        redelivery keep the target row (the join's strict ``s.lsn > t.lsn``),
-        and when the batch is raw the same aggregation IS the within-batch
-        max-LSN dedup.  Plan-shape note: with the keyhash pin below, the
-        explicit repartition IS the exchange, and the planner hoists BOTH
-        halves of the aggregate above it — rows cross the wire un-combined
-        (no map-side shrink).  That is a measured tradeoff, not an
-        accident: the alternative (combine below a default exchange, then a
-        second exchange to the bucket layout for the write) was the
-        pre-keyhash plan, and the one-exchange form beat it ~1.6x on delta
-        writes at CDC duplicate ratios; batches hot enough for reducer skew
-        auto-route to the salted strategy, which spreads each hot key over
-        n_salts reducers before the final exchange.  The target view
-        includes tombstones so a
-        stale 'U' below a delete's LSN loses the comparison instead of
-        resurrecting the key; delete winners stay in the output (op='D') for
-        the write to route into tombstone files in the same job.
+        """The CoW merge plan: the touched buckets' raw target view through
+        the one MERGE kernel (plans/apply.py ``merge_into_frame``), its
+        exchange pinned to n_buckets key-hash partitions on keyhash tables
+        so the rewrite writes pre_partitioned.  The target view includes
+        tombstones so a stale 'U' below a delete's LSN loses the comparison
+        instead of resurrecting the key; delete winners stay in the output
+        (op='D') for the write to route into tombstone files in the same
+        job.
 
         The target side is read RAW, not resolved: a pure-CoW bucket's data
         and tombstone files hold disjoint key sets (every rewrite winnows one
@@ -777,27 +755,11 @@ class LakeTable:
         the winner across {base rows, tombstone rows, batch rows} directly.
         Buckets that do carry delta files (mixed-mode tables) fall back to
         the resolved read."""
-        cols = self.column_names
-        out_cols = [*cols, "op"]
-        target = self._raw_target_view(touched)
-        unioned = target.withColumn("_tgt", F.lit(1)).unionByName(
-            batch.select(*out_cols).withColumn("_tgt", F.lit(0))
-        )
-        n_aligned = self.aligned_partitions()
-        if n_aligned is not None:
-            # pin the fused agg's exchange to n_buckets key-hash partitions:
-            # hashpartitioning(key, n) satisfies the groupBy's distribution
-            # (no second exchange appears) and the rewrite can then write
-            # pre_partitioned — ONE exchange for dedup+merge+bucket-layout
-            unioned = unioned.repartition(
-                n_aligned, *[F.col(c) for c in self.key]
-            )
-        payload = F.struct(*[F.col(c) for c in out_cols])
-        order = F.struct(F.col(self.lsn_col), F.col("_tgt"))
-        return (
-            unioned.groupBy(*self.key)
-            .agg(F.max_by(payload, order).alias("_w"))
-            .select([F.col(f"_w.{c}").alias(c) for c in out_cols])
+        from magneto_matcher_spark.plans.apply import merge_into_frame
+
+        return merge_into_frame(
+            self._raw_target_view(touched), batch, key=self.key,
+            lsn_col=self.lsn_col, n_partitions=self.aligned_partitions(),
         )
 
     def _raw_target_view(self, touched: list[int]) -> DataFrame:

@@ -126,6 +126,18 @@ def test_out_of_order_delivery_within_batch(spark, small_feed):
     assert _state_to_dict(state) == _oracle_to_dict(events)
 
 
+@pytest.mark.parametrize("keep_tombstones", [False, True])
+def test_apply_plan_is_one_aggregation_no_join(spark, small_feed, keep_tombstones):
+    """The frame-level MERGE is the kernel's union → max_by aggregation:
+    no Join anywhere in the executed plan."""
+    state = apply_batch_to_frame(_empty_target(spark), small_feed)
+    state = spark.createDataFrame(state.collect(), state.schema)
+    out = apply_batch_to_frame(state, small_feed, keep_tombstones=keep_tombstones)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan
+    assert "max_by" in plan
+
+
 def test_delete_then_reinsert_across_batches(spark):
     import datetime
 

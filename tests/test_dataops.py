@@ -22,8 +22,9 @@ from magneto_matcher_spark.operators.textops import (
     fingerprint_expr,
     lang_id,
     quality_score_expr,
-    token_count_expr,
 )
+
+from tests.conftest import token_count_expr
 
 DOCS = "/root/testdata/sf0.001/documents.parquet"
 

@@ -456,6 +456,41 @@ def test_cow_merge_equal_lsn_keeps_target(spark, table):
     assert [r["text"] for r in table.read().collect()] == ["orig"]
 
 
+def test_one_merge_kernel_call_pattern(spark, table, monkeypatch):
+    """The CoW table merge and the frame-level slice both run THE MERGE
+    kernel, plans.apply.merge_into_frame — exactly once per call."""
+    from magneto_matcher_spark.plans import apply as apply_mod
+    from magneto_matcher_spark.schemas import TRANSCRIPTS_SCHEMA
+
+    calls = []
+    kernel = apply_mod.merge_into_frame
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return kernel(*args, **kwargs)
+
+    monkeypatch.setattr(apply_mod, "merge_into_frame", counted)
+    batches = [
+        spark.createDataFrame([_ev(1, "I", "c1", 0), _ev(2, "I", "c2", 0)],
+                              CHANGE_FEED_SCHEMA),
+        spark.createDataFrame([_ev(3, "U", "c1", 0), _ev(4, "D", "c2", 0)],
+                              CHANGE_FEED_SCHEMA),
+    ]
+    for i, b in enumerate(batches, start=1):
+        table.merge(b, pre_deduped=False)
+        assert len(calls) == i
+    table.merge(dedup_max_lsn(batches[0]))
+    assert len(calls) == 3
+
+    calls.clear()
+    state = spark.createDataFrame([], TRANSCRIPTS_SCHEMA).withColumn(
+        "lsn", F.lit(None).cast("long")
+    )
+    for i, b in enumerate(batches, start=1):
+        state = apply_mod.apply_batch_to_frame(state, b)
+        assert len(calls) == i
+
+
 # ---------------- snapshot expiry + orphan GC ----------------
 
 def test_expire_snapshots_bounds_metadata_and_deletes_orphans(spark, tmp_path):

@@ -1,13 +1,14 @@
 """Matching operator library tests — SURVEY.md §2 (P/J/A/SA/W/E/R/M families),
 F4 fixture end-to-end cascade, and the full-matcher CDC drift resolver."""
 
+from functools import reduce
+
 import pytest
 from pyspark.sql import functions as F
 
 from magneto_matcher_spark.functions.cleaning import clean_df
 from magneto_matcher_spark.operators import metrics as M
 from magneto_matcher_spark.operators.embedding import (
-    cosine_expr,
     embed_text,
     knn_topk,
     knn_topk_lsh,
@@ -29,11 +30,18 @@ from magneto_matcher_spark.operators.strsim import (
     strsim_candidates,
 )
 from magneto_matcher_spark.plans.matcher import (
+    DEFAULT_PARAMS,
+    DEFAULT_PRIORITIES,
+    cascade_dedup,
+    embedding_candidates,
     equal_candidates,
     get_matches,
     matcher_drift_resolver,
+    topk_matches,
 )
 from magneto_matcher_spark.sources.fixtures import make_matching_pair
+
+from tests.conftest import cosine_expr
 
 
 @pytest.fixture(scope="module")
@@ -108,13 +116,42 @@ def test_sampling_small_column_returns_all_sorted(spark):
     assert out == ["a", "b", "c"]
 
 
-def test_driver_vs_distributed_cascade_parity(spark, pair):
-    """The driver-local cascade must reproduce the distributed DataFrame
-    cascade: identical (src, tgt, rank, strategy-priority) sets, scores equal
-    to 1e-9 (last-ULP matmul differences between the driver process and the
-    pandas-UDF worker are expected and harmless)."""
-    from magneto_matcher_spark.plans.matcher import get_matches
+def _reference_matches(spark, src, tgt, topk, order=None, **params):
+    """get_matches' cascade rebuilt from the Spark-first DataFrame operators:
+    per-strategy candidates (priority = cascade position) → J5
+    cascade_dedup → W1 topk_matches, over the same cleaned frames."""
+    params = {**DEFAULT_PARAMS, "topk": topk, **params}
+    if order:
+        pri = {st: i + 1 for i, st in enumerate(order)}
+    else:
+        pri = {st: p for st, p in DEFAULT_PRIORITIES.items()
+               if params[f"include_{st}_matches"]}
+    src, tgt = clean_df(src), clean_df(tgt)
+    parts = []
+    if "strsim" in pri:
+        parts.append(strsim_candidates(spark, src.columns, tgt.columns,
+                                       priority=pri["strsim"],
+                                       flavor=params["strsim_flavor"]))
+    if "embedding" in pri:
+        prof = [
+            profile_table(df, name, n_samples=params["sampling_size"],
+                          sample_mode=params["sampling_mode"])
+            for df, name in ((src, "source"), (tgt, "target"))
+        ]
+        parts.append(embedding_candidates(*prof, params,
+                                          priority=pri["embedding"]))
+    if "equal" in pri:
+        parts.append(equal_candidates(spark, src.columns, tgt.columns,
+                                      priority=pri["equal"]))
+    return topk_matches(cascade_dedup(reduce(lambda a, b: a.unionByName(b), parts)),
+                        topk)
 
+
+def test_driver_vs_distributed_cascade_parity(spark, pair):
+    """The driver-local cascade must reproduce the cascade built from the
+    DataFrame operators: identical (src, tgt, rank, strategy-priority) sets,
+    scores equal to 1e-9 (last-ULP matmul differences between the driver
+    process and the pandas-UDF worker are expected and harmless)."""
     src, tgt, _ = pair
 
     def norm(df):
@@ -123,19 +160,17 @@ def test_driver_vs_distributed_cascade_parity(spark, pair):
             for r in df.collect()
         )
 
-    a = norm(get_matches(src, tgt, topk=3, include_strsim_matches=True,
-                         execution="driver"))
-    b = norm(get_matches(src, tgt, topk=3, include_strsim_matches=True,
-                         execution="distributed"))
+    a = norm(get_matches(src, tgt, topk=3, include_strsim_matches=True))
+    b = norm(_reference_matches(spark, src, tgt, topk=3,
+                                include_strsim_matches=True))
     assert a == b and len(a) > 0
 
 
 def test_levenshtein_flavor_parity(spark, pair):
     """strsim_flavor='levenshtein' (the oracle-verifiable cascade behind
-    magneto_e2e_matches): driver and distributed paths must agree exactly —
-    both are integer-ratio arithmetic, so no ULP tolerance needed."""
-    from magneto_matcher_spark.plans.matcher import get_matches
-
+    magneto_e2e_matches): get_matches and the DataFrame-operator cascade must
+    agree exactly — both are integer-ratio arithmetic, so no ULP tolerance
+    needed."""
     src, tgt, _ = pair
 
     def norm(df):
@@ -144,12 +179,22 @@ def test_levenshtein_flavor_parity(spark, pair):
             for r in df.collect()
         )
 
-    kw = dict(topk=3, include_strsim_matches=True,
+    kw = dict(include_strsim_matches=True,
               include_embedding_matches=False, strsim_flavor="levenshtein")
-    a = norm(get_matches(src, tgt, execution="driver", **kw))
-    b = norm(get_matches(src, tgt, execution="distributed", **kw))
+    a = norm(get_matches(src, tgt, topk=3, **kw))
+    b = norm(_reference_matches(spark, src, tgt, topk=3, **kw))
     assert a == b and len(a) > 0
     assert all(s == "strsim" or sc == 1.0 for _, _, _, s, sc in a)
+
+
+def test_get_matches_rejects_unknown_parameters(spark, pair):
+    """A misspelled or retired override (e.g. the removed ``execution``
+    knob) must fail loudly instead of being silently ignored."""
+    src, tgt, _ = pair
+    with pytest.raises(ValueError, match="execution"):
+        get_matches(src, tgt, execution="distributed")
+    with pytest.raises(ValueError, match="top_k"):
+        get_matches(src, tgt, top_k=3)
 
 
 def test_serialize_text_twin_parity(spark, pair):
@@ -309,6 +354,28 @@ def test_cosine_expr_matches_numpy(spark):
     assert abs(got - 0.5) < 1e-9
 
 
+def test_cosine_pairs_udf_null_and_zero_vectors_score_zero(spark):
+    """cosine_pairs_udf follows the expression form's rule: a null or
+    all-zero vector scores 0.0 (a null used to crash the numpy kernel)."""
+    from magneto_matcher_spark.operators.embedding import cosine_pairs_udf
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0, 1.0], [1.0, 1.0, 0.0]),
+         (1, None, [1.0, 1.0, 0.0]),
+         (2, [1.0, 0.0, 1.0], None),
+         (3, [0.0, 0.0, 0.0], [1.0, 1.0, 0.0])],
+        "id int, a array<double>, b array<double>",
+    )
+    out = df.select(
+        "id",
+        cosine_pairs_udf()(F.col("a"), F.col("b")).alias("udf"),
+        cosine_expr(F.col("a"), F.col("b")).alias("expr"),
+    ).orderBy("id").collect()
+    assert abs(out[0]["udf"] - 0.5) < 1e-9
+    assert [r["udf"] for r in out[1:]] == [0.0, 0.0, 0.0]
+    assert [r["expr"] for r in out[1:]] == [0.0, 0.0, 0.0]
+
+
 def test_normalize_scores_minmax(spark):
     df = spark.createDataFrame(
         [("a", "x", 0.2), ("a", "y", 0.7), ("b", "z", 0.5)],
@@ -409,10 +476,10 @@ def test_strategy_order_controls_overwrite(spark):
         ("gender", "gender", "strsim")
     ]
 
-    # both cascade paths honor the order
-    dist = get_matches(src, tgt, topk=3, strategy_order=["equal", "strsim"],
-                       execution="distributed").collect()
-    assert [(r["src_col"], r["tgt_col"], r["strategy"]) for r in dist] == [
+    # the DataFrame-operator cascade honors the same order
+    ref = _reference_matches(spark, src, tgt, topk=3,
+                             order=["equal", "strsim"]).collect()
+    assert [(r["src_col"], r["tgt_col"], r["strategy"]) for r in ref] == [
         ("gender", "gender", "strsim")
     ]
 

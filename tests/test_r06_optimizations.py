@@ -74,10 +74,10 @@ def test_regexp_text_kernels_match_array_kernels(spark):
         LANG_STOPWORDS,
         quality_score_expr,
         stopword_count_rc_expr,
-        stopword_hits_expr,
         token_count_rc_expr,
-        tokens_expr,
     )
+
+    from tests.conftest import stopword_hits_expr, tokens_expr
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     edge = spark.createDataFrame(
