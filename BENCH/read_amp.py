@@ -65,7 +65,7 @@ def main():
             # depth 0: everything in one merge (then compact → pure base
             # files).  depth d: one seed merge + d incremental deltas.
             if depth == 0:
-                t.merge(feed, pre_deduped=False)
+                t.merge(feed)
                 t.compact()
                 n_deltas = 0
             else:
@@ -75,7 +75,7 @@ def main():
                         (F.col("lsn") >= lo + i * span)
                         & (F.col("lsn") < lo + (i + 1) * span)
                     )
-                    t.merge(part, pre_deduped=False)
+                    t.merge(part)
                 n_deltas = sum(
                     1 for e in t.manifest(t.current_snapshot())
                     if e.get("kind") == "delta"

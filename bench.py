@@ -180,12 +180,6 @@ def run_cdc_replay(
         # untimed warm-up: a replay big enough to drive JIT/whole-stage-codegen
         # to steady state (measured: per-batch throughput keeps rising for the
         # first ~1M processed events in a fresh JVM)
-        # files_per_bucket: sub-split bucket writes (sources/lake.py) — the
-        # knob for tables whose buckets are large; measured at THIS feed
-        # scale (50k-row final state / 32 buckets) sub-splitting only adds
-        # task+file overhead (fpb 1→4 cost ~2x on both modes), so 1 is the
-        # default. Part of the FIXED job layout across parallelism levels.
-        fpb = int(os.environ.get("SPARK_GRAFT_FPB", "1"))
         # SPARK_GRAFT_BUCKETS: table bucket count (default 32, the FIXED
         # layout of the official scaling table).  Provisioned-layout
         # supplements size it to the parallelism level instead — real
@@ -195,7 +189,7 @@ def run_cdc_replay(
         n_buckets = int(os.environ.get("SPARK_GRAFT_BUCKETS", "32"))
         warm_table = LakeTable.create(
             spark, f"{tmp}/warm_lake", schema, key=TRANSCRIPT_KEY,
-            n_buckets=n_buckets, files_per_bucket=fpb,
+            n_buckets=n_buckets,
         )
         dedup = os.environ.get("SPARK_GRAFT_DEDUP", "agg")
         CdcEngine(warm_table, dedup_strategy=dedup, n_salts=32).replay(warm_paths)
@@ -210,7 +204,6 @@ def run_cdc_replay(
             table = LakeTable.create(
                 spark, f"{tmp}/lake_{r}", schema, key=TRANSCRIPT_KEY,
                 n_buckets=n_buckets, write_mode=write_mode,
-                files_per_bucket=fpb,
             )
             engine = CdcEngine(table, dedup_strategy=dedup, n_salts=32)
             # MoR batches stage concurrently (commits stay serial, in feed

@@ -160,9 +160,9 @@ def merge_into_frame(
     aggregation is the within-batch max-LSN dedup.
 
     ``n_partitions`` pins the exchange to ``repartition(n, *key)``, which
-    satisfies the groupBy's distribution, so a keyhash table's rewrite can
-    write ``pre_partitioned`` — ONE exchange for dedup + merge + bucket
-    layout.  Both aggregate halves then sit above that exchange (rows cross
+    satisfies the groupBy's distribution, so with ``n = n_buckets`` the
+    table rewrite adds no repartition — ONE exchange for dedup + merge +
+    bucket layout.  Both aggregate halves then sit above that exchange (rows cross
     the wire un-combined); measured ~1.6x faster on delta writes than
     combining below a default exchange and shuffling again to the bucket
     layout.  Hot-key batches route to the salted dedup first."""

@@ -14,7 +14,7 @@ catalog plugs in unchanged:
   new one.  Old data files are never rewritten: the read path maps each file
   group's columns to the current schema by field ID and fills missing fields
   with typed nulls.
-- **partition spec** — ``bucket(conv_id, N)`` via ``pmod(xxhash64(conv_id), N)``.
+- **partition spec** — ``keyhash(key, N)`` via ``pmod(hash(*key), N)``.
   MERGE prunes to the buckets the batch touches and rewrites only those
   (bucket-pruned copy-on-write emulating merge-on-read equality-delete
   visibility: a key matched by the batch is invisible in the old file because
@@ -44,6 +44,7 @@ import json
 import os
 import time
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,12 +84,6 @@ def _str_to_type(s: str) -> T.DataType:
     return T._parse_datatype_string(s)  # noqa: SLF001
 
 
-def bucket_expr(col: str, n_buckets: int) -> F.Column:
-    """Stable bucket transform: pmod(xxhash64(col), n). Deterministic across
-    sessions and partitionings."""
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
-
-
 def bucket_expr_keyhash(cols: list[str], n_buckets: int) -> F.Column:
     """Shuffle-ALIGNED bucket transform: ``pmod(hash(*key), n)``.
 
@@ -125,19 +120,11 @@ class LakeTable:
         schema: T.StructType,
         key: list[str],
         n_buckets: int = 16,
-        bucket_col: str | None = None,
         lsn_col: str = "lsn",
         write_mode: str = "cow",
-        files_per_bucket: int = 1,
-        bucket_transform: str = "keyhash",
     ) -> "LakeTable":
         if write_mode not in ("cow", "mor"):
             raise ValueError(f"write_mode must be 'cow' or 'mor', got {write_mode!r}")
-        if bucket_transform not in ("bucket", "keyhash"):
-            raise ValueError(
-                f"bucket_transform must be 'bucket' or 'keyhash', "
-                f"got {bucket_transform!r}"
-            )
         os.makedirs(os.path.join(root, "metadata"), exist_ok=True)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         fields = [
@@ -151,21 +138,12 @@ class LakeTable:
             "last_field_id": len(fields),
             "schemas": [{"schema_id": 0, "fields": fields}],
             "current_schema_id": 0,
-            # "keyhash" (default): bucket = pmod(murmur3(*key), n) — the
-            # shuffle-aligned transform (see bucket_expr_keyhash) enabling
-            # one-exchange merges.  "bucket": pmod(xxhash64(source_col), n)
-            # — the classic single-column transform, co-locating e.g. a
-            # whole conversation per bucket; kept for tables that prune by
-            # that column alone.  An explicit bucket_col implies "bucket".
-            "partition_spec": {
-                "transform": "bucket" if bucket_col else bucket_transform,
-                "source": bucket_col or key[0],
-                "n_buckets": n_buckets,
-            },
+            # bucket = pmod(murmur3(*key), n): the shuffle-aligned transform
+            # (see bucket_expr_keyhash) enabling one-exchange merges
+            "partition_spec": {"transform": "keyhash", "n_buckets": n_buckets},
             "key": key,
             "lsn_column": lsn_col,
             "write_mode": write_mode,
-            "files_per_bucket": max(1, int(files_per_bucket)),
             "snapshots": [],
             "current_snapshot_id": None,
         }
@@ -180,11 +158,13 @@ class LakeTable:
             version = int(fh.read().strip())
         with open(os.path.join(root, "metadata", f"v{version}.json")) as fh:
             meta = json.load(fh)
+        transform = meta["partition_spec"]["transform"]
+        if transform != "keyhash":
+            raise ValueError(
+                f"unsupported partition transform {transform!r} in {root!r}: "
+                f"only 'keyhash' tables can be read"
+            )
         return cls(spark, root, meta)
-
-    @classmethod
-    def exists(cls, root: str) -> bool:
-        return os.path.exists(os.path.join(root, "metadata", "version-hint.text"))
 
     def _write_metadata(self) -> None:
         version = self.meta["version"]
@@ -235,10 +215,6 @@ class LakeTable:
     @property
     def n_buckets(self) -> int:
         return self.meta["partition_spec"]["n_buckets"]
-
-    @property
-    def bucket_source(self) -> str:
-        return self.meta["partition_spec"]["source"]
 
     # ---------------- snapshots ----------------
 
@@ -305,21 +281,17 @@ class LakeTable:
 
     # ---------------- read path ----------------
 
+    def _snapshot_view(self, snapshot_id: int | None) -> tuple[dict | None, int]:
+        """(snapshot, schema id to read it under): the current snapshot under
+        the current schema, or a historical one under its own."""
+        if snapshot_id is None:
+            return self.current_snapshot(), self.meta["current_schema_id"]
+        snap = self._snapshot_by_id(snapshot_id)
+        return snap, snap["schema_id"]
+
     def read(self, snapshot_id: int | None = None) -> DataFrame:
-        snap = (
-            self.current_snapshot()
-            if snapshot_id is None
-            else self._snapshot_by_id(snapshot_id)
-        )
-        read_schema_id = (
-            self.meta["current_schema_id"] if snapshot_id is None else snap["schema_id"]
-        )
-        entries = self.manifest(snap)
-        if not entries:
-            return self.spark.createDataFrame(
-                [], self._schema_for(read_schema_id)
-            )
-        return self._resolve(entries, read_schema_id)
+        snap, read_schema_id = self._snapshot_view(snapshot_id)
+        return self._resolve(self.manifest(snap), read_schema_id)
 
     def _resolve(
         self,
@@ -333,68 +305,63 @@ class LakeTable:
         semantics; deltas are whole-row upsert/delete records keyed by the
         table key + LSN).
 
-        Bucket-pruned: both sides are bucketed by the same
-        ``pmod(xxhash64(key))``, so a bucket with NO delta files needs no
-        dedup at all — those buckets are plain-scanned and unioned with the
-        resolved dirty buckets.  At 100 TB this makes a read O(touched
-        buckets), not O(table).  Pure-CoW manifests (no deltas) short-circuit
-        to a plain scan entirely.
+        Bucket-pruned: only buckets holding delta files are deduplicated;
+        every other bucket is scanned raw (data files as ``op='U'``) and
+        unioned with the resolved ones.  At 100 TB this makes a read
+        O(touched buckets), not O(table).  The raw scan is exact because
+        every rewrite (CoW merge, compaction) writes a bucket's data and
+        tombstone files from one set of winners, so their keys are disjoint.
 
-        ``kind='tombstone'`` entries are compaction-retained delete winners
-        (see :meth:`compact`): they only matter against OTHER deltas (a stale
-        pre-watermark 'U' redelivered after compaction must lose the LSN
-        comparison instead of resurrecting the key), never against data files
-        — so buckets whose only non-data entries are tombstones stay on the
-        plain-scan path.
+        ``kind='tombstone'`` entries are retained delete winners (see
+        :meth:`compact`): they only matter against OTHER rows of their key (a
+        stale pre-watermark 'U' redelivered later must lose the LSN
+        comparison instead of resurrecting the key), so plain reads of
+        delta-free buckets skip them.
 
         ``keep_tombstones=True`` returns every winner including deletes, with
-        the ``op`` column (compaction's input)."""
-        data = [e for e in manifest if e.get("kind", "data") == "data"]
-        deltas = [e for e in manifest if e.get("kind", "data") == "delta"]
-        tombs = [e for e in manifest if e.get("kind", "data") == "tombstone"]
-
+        the ``op`` column (the CoW merge target and compaction's input).
+        ``n_partitions`` pins both the dedup and the raw part to
+        ``repartition(n_partitions, *key)`` — compaction's aligned rewrite;
+        plain reads leave it None (dedup parallelism should track
+        shuffle.partitions, not bucket count)."""
+        dirty = {e["bucket"] for e in manifest if e["kind"] == "delta"}
+        clean = [e for e in manifest if e["bucket"] not in dirty]
         empty = self.spark.createDataFrame([], self._schema_for(read_schema_id))
-        if not deltas and not (keep_tombstones and tombs):
+        parts: list[DataFrame] = []
+        data = [e for e in clean if e["kind"] == "data"]
+        if data:
+            base = self._read_manifest(data, read_schema_id)
+            parts.append(base.withColumn("op", F.lit("U")) if keep_tombstones else base)
+        tombs = [e for e in clean if e["kind"] == "tombstone"]
+        if keep_tombstones and tombs:
+            parts.append(self._read_manifest(tombs, read_schema_id, extra_cols=("op",)))
+        if parts and n_partitions is not None:
+            raw = reduce(DataFrame.unionByName, parts)
+            parts = [raw.repartition(n_partitions, *self.key)]
+
+        if dirty:
+            from magneto_matcher_spark.plans.apply import dedup_max_lsn
+
+            sub = [e for e in manifest if e["bucket"] in dirty]
+            data = [e for e in sub if e["kind"] == "data"]
+            overlay = [e for e in sub if e["kind"] == "delta"] + [
+                e for e in sub if e["kind"] == "tombstone"
+            ]
             base = self._read_manifest(data, read_schema_id) if data else empty
-            if keep_tombstones:
-                base = base.withColumn("op", F.lit("U"))
-            return base
-
-        from magneto_matcher_spark.plans.apply import dedup_max_lsn
-
-        dirty_buckets = {e["bucket"] for e in deltas}
-        if keep_tombstones:
-            dirty_buckets |= {e["bucket"] for e in tombs}
-        clean_data = [e for e in data if e["bucket"] not in dirty_buckets]
-        dirty_data = [e for e in data if e["bucket"] in dirty_buckets]
-        dirty_tombs = [e for e in tombs if e["bucket"] in dirty_buckets]
-
-        dirty_base = (
-            self._read_manifest(dirty_data, read_schema_id) if dirty_data else empty
-        )
-        union = dirty_base.withColumn("op", F.lit("U"))
-        overlay = deltas + dirty_tombs
-        if overlay:
-            union = union.unionByName(
-                self._read_manifest(overlay, read_schema_id, extra_cols=("op",))
+            winners = dedup_max_lsn(
+                base.withColumn("op", F.lit("U")).unionByName(
+                    self._read_manifest(overlay, read_schema_id, extra_cols=("op",))
+                ),
+                key=self.key, lsn_col=self.lsn_col, strategy="agg",
+                n_partitions=n_partitions,
             )
-        # n_partitions: compact() pins the resolution's exchange to
-        # n_buckets on keyhash tables so its rewrites skip their own
-        # repartition; plain reads leave it None (dedup parallelism should
-        # track shuffle.partitions, not bucket count)
-        winners = dedup_max_lsn(
-            union, key=self.key, lsn_col=self.lsn_col, strategy="agg",
-            n_partitions=n_partitions,
-        )
-        if not keep_tombstones:
-            winners = winners.filter(F.col("op") != F.lit("D")).drop("op")
+            if not keep_tombstones:
+                winners = winners.filter(F.col("op") != F.lit("D")).drop("op")
+            parts.append(winners)
 
-        clean = self._read_manifest(clean_data, read_schema_id) if clean_data else None
-        if clean is None:
-            return winners
-        if keep_tombstones:
-            clean = clean.withColumn("op", F.lit("U"))
-        return clean.unionByName(winners)
+        if not parts:
+            return empty.withColumn("op", F.lit("U")) if keep_tombstones else empty
+        return reduce(DataFrame.unionByName, parts)
 
     def _schema_for(self, schema_id: int) -> T.StructType:
         return T.StructType(
@@ -436,10 +403,7 @@ class LakeTable:
                     )
             cols += [F.col(c) for c in extra_cols]
             parts.append(df.select(*cols))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(DataFrame.unionByName, parts)
 
     def read_buckets(
         self,
@@ -448,21 +412,11 @@ class LakeTable:
         keep_tombstones: bool = False,
     ) -> DataFrame:
         """Bucket-pruned scan: only files whose partition bucket ∈ ``buckets``.
-        ``keep_tombstones=True`` resolves delete winners as rows with ``op``
-        (the MERGE target view — tombstones must out-LSN stale redeliveries)."""
-        snap = (
-            self.current_snapshot()
-            if snapshot_id is None
-            else self._snapshot_by_id(snapshot_id)
-        )
-        read_schema_id = (
-            self.meta["current_schema_id"] if snapshot_id is None else snap["schema_id"]
-        )
+        ``keep_tombstones=True`` keeps delete winners as rows with ``op`` (the
+        MERGE target view — tombstones must out-LSN stale redeliveries)."""
+        snap, read_schema_id = self._snapshot_view(snapshot_id)
         wanted = set(buckets)
         manifest = [e for e in self.manifest(snap) if e["bucket"] in wanted]
-        if not manifest:
-            empty = self.spark.createDataFrame([], self._schema_for(read_schema_id))
-            return empty.withColumn("op", F.lit("U")) if keep_tombstones else empty
         return self._resolve(manifest, read_schema_id, keep_tombstones=keep_tombstones)
 
     # ---------------- write path ----------------
@@ -473,11 +427,17 @@ class LakeTable:
         dirname: str,
         kind: str = "data",
         split_tombstones_on: str | None = None,
-        pre_partitioned: bool = False,
     ) -> list[dict]:
         """Write ``df`` (current schema + ``_bucket``) partitioned by bucket
         under ``data/{dirname}/``; return manifest entries.  ``kind='delta'``
         marks merge-on-read change files (payload + ``op``).
+
+        Contract: ``df``'s last exchange is ``repartition(n_buckets, *key)``,
+        so every task already holds exactly one bucket's rows
+        (:func:`bucket_expr_keyhash`) and the write adds no shuffle of its
+        own — one file per bucket.  ``partitionBy`` routes rows by value, so
+        a caller that breaks the contract stays correct (more files per
+        bucket).
 
         ``split_tombstones_on='op'``: ONE write job routes delete winners
         (op='D') into ``kind='tombstone'`` files and everything else into
@@ -486,50 +446,20 @@ class LakeTable:
         that data files carry the (constant-'U', dictionary-encoded) op
         column readers never select — accepted deliberately: splitting into
         two writes to drop one ~zero-entropy column would double the job
-        count on the hottest path.
-
-        Parallelism: repartitioning on ``_bucket`` alone caps the write at
-        ≤ n_buckets non-empty tasks (fewer after hash collisions) no matter
-        how many cores exist — so rows can be sub-split inside each bucket by
-        a key hash (``files_per_bucket`` files per bucket, deterministic), the
-        same trick the feed generator uses (sources/changefeed.py:155-159).
-        Bucket membership is untouched; readers see k files per bucket.
-        (Measured: sub-splitting only pays off when a bucket's rewrite is big
-        enough to dwarf task/file overhead — keep files_per_bucket=1 unless
-        buckets are large.)"""
+        count on the hottest path."""
         out_dir = os.path.join(self.root, "data", dirname)
-        t0 = time.time()
         part_cols = ["_bucket"]
         if split_tombstones_on is not None:
             df = df.withColumn(
                 "_tomb", (F.col(split_tombstones_on) == F.lit("D")).cast("int")
             )
             part_cols = ["_tomb", "_bucket"]
-        fpb = int(self.meta.get("files_per_bucket", 1))
-        if pre_partitioned and fpb == 1:
-            # keyhash alignment contract (bucket_expr_keyhash): the caller's
-            # last exchange already partitions by key hash with a multiple
-            # of n_buckets partitions, so every task holds one bucket's rows
-            # — the bucket repartition would be a pure extra shuffle.
-            # partitionBy routes rows by VALUE, so even an unaligned caller
-            # stays correct (just more files per bucket).
-            shaped = df
-        elif fpb > 1:
-            sub = F.pmod(
-                F.xxhash64(*[F.col(c) for c in self.key]), F.lit(fpb)
-            ).cast("int")
-            shaped = df.repartition(self.n_buckets * fpb, F.col("_bucket"), sub)
-        else:
-            shaped = df.repartition(self.n_buckets, F.col("_bucket"))
         (
-            shaped
-            .sortWithinPartitions(*self.key)  # W7: file-level determinism
+            df.sortWithinPartitions(*self.key)  # W7: file-level determinism
             .write.partitionBy(*part_cols)
             .mode("overwrite")
             .parquet(out_dir)
         )
-        t_write = time.time() - t0
-        t0 = time.time()
         import pyarrow.parquet as pq
         from concurrent.futures import ThreadPoolExecutor
 
@@ -560,31 +490,10 @@ class LakeTable:
                     "kind": file_kind,
                 }
             )
-        # perf introspection for the bench (not part of the table format)
-        self.last_write_timings = {
-            "write_job_s": round(t_write, 3),
-            "manifest_scan_s": round(time.time() - t0, 3),
-        }
         return entries
 
     def _with_bucket(self, df: DataFrame) -> DataFrame:
-        spec = self.meta["partition_spec"]
-        if spec.get("transform") == "keyhash":
-            return df.withColumn(
-                "_bucket", bucket_expr_keyhash(self.key, self.n_buckets)
-            )
-        return df.withColumn(
-            "_bucket", bucket_expr(self.bucket_source, self.n_buckets)
-        )
-
-    def aligned_partitions(self) -> int | None:
-        """n_buckets when this table's bucket transform is shuffle-aligned
-        ("keyhash"), else None.  Callers that pin their last exchange to
-        ``repartition(aligned_partitions(), *key)`` may write with
-        ``pre_partitioned=True`` and skip the bucket repartition entirely."""
-        if self.meta["partition_spec"].get("transform") == "keyhash":
-            return self.n_buckets
-        return None
+        return df.withColumn("_bucket", bucket_expr_keyhash(self.key, self.n_buckets))
 
     def _next_snapshot_id(self) -> int:
         # monotonic across expire_snapshots: never re-issue an expired id
@@ -641,8 +550,10 @@ class LakeTable:
     def append(self, df: DataFrame, summary: dict | None = None) -> int:
         """Append rows (no key dedup). df must carry the current columns."""
         snapshot_id = self._next_snapshot_id()
-        aligned = df.select(*self.column_names)
-        new_entries = self._write_data_files(self._with_bucket(aligned), f"snap-{snapshot_id}")
+        shaped = df.select(*self.column_names).repartition(self.n_buckets, *self.key)
+        new_entries = self._write_data_files(
+            self._with_bucket(shaped), f"snap-{snapshot_id}"
+        )
         cur = self.current_snapshot()
         s = {"rows-appended": sum(e["rows"] for e in new_entries)}
         s.update(summary or {})
@@ -652,19 +563,17 @@ class LakeTable:
 
     def merge(
         self,
-        winners: DataFrame,
+        batch: DataFrame,
         summary: dict | None = None,
-        pre_deduped: bool = True,
         dedup_strategy: str = "agg",
         n_salts: int = 32,
     ) -> int:
         """J6: key-partition-pruned MERGE (SURVEY §2.3).
 
-        ``winners`` = the batch with ``op`` column and the current payload
-        columns; ``pre_deduped=True`` promises ≤1 row per key.
-        ``pre_deduped=False`` hands the raw (normalized) batch over and FUSES
-        the max-LSN dedup into the merge aggregation itself — for CoW the
-        batch dedup and the merge are ONE shuffle of target ∪ batch.
+        ``batch`` = the raw (normalized) change events: ``op`` column plus the
+        current payload columns, any number of rows per key.  For CoW the
+        max-LSN dedup is FUSED into the merge aggregation itself — the batch
+        dedup and the merge are ONE shuffle of target ∪ batch;
         ``dedup_strategy='salted'`` still pre-shrinks a hot-key batch
         two-phase before the fused agg.  Semantics: the MERGE kernel's
         (plans/apply.py ``merge_into_frame``; ties keep the target row, so
@@ -680,34 +589,33 @@ class LakeTable:
           target ∪ batch, then rewrite the touched buckets.  Read is a plain
           scan.  Right when batches are small relative to buckets or reads
           dominate.
-        - ``mor`` — merge-on-read: :meth:`stage_delta` then
-          :meth:`commit_delta` — append the winners (with ``op``) as
-          bucketed DELTA files, no join, no rewrite — O(batch) per merge
-          regardless of table size.  Reads resolve base ∪ deltas via
-          max-LSN dedup; ``compact()`` folds deltas back into data files.
-          Right for high-frequency ingest at 100 TB, where CoW would rewrite
-          the table every micro-batch.
+        - ``mor`` — merge-on-read: max-LSN dedup pinned to the bucket
+          layout, :meth:`stage_delta`, then :meth:`commit_delta` — append
+          the winners (with ``op``) as bucketed DELTA files, no join, no
+          rewrite — O(batch) per merge regardless of table size.  Reads
+          resolve base ∪ deltas via max-LSN dedup; ``compact()`` folds deltas
+          back into data files.  Right for high-frequency ingest at 100 TB,
+          where CoW would rewrite the table every micro-batch.
         """
         from magneto_matcher_spark.plans.apply import dedup_max_lsn
 
-        is_mor = self.meta.get("write_mode", "cow") == "mor"
-        if not pre_deduped and (is_mor or dedup_strategy == "salted"):
+        is_mor = self.meta["write_mode"] == "mor"
+        if is_mor or dedup_strategy == "salted":
             # MoR delta files stay ≤1 row/key (read-amplification bound);
             # a hot-key CoW batch pre-shrinks two-phase before the fused agg.
-            # Keyhash MoR tables pin the dedup's final exchange to n_buckets
-            # partitions so the delta write can reuse it (ONE exchange).
-            winners = dedup_max_lsn(
-                winners, key=self.key, lsn_col=self.lsn_col,
+            # MoR pins the dedup's final exchange to n_buckets partitions so
+            # the delta write reuses it (ONE exchange).
+            batch = dedup_max_lsn(
+                batch, key=self.key, lsn_col=self.lsn_col,
                 strategy=dedup_strategy, n_salts=n_salts,
-                n_partitions=self.aligned_partitions() if is_mor else None,
+                n_partitions=self.n_buckets if is_mor else None,
             )
         if is_mor:
-            entries = self.stage_delta(winners, aligned=not pre_deduped)
-            return self.commit_delta(entries, summary)
+            return self.commit_delta(self.stage_delta(batch), summary)
 
         snapshot_id = self._next_snapshot_id()
         cols = self.column_names
-        batch = self._with_bucket(winners.select(*cols, "op"))
+        batch = self._with_bucket(batch.select(*cols, "op"))
         touched = [
             r["_bucket"] for r in batch.select("_bucket").distinct().collect()
         ]
@@ -720,9 +628,6 @@ class LakeTable:
             self._with_bucket(merged.select(*cols, "op")),
             f"snap-{snapshot_id}",
             split_tombstones_on="op",
-            # keyhash: merged_frame pinned its one fused-agg exchange to
-            # n_buckets partitions on the key — already bucket-laid-out
-            pre_partitioned=self.aligned_partitions() is not None,
         )
         data_rows = sum(e["rows"] for e in new_entries if e["kind"] == "data")
         tomb_rows = sum(e["rows"] for e in new_entries if e["kind"] == "tombstone")
@@ -739,58 +644,27 @@ class LakeTable:
         return self._commit("merge", s, new_entries=kept + new_entries)
 
     def merged_frame(self, batch: DataFrame, touched: list[int]) -> DataFrame:
-        """The CoW merge plan: the touched buckets' raw target view through
-        the one MERGE kernel (plans/apply.py ``merge_into_frame``), its
-        exchange pinned to n_buckets key-hash partitions on keyhash tables
-        so the rewrite writes pre_partitioned.  The target view includes
-        tombstones so a stale 'U' below a delete's LSN loses the comparison
-        instead of resurrecting the key; delete winners stay in the output
-        (op='D') for the write to route into tombstone files in the same
-        job.
+        """The CoW merge plan: the touched buckets' target view through the
+        one MERGE kernel (plans/apply.py ``merge_into_frame``), its exchange
+        pinned to n_buckets key-hash partitions so the rewrite needs no
+        repartition.  The target view includes tombstones so a stale 'U'
+        below a delete's LSN loses the comparison instead of resurrecting the
+        key; delete winners stay in the output (op='D') for the write to
+        route into tombstone files in the same job.
 
-        The target side is read RAW, not resolved: a pure-CoW bucket's data
-        and tombstone files hold disjoint key sets (every rewrite winnows one
-        winner per key and routes it by op), so pre-resolving them would be a
-        no-op costing an extra aggregation shuffle — the one fused agg picks
-        the winner across {base rows, tombstone rows, batch rows} directly.
-        Buckets that do carry delta files (mixed-mode tables) fall back to
-        the resolved read."""
+        On a pure-CoW table the target view is a raw scan (see
+        :meth:`_resolve`: no delta files, nothing to deduplicate), so the one
+        fused agg picks the winner across {base rows, tombstone rows, batch
+        rows} directly; buckets that carry delta files (mixed-mode tables)
+        are resolved first."""
         from magneto_matcher_spark.plans.apply import merge_into_frame
 
         return merge_into_frame(
-            self._raw_target_view(touched), batch, key=self.key,
-            lsn_col=self.lsn_col, n_partitions=self.aligned_partitions(),
+            self.read_buckets(touched, keep_tombstones=True), batch, key=self.key,
+            lsn_col=self.lsn_col, n_partitions=self.n_buckets,
         )
 
-    def _raw_target_view(self, touched: list[int]) -> DataFrame:
-        """Touched-bucket rows for the merge aggregation, WITHOUT resolution:
-        data files as op='U', tombstone files with their op column, no dedup
-        (pure-CoW buckets are already ≤1 row per key across both kinds).
-        Falls back to the resolved read when deltas are present."""
-        snap = self.current_snapshot()
-        wanted = set(touched)
-        manifest = [e for e in self.manifest(snap) if e["bucket"] in wanted]
-        if any(e.get("kind", "data") == "delta" for e in manifest):
-            return self.read_buckets(touched, keep_tombstones=True)
-        schema_id = self.meta["current_schema_id"]
-        data = [e for e in manifest if e.get("kind", "data") == "data"]
-        tombs = [e for e in manifest if e.get("kind", "data") == "tombstone"]
-        parts: list[DataFrame] = []
-        if data:
-            parts.append(
-                self._read_manifest(data, schema_id).withColumn("op", F.lit("U"))
-            )
-        if tombs:
-            parts.append(self._read_manifest(tombs, schema_id, extra_cols=("op",)))
-        if not parts:
-            empty = self.spark.createDataFrame([], self._schema_for(schema_id))
-            return empty.withColumn("op", F.lit("U"))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def stage_delta(self, winners: DataFrame, aligned: bool = False) -> list[dict]:
+    def stage_delta(self, winners: DataFrame) -> list[dict]:
         """Write a batch's MoR delta files WITHOUT committing; returns the
         manifest entries for :meth:`commit_delta`.
 
@@ -799,15 +673,14 @@ class LakeTable:
         stage in parallel threads while commits stay serialized in LSN order
         (the engine's exactly-once contract).  Requires a schema-stable
         window: callers must resolve drift before staging (the engine
-        serializes on drift).  ``aligned``: the caller's promise that
-        ``winners``' last exchange is ``repartition(aligned_partitions(),
-        *key)``, so the write skips its bucket repartition."""
-        if self.meta.get("write_mode", "cow") != "mor":
+        serializes on drift).  ``winners`` holds ≤1 row per key and its last
+        exchange is ``repartition(n_buckets, *key)`` — ``dedup_max_lsn(...,
+        n_partitions=n_buckets)`` — so the write adds no shuffle."""
+        if self.meta["write_mode"] != "mor":
             raise ValueError("stage_delta requires write_mode='mor'")
         batch = self._with_bucket(winners.select(*self.column_names, "op"))
         return self._write_data_files(
-            batch, f"delta-stage-{uuid.uuid4().hex[:12]}", kind="delta",
-            pre_partitioned=aligned and self.aligned_partitions() is not None,
+            batch, f"delta-stage-{uuid.uuid4().hex[:12]}", kind="delta"
         )
 
     def commit_delta(self, entries: list[dict], summary: dict | None = None) -> int:
@@ -858,8 +731,8 @@ class LakeTable:
         snapshot_id = self._next_snapshot_id()
         cur = self.current_snapshot()
         manifest = self.manifest(cur)
-        folded = [e for e in manifest if e.get("kind", "data") != "data"]
-        has_deltas = any(e.get("kind", "data") == "delta" for e in folded)
+        folded = [e for e in manifest if e["kind"] != "data"]
+        has_deltas = any(e["kind"] == "delta" for e in folded)
         # tombstone-only manifests are already plain-scan fast; rewriting them
         # is only worth it when a GC horizon lets us actually drop tombstones
         if not has_deltas and not (folded and tombstone_retention_lsn is not None):
@@ -874,29 +747,22 @@ class LakeTable:
         # CoW merge's kept entries — maintenance cost is O(dirty buckets),
         # not O(table), which is what keeps auto-compaction bounded inside a
         # long ingest loop.
-        dirty = {
-            e["bucket"] for e in manifest if e.get("kind", "data") == "delta"
-        }
+        dirty = {e["bucket"] for e in manifest if e["kind"] == "delta"}
         if tombstone_retention_lsn is not None:
-            dirty |= {
-                e["bucket"] for e in manifest
-                if e.get("kind", "data") == "tombstone"
-            }
+            dirty |= {e["bucket"] for e in manifest if e["kind"] == "tombstone"}
         kept = [e for e in manifest if e["bucket"] not in dirty]
         sub = [e for e in manifest if e["bucket"] in dirty]
 
-        # keyhash: pin the resolution's dedup exchange to n_buckets so both
-        # rewrites below reuse it as the bucket layout (zero repartitions)
-        n_aligned = self.aligned_partitions()
+        # pin the resolution's exchange to n_buckets so both rewrites below
+        # reuse it as the bucket layout (zero repartitions)
         winners = self._resolve(
             sub, self.meta["current_schema_id"], keep_tombstones=True,
-            n_partitions=n_aligned,
+            n_partitions=self.n_buckets,
         ).persist()
         try:
             live = winners.filter(F.col("op") != F.lit("D")).select(*self.column_names)
             new_entries = self._write_data_files(
-                self._with_bucket(live), f"snap-{snapshot_id}",
-                pre_partitioned=n_aligned is not None,
+                self._with_bucket(live), f"snap-{snapshot_id}"
             )
             tombs = winners.filter(F.col("op") == F.lit("D"))
             if tombstone_retention_lsn is not None:
@@ -905,13 +771,12 @@ class LakeTable:
                 self._with_bucket(tombs.select(*self.column_names, "op")),
                 f"tomb-{snapshot_id}",
                 kind="tombstone",
-                pre_partitioned=n_aligned is not None,
             )
         finally:
             winners.unpersist()
         s = {
             "rows-written": sum(e["rows"] for e in new_entries),
-            "deltas-folded": len([e for e in sub if e.get("kind", "data") == "delta"]),
+            "deltas-folded": len([e for e in sub if e["kind"] == "delta"]),
             "buckets-compacted": len(dirty),
             "files-kept": len(kept),
             "tombstones-retained": sum(e["rows"] for e in tomb_entries),
@@ -923,12 +788,10 @@ class LakeTable:
 
     # ---------------- maintenance: snapshot expiry + orphan GC ----------------
 
-    def expire_snapshots(
-        self, keep_last: int = 1, delete_orphans: bool = True
-    ) -> dict:
+    def expire_snapshots(self, keep_last: int = 1) -> dict:
         """Iceberg ``expire_snapshots`` analog: drop all but the newest
-        ``keep_last`` snapshots from the log; optionally delete data files
-        and manifest segments referenced ONLY by expired snapshots.
+        ``keep_last`` snapshots from the log, then delete data files and
+        manifest segments referenced ONLY by expired snapshots.
 
         At 10^10-event scale the snapshot log grows by one entry per
         micro-batch — unbounded metadata and unbounded delta/tombstone file
@@ -978,52 +841,48 @@ class LakeTable:
         self._write_metadata()
 
         n_files = n_segs = 0
-        if delete_orphans:
-            emptied: set[str] = set()
-            for rel in dead_files:
-                p = os.path.join(self.root, rel)
-                if os.path.exists(p):
-                    os.remove(p)
-                    n_files += 1
-                    emptied.add(os.path.dirname(p))
-            for rel in dead_segs:
-                p = os.path.join(self.root, rel)
-                if os.path.exists(p):
-                    os.remove(p)
-                    n_segs += 1
-                self._seg_cache.pop(rel, None)
-            # prune dirs the deletions emptied (plus their write markers):
-            # each commit leaves data/<snap>/_bucket=N/ trees and _SUCCESS
-            # files behind — without this, directory/inode count grows
-            # O(commits), the exact footprint this method exists to bound.
-            # Walk upward while dirs stay empty, stopping at the table root.
-            root_real = os.path.realpath(self.root)
-            for d in sorted(emptied, key=len, reverse=True):
-                while os.path.realpath(d) != root_real and os.path.isdir(d):
-                    left = os.listdir(d)
-                    markers = [
-                        f for f in left
-                        if f == "_SUCCESS" or f.startswith(".")
-                    ]
-                    if len(markers) != len(left):
-                        break  # dir still holds live content
-                    for f in markers:
-                        os.remove(os.path.join(d, f))
-                    os.rmdir(d)
-                    d = os.path.dirname(d)
-            # superseded metadata versions: every commit leaves a v{n}.json
-            # behind — same O(commits) footprint.  The current version
-            # (just written, referenced by version-hint) is kept.
-            meta_dir = os.path.join(self.root, "metadata")
-            cur_v = self.meta["version"]
-            for fname in os.listdir(meta_dir):
-                if fname.startswith("v") and fname.endswith(".json"):
-                    try:
-                        v = int(fname[1:-5])
-                    except ValueError:
-                        continue
-                    if v < cur_v:
-                        os.remove(os.path.join(meta_dir, fname))
+        emptied: set[str] = set()
+        for rel in dead_files:
+            p = os.path.join(self.root, rel)
+            if os.path.exists(p):
+                os.remove(p)
+                n_files += 1
+                emptied.add(os.path.dirname(p))
+        for rel in dead_segs:
+            p = os.path.join(self.root, rel)
+            if os.path.exists(p):
+                os.remove(p)
+                n_segs += 1
+            self._seg_cache.pop(rel, None)
+        # prune dirs the deletions emptied (plus their write markers):
+        # each commit leaves data/<snap>/_bucket=N/ trees and _SUCCESS
+        # files behind — without this, directory/inode count grows
+        # O(commits), the exact footprint this method exists to bound.
+        # Walk upward while dirs stay empty, stopping at the table root.
+        root_real = os.path.realpath(self.root)
+        for d in sorted(emptied, key=len, reverse=True):
+            while os.path.realpath(d) != root_real and os.path.isdir(d):
+                left = os.listdir(d)
+                markers = [f for f in left if f == "_SUCCESS" or f.startswith(".")]
+                if len(markers) != len(left):
+                    break  # dir still holds live content
+                for f in markers:
+                    os.remove(os.path.join(d, f))
+                os.rmdir(d)
+                d = os.path.dirname(d)
+        # superseded metadata versions: every commit leaves a v{n}.json
+        # behind — same O(commits) footprint.  The current version
+        # (just written, referenced by version-hint) is kept.
+        meta_dir = os.path.join(self.root, "metadata")
+        cur_v = self.meta["version"]
+        for fname in os.listdir(meta_dir):
+            if fname.startswith("v") and fname.endswith(".json"):
+                try:
+                    v = int(fname[1:-5])
+                except ValueError:
+                    continue
+                if v < cur_v:
+                    os.remove(os.path.join(meta_dir, fname))
         return {
             "snapshots_removed": len(expired),
             "files_deleted": n_files,
@@ -1046,15 +905,14 @@ class LakeTable:
         the narrow physical type and are cast up at read).  No data rewrite
         (Iceberg evolve semantics).
 
-        Promotion of key, LSN, or bucket-source columns is REFUSED: unlike
-        Iceberg's spec bucket transform (which hashes int as long precisely
-        so promotion can't move rows), this table's transforms use Spark's
-        ``F.hash``/``xxhash64``, whose int32 and int64 hashes differ —
-        promoting such a column would silently re-bucket every existing
-        row.  RENAMING them is fine (same field ID, same data): the table's
-        name-keyed metadata (``key``, ``lsn_column``,
-        ``partition_spec.source``) follows the rename.  ``promotes`` keys
-        refer to post-rename names."""
+        Promotion of key or LSN columns is REFUSED: unlike Iceberg's spec
+        bucket transform (which hashes int as long precisely so promotion
+        can't move rows), this table's transform uses Spark's ``F.hash``,
+        whose int32 and int64 hashes differ — promoting a key column would
+        silently re-bucket every existing row (the LSN is protected as the
+        ordering column).  RENAMING them is fine (same field ID, same data):
+        the table's name-keyed metadata (``key``, ``lsn_column``) follows the
+        rename.  ``promotes`` keys refer to post-rename names."""
         renames = renames or {}
         adds = adds or []
         promotes = promotes or {}
@@ -1081,20 +939,7 @@ class LakeTable:
         ]
         if promotes:
             by_name = {f["name"]: f for f in new_fields}
-            # the bucket-source column is protected for the same reason as
-            # the key: xxhash64/F.hash are not width-stable, so promoting
-            # the column a 'bucket'-transform table partitions on would
-            # silently re-bucket every existing row
-            protected = (
-                set(renames.get(k, k) for k in self.key)
-                | {renames.get(self.lsn_col, self.lsn_col)}
-                | {
-                    renames.get(
-                        self.meta["partition_spec"]["source"],
-                        self.meta["partition_spec"]["source"],
-                    )
-                }
-            )
+            protected = {renames.get(c, c) for c in [*self.key, self.lsn_col]}
             promotes = dict(promotes)  # canonicalized in place for the summary
             for name, new_type in promotes.items():
                 f = by_name.get(name)
@@ -1102,9 +947,8 @@ class LakeTable:
                     raise KeyError(f"promote target {name!r} not in schema")
                 if name in protected:
                     raise ValueError(
-                        f"cannot promote key/LSN/bucket-source column "
-                        f"{name!r}: the bucket transforms are not "
-                        f"width-stable (see evolve docs)"
+                        f"cannot promote key/LSN column {name!r}: the bucket "
+                        f"transform is not width-stable (see evolve docs)"
                     )
                 # canonicalize to simpleString ("long" and "bigint" both OK in)
                 new_type_c = _type_to_str(_str_to_type(new_type))
@@ -1125,17 +969,15 @@ class LakeTable:
         self.meta["schemas"].append({"schema_id": new_schema_id, "fields": new_fields})
         self.meta["current_schema_id"] = new_schema_id
         self.meta["last_field_id"] = last_id
-        # renaming a key / LSN / bucket-source column is legal (same field
-        # ID, same data) — but every piece of table metadata that refers to
-        # the column BY NAME must follow the rename, or the next merge/read
-        # groupBys a name that no longer exists and the table is bricked
+        # renaming a key / LSN column is legal (same field ID, same data) —
+        # but every piece of table metadata that refers to the column BY
+        # NAME must follow the rename, or the next merge/read groupBys a
+        # name that no longer exists and the table is bricked
         if renames:
             self.meta["key"] = [renames.get(k, k) for k in self.meta["key"]]
             self.meta["lsn_column"] = renames.get(
                 self.meta["lsn_column"], self.meta["lsn_column"]
             )
-            spec = self.meta["partition_spec"]
-            spec["source"] = renames.get(spec["source"], spec["source"])
 
         cur = self.current_snapshot()
         s = {

@@ -308,23 +308,20 @@ class CdcEngine:
             staged.strategy, staged.hot_est = self._resolve_dedup_strategy(
                 batch, n_events
             )
-            if self.table.meta.get("write_mode", "cow") == "mor":
+            if self.table.meta["write_mode"] == "mor":
                 # MoR consumes winners exactly once (the delta write) — dedup
-                # up front so delta files stay ≤1 row/key.  On keyhash tables
-                # the dedup's final exchange is pinned to n_buckets
-                # partitions so the delta write reuses it (one exchange).
-                n_aligned = self.table.aligned_partitions()
+                # up front so delta files stay ≤1 row/key.  The dedup's final
+                # exchange is pinned to n_buckets partitions so the delta
+                # write reuses it (one exchange).
                 winners = dedup_max_lsn(
                     batch,
                     key=self.table.key,
                     lsn_col=lsn_col,
                     strategy=staged.strategy,
                     n_salts=self.n_salts,
-                    n_partitions=n_aligned,
+                    n_partitions=self.table.n_buckets,
                 )
-                staged.entries = self.table.stage_delta(
-                    winners, aligned=n_aligned is not None
-                )
+                staged.entries = self.table.stage_delta(winners)
             else:
                 staged.frame = batch
         metrics["stage_s"] = time.perf_counter() - t0
@@ -366,7 +363,6 @@ class CdcEngine:
                 snapshot_id = self.table.merge(
                     staged.frame,
                     summary=summary,
-                    pre_deduped=False,
                     dedup_strategy=staged.strategy,
                     n_salts=self.n_salts,
                 )
@@ -420,12 +416,8 @@ class CdcEngine:
         if not snap:
             return False
         entries = self.table.manifest(snap)
-        delta_rows = sum(
-            e["rows"] for e in entries if e.get("kind", "data") == "delta"
-        )
-        data_rows = sum(
-            e["rows"] for e in entries if e.get("kind", "data") == "data"
-        )
+        delta_rows = sum(e["rows"] for e in entries if e["kind"] == "delta")
+        data_rows = sum(e["rows"] for e in entries if e["kind"] == "data")
         if delta_rows == 0:
             return False
         if data_rows > 0 and delta_rows < self.auto_compact_ratio * data_rows:
@@ -470,7 +462,7 @@ class CdcEngine:
     def _can_replay_concurrently(self, batch_paths: list[str]) -> bool:
         import pyarrow.parquet as pq
 
-        if self.table.meta.get("write_mode", "cow") != "mor":
+        if self.table.meta["write_mode"] != "mor":
             return False
         expect_names = set(self.table.column_names) | _SYSTEM_COLS
         expect_types = {

@@ -991,8 +991,9 @@ def test_auto_expire_bounds_snapshot_log(spark, tmp_path, feed):
 def test_spark_submit_py_files_entrypoint(tmp_path):
     """North rule: the engine runs via ``spark-submit --py-files`` with every
     import resolved from the shipped zip (no repo path on the workers).
-    Builds BENCH/engine.zip fresh, submits BENCH/submit_job.py in a separate
-    JVM, and checks the final throughput JSON line."""
+    Builds the engine zip fresh into ``tmp_path`` (BENCH/make_zip.py),
+    submits BENCH/submit_job.py in a separate JVM, and checks the final
+    throughput JSON line."""
     import json
     import os
     import shutil
@@ -1003,15 +1004,16 @@ def test_spark_submit_py_files_entrypoint(tmp_path):
     if not os.path.exists(spark_submit):
         pytest.skip("spark-submit not available")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    engine_zip = str(tmp_path / "engine.zip")
     subprocess.run(
-        [sys.executable, os.path.join(repo, "BENCH", "make_zip.py")],
+        [sys.executable, os.path.join(repo, "BENCH", "make_zip.py"), engine_zip],
         check=True, capture_output=True,
     )
     out = subprocess.run(
         [
             spark_submit, "--master", "local[4]",
             "--conf", "spark.ui.enabled=false",
-            "--py-files", os.path.join(repo, "BENCH", "engine.zip"),
+            "--py-files", engine_zip,
             os.path.join(repo, "BENCH", "submit_job.py"),
             "20000", "2", str(tmp_path / "work"),
         ],

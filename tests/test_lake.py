@@ -1,6 +1,9 @@
 """Iceberg-semantics lake layer tests (SURVEY.md §7 Phase 2)."""
 
 import datetime
+import json
+import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -8,7 +11,7 @@ from pyspark.sql import types as T
 
 from magneto_matcher_spark.plans.apply import dedup_max_lsn
 from magneto_matcher_spark.schemas import CHANGE_FEED_SCHEMA, TRANSCRIPT_KEY
-from magneto_matcher_spark.sources.lake import LakeTable, bucket_expr
+from magneto_matcher_spark.sources.lake import LakeTable, bucket_expr_keyhash
 
 TABLE_SCHEMA = T.StructType([f for f in CHANGE_FEED_SCHEMA.fields if f.name != "op"])
 
@@ -233,8 +236,9 @@ def test_keyhash_alignment_partition_equals_bucket(spark):
 
 def test_bucket_expr_deterministic(spark):
     df = spark.range(100).select(F.format_string("c%d", F.col("id")).alias("conv_id"))
-    a = df.select(bucket_expr("conv_id", 8).alias("b")).collect()
-    b = df.repartition(7).select(bucket_expr("conv_id", 8).alias("b")).collect()
+    bucket = bucket_expr_keyhash(["conv_id"], 8).alias("b")
+    a = df.select(bucket).collect()
+    b = df.repartition(7).select(bucket).collect()
     assert sorted(r["b"] for r in a) == sorted(r["b"] for r in b)
 
 
@@ -382,23 +386,6 @@ def test_compact_restores_plain_scan_reads(spark, mor_table):
     assert after == before and after[("conv0", 0)] == "t4"
 
 
-def test_files_per_bucket_subsplit(spark, tmp_path):
-    t = LakeTable.create(
-        spark, str(tmp_path / "fpb"), TABLE_SCHEMA, key=TRANSCRIPT_KEY,
-        n_buckets=2, files_per_bucket=4,
-    )
-    df = spark.createDataFrame(
-        [_ev(i, "I", f"conv{i}", i % 5) for i in range(200)], CHANGE_FEED_SCHEMA
-    )
-    t.merge(dedup_max_lsn(df))
-    manifest = t.manifest(t.current_snapshot())
-    by_bucket: dict = {}
-    for e in manifest:
-        by_bucket.setdefault(e["bucket"], []).append(e)
-    assert all(len(v) > 1 for v in by_bucket.values())  # sub-split took effect
-    assert t.read().count() == 200
-
-
 def test_mor_time_travel_resolves_historic_deltas(spark, mor_table):
     b1 = spark.createDataFrame([_ev(1, "I", "c1", 0, "a")], CHANGE_FEED_SCHEMA)
     s1 = mor_table.merge(dedup_max_lsn(b1))
@@ -426,7 +413,7 @@ def test_cow_fused_merge_plan_single_exchange(spark, table):
         [_ev(1, "I", "c1", 0), _ev(2, "I", "c2", 0), _ev(3, "D", "c2", 0)],
         CHANGE_FEED_SCHEMA,
     )
-    table.merge(b1, pre_deduped=False)
+    table.merge(b1)
     assert any(e.get("kind") == "tombstone"
                for e in table.manifest(table.current_snapshot()))
 
@@ -439,7 +426,7 @@ def test_cow_fused_merge_plan_single_exchange(spark, table):
     assert plan.count("Exchange") == 1  # the key agg shuffle, nothing else
     assert "Join" not in plan
 
-    table.merge(b2, pre_deduped=False)
+    table.merge(b2)
     state = {(r["conv_id"], r["turn_idx"]): r["text"] for r in table.read().collect()}
     assert state == {("c1", 0): "new", ("c2", 0): "back"}
 
@@ -448,11 +435,11 @@ def test_cow_merge_equal_lsn_keeps_target(spark, table):
     """Fused-agg tiebreak parity with the join kernel's strict s.lsn > t.lsn:
     an equal-LSN redelivery must NOT overwrite the stored row."""
     b1 = spark.createDataFrame([_ev(7, "I", "c1", 0, "orig")], CHANGE_FEED_SCHEMA)
-    table.merge(b1, pre_deduped=False)
+    table.merge(b1)
     redelivery = spark.createDataFrame(
         [_ev(7, "U", "c1", 0, "tampered")], CHANGE_FEED_SCHEMA
     )
-    table.merge(redelivery, pre_deduped=False)
+    table.merge(redelivery)
     assert [r["text"] for r in table.read().collect()] == ["orig"]
 
 
@@ -477,7 +464,7 @@ def test_one_merge_kernel_call_pattern(spark, table, monkeypatch):
                               CHANGE_FEED_SCHEMA),
     ]
     for i, b in enumerate(batches, start=1):
-        table.merge(b, pre_deduped=False)
+        table.merge(b)
         assert len(calls) == i
     table.merge(dedup_max_lsn(batches[0]))
     assert len(calls) == 3
@@ -651,7 +638,7 @@ def test_compact_is_partial_only_dirty_buckets(spark, tmp_path):
 
 def test_evolve_key_rename_tracks_metadata(spark, table):
     """Renaming a key/LSN column must update the table's name-keyed
-    metadata (key, lsn_column, partition_spec.source) — the old behavior
+    metadata (key, lsn_column) — the old behavior
     left them stale and bricked every subsequent merge/read."""
     b1 = spark.createDataFrame(
         [_ev(1, "I", "c1", 0, "a"), _ev(2, "I", "c2", 0, "b")], CHANGE_FEED_SCHEMA
@@ -660,7 +647,6 @@ def test_evolve_key_rename_tracks_metadata(spark, table):
     table.evolve(renames={"conv_id": "conversation_id", "lsn": "log_seq"})
     assert table.key == ["conversation_id", "turn_idx"]
     assert table.lsn_col == "log_seq"
-    assert table.meta["partition_spec"]["source"] == "conversation_id"
     # the table still merges and reads after the rename
     b2 = spark.createDataFrame(
         [_ev(3, "U", "c1", 0, "a2")], CHANGE_FEED_SCHEMA
@@ -678,25 +664,6 @@ def test_evolve_key_rename_tracks_metadata(spark, table):
     # promotion of the renamed key is still refused under its new name
     with pytest.raises(ValueError, match="conversation_id"):
         table.evolve(promotes={"conversation_id": "long"})
-
-
-def test_evolve_bucket_source_promotion_refused(spark, tmp_path):
-    """A 'bucket'-transform table's source column is protected from
-    promotion even when it is not part of the key — xxhash64 is not
-    width-stable, so widening it would silently re-bucket every row."""
-    schema = T.StructType(
-        [
-            T.StructField("k", T.StringType()),
-            T.StructField("seq", T.LongType()),
-            T.StructField("user_id", T.IntegerType()),
-        ]
-    )
-    t = LakeTable.create(
-        spark, str(tmp_path / "bsrc"), schema, key=["k"], lsn_col="seq",
-        n_buckets=4, bucket_col="user_id",
-    )
-    with pytest.raises(ValueError, match="user_id"):
-        t.evolve(promotes={"user_id": "long"})
 
 
 def test_expire_prunes_emptied_dirs(spark, tmp_path):
@@ -752,3 +719,63 @@ def test_pre_segment_snapshot_fails_loud(spark, tmp_path):
 
     with pytest.raises(KeyError, match="manifest_segs"):
         LakeTable.load(spark, t.root).read()
+
+
+def test_load_rejects_non_keyhash_transform(spark, tmp_path, table):
+    """Tables laid out by any transform other than keyhash (e.g. a
+    single-column ``bucket`` transform) must fail loudly at load, not be
+    read or merged under the wrong bucket function."""
+    meta_path = os.path.join(table.root, "metadata", f"v{table.meta['version']}.json")
+    with open(meta_path) as fh:
+        meta = json.load(fh)
+    meta["partition_spec"] = {"transform": "bucket", "n_buckets": 4}
+    with open(meta_path, "w") as fh:
+        json.dump(meta, fh)
+    with pytest.raises(ValueError, match="'bucket'"):
+        LakeTable.load(spark, table.root)
+
+
+def test_every_write_path_writes_one_file_per_bucket_and_kind(spark, tmp_path):
+    """Every write path hands the file writer a frame whose last exchange is
+    ``repartition(n_buckets, *key)``, so each (bucket, kind) it writes gets
+    exactly one file; a path that lost that exchange would spread a bucket's
+    rows over several tasks, hence several files."""
+    inserts = [_ev(i, "I", f"conv{i}", i % 3) for i in range(1, 41)]
+    dups = [_ev(50 + i, "U", f"conv{i}", i % 3, "u") for i in range(1, 41, 2)]
+    deletes = [_ev(100 + i, "D", f"conv{i}", i % 3) for i in range(1, 41, 4)]
+
+    def frame(rows):
+        return spark.createDataFrame(rows, CHANGE_FEED_SCHEMA).repartition(3)
+
+    def written(t, write):
+        before = {e["path"] for e in t.manifest(t.current_snapshot())}
+        write()
+        return Counter(
+            (e["bucket"], e["kind"])
+            for e in t.manifest(t.current_snapshot()) if e["path"] not in before
+        )
+
+    def one_per(counts, kinds):
+        assert set(counts.values()) == {1}, counts
+        assert {k for _, k in counts} == kinds, counts
+        assert {b for b, _ in counts} == set(range(4)), counts
+
+    cow = LakeTable.create(
+        spark, str(tmp_path / "cow"), TABLE_SCHEMA, key=TRANSCRIPT_KEY, n_buckets=4
+    )
+    one_per(written(cow, lambda: cow.append(frame(inserts).drop("op"))), {"data"})
+    one_per(
+        written(cow, lambda: cow.merge(frame(dups + deletes))), {"data", "tombstone"}
+    )
+
+    mor = LakeTable.create(
+        spark, str(tmp_path / "mor"), TABLE_SCHEMA, key=TRANSCRIPT_KEY,
+        n_buckets=4, write_mode="mor",
+    )
+    one_per(written(mor, lambda: mor.merge(frame(inserts + dups))), {"delta"})
+    staged = mor.stage_delta(
+        dedup_max_lsn(frame(dups + deletes), n_partitions=mor.n_buckets)
+    )
+    one_per(Counter((e["bucket"], e["kind"]) for e in staged), {"delta"})
+    mor.commit_delta(staged)
+    one_per(written(mor, mor.compact), {"data", "tombstone"})

@@ -124,10 +124,9 @@ def test_contract_mode_contiguous_batches(spark, events, seed, n_batches):
 )
 @given(events=_events, write_mode=st.sampled_from(["cow", "mor"]))
 def test_bucket_transform_equivalence(spark, events, write_mode):
-    """The bucket transform is LAYOUT, not semantics: replaying the same
-    feed into a 'keyhash' table (one-exchange aligned writes) and a classic
-    'bucket' (xxhash64 single-column) table must produce identical resolved
-    final states, for both write modes."""
+    """The bucket transform is LAYOUT, not semantics: replaying a feed into a
+    keyhash table (one-exchange aligned writes) must produce the sequential
+    oracle's resolved final state, for both write modes."""
     import tempfile
     import shutil
 
@@ -143,23 +142,16 @@ def test_bucket_transform_equivalence(spark, events, write_mode):
     )
     tmp = tempfile.mkdtemp(prefix="transform_eq_")
     try:
-        states = {}
-        for transform in ("keyhash", "bucket"):
-            t = LakeTable.create(
-                spark, f"{tmp}/{transform}_{write_mode}", schema,
-                key=TRANSCRIPT_KEY, n_buckets=4, write_mode=write_mode,
-                bucket_transform=transform,
-            )
-            batch = spark.createDataFrame(rows, batch_schema)
-            t.merge(batch, pre_deduped=False)
-            states[transform] = {
-                (r["conv_id"], r["turn_idx"]): (r["text"], r["lsn"])
-                for r in t.read().collect()
-            }
-        assert states["keyhash"] == states["bucket"]
-        assert states["keyhash"] == {
-            k: v for k, v in _oracle(rows).items()
+        t = LakeTable.create(
+            spark, f"{tmp}/keyhash_{write_mode}", schema,
+            key=TRANSCRIPT_KEY, n_buckets=4, write_mode=write_mode,
+        )
+        t.merge(spark.createDataFrame(rows, batch_schema))
+        state = {
+            (r["conv_id"], r["turn_idx"]): (r["text"], r["lsn"])
+            for r in t.read().collect()
         }
+        assert state == _oracle(rows)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -7,16 +7,20 @@ Covered here (beyond the full-oracle gate, which hash-checks the query
 surface): the numpy SimHash signature kernel vs the 64-aggregate reference
 formulation, the in-array pair expansion vs a self-join, the regexp_count
 text kernels vs the split-array kernels, the fused mixed-mode profiler vs
-the legacy two-consumer shape, and the dedup_embedding_both fixture
-assumption (r05 ADVICE #2)."""
+the legacy two-consumer shape, the dedup_embedding_both fixture
+assumption (r05 ADVICE #2), and cdc_replay_final_state's lsn-based delete
+filter (r06 ADVICE #5)."""
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
+SF001_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
 
 
 def test_simhash_signatures_match_aggregate_formulation(spark):
@@ -223,3 +227,22 @@ def test_embeddings_fixture_has_no_nontwin_high_cosine_pairs(spark):
     sims = (m / norms) @ (m / norms).T
     np.fill_diagonal(sims, 0.0)
     assert sims.max() < 0.99, f"fixture has a non-twin pair at {sims.max():.6f}"
+
+
+def test_cdc_replay_final_state_equals_op_filtered_dedup(spark):
+    """r06 ADVICE #5: cdc_replay_final_state drops delete winners by
+    ``lsn % 10 != 0``, relying on _events_feed deriving op='D' from exactly
+    that rule.  Pin it to the stated semantics (max-LSN winner per key,
+    ``op='D'`` winners vanish) so a change to the feed's op rule fails here
+    instead of silently diverging."""
+    from magneto_matcher_spark.plans.apply import dedup_max_lsn
+    from magneto_matcher_spark.queries import _events_feed, cdc_replay_final_state
+
+    cols = ["user_id", "event_type", "lsn", "value"]
+    winners = dedup_max_lsn(
+        _events_feed(spark, SF001_DIR), key=["user_id", "event_type"]
+    )
+    assert winners.filter(F.col("op") == "D").count() > 0  # the filter bites
+    want = winners.filter(F.col("op") != "D").select(*cols).collect()
+    got = cdc_replay_final_state(spark, SF001_DIR).select(*cols).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
