@@ -13,10 +13,13 @@ when available.
 
 E2 (cosine top-k): the reference does ``normalize → matmul → topk`` on torch
 tensors (utils/embedding_utils.py:4-16).  Spark-first shape: broadcast the
-smaller matrix as numpy, ``mapInPandas`` over the larger side computes the
-block matmul and per-row top-k — each row sees the whole broadcast corpus, so
-the result is EXACT brute-force kNN, distributed over the big side with zero
-shuffle (the only shuffle is the optional final ordering).
+smaller matrix as numpy, ``mapInPandas`` over the larger side scores each
+batch against it and keeps the per-row top-k — each row sees the whole
+broadcast corpus, so the result is EXACT brute-force kNN, distributed over
+the big side with zero shuffle.  Every path scores with one kernel
+(``l2_normalize`` → ``dot_rows``/``fixed_dot`` → ``topk_rows``), a
+fixed-order BLAS-free float64 dot product: scores, ranks and IVF cells are
+bit-identical on every host, whatever GEMM kernel OpenBLAS would pick.
 
 At 100 TB scale the corpus no longer fits a broadcast; two approximate
 paths shuffle both sides once on a locality key instead: ``knn_topk_lsh``
@@ -43,24 +46,84 @@ DEFAULT_DIM = 256
 
 
 # --------------------------------------------------------------------------
+# the similarity kernel: one normalize, one dot product, one top-k
+# --------------------------------------------------------------------------
+
+#: ``fixed_dot`` adds products left to right within blocks of this many
+#: elements, then adds the block sums left to right
+_DOT_BLOCK = 128
+
+
+def fixed_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Sum of ``a * b`` over the last axis (leading axes broadcast) in one
+    fixed order: products left to right within blocks of ``_DOT_BLOCK``,
+    then the block sums left to right.  Only elementwise float64 ``*``/``+``,
+    never BLAS, whose summation order depends on the CPU kernel OpenBLAS
+    picks at run time.  Loops over the summed axis, so no n_q × n_c × dim
+    tensor is built; each step reads one contiguous row of each side."""
+    a_t = np.ascontiguousarray(np.moveaxis(np.asarray(a, np.float64), -1, 0))
+    b_t = np.ascontiguousarray(np.moveaxis(np.asarray(b, np.float64), -1, 0))
+    if len(a_t) != len(b_t):
+        raise ValueError(f"fixed_dot: summed axes differ ({len(a_t)} vs {len(b_t)})")
+    shape = np.broadcast_shapes(a_t.shape[1:], b_t.shape[1:])
+    total, prod = np.zeros(shape), np.empty(shape)
+    for lo in range(0, len(a_t), _DOT_BLOCK):
+        block = np.zeros(shape)
+        for j in range(lo, min(lo + _DOT_BLOCK, len(a_t))):
+            block += np.multiply(a_t[j], b_t[j], out=prod)
+        total += block
+    return total
+
+
+def dot_rows(q: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """``q @ c.T`` — (n_q, n_c) — summed by ``fixed_dot``."""
+    return fixed_dot(q[:, None, :], c[None, :, :])
+
+
+def l2_normalize(m: np.ndarray) -> np.ndarray:
+    """Rows of ``m`` (or the vector ``m``) scaled to unit L2 norm; zero rows
+    stay zero.  ``axis=-1`` keeps ``np.linalg.norm`` elementwise (without an
+    axis, a vector's norm is a BLAS ``ddot``)."""
+    norms = np.linalg.norm(m, axis=-1, keepdims=True)
+    norms[norms == 0] = 1.0
+    return m / norms
+
+
+def topk_rows(sims: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
+    """Per row of ``sims`` (n, n_c), the column indices of the top ``k``
+    scores in (−score, id) order, ``ids`` labelling the columns.  Every
+    column tied with the k-th score stays a candidate until the lexsort, so
+    the id rule decides the k-th place too."""
+    kk = min(k, sims.shape[1])
+    out = np.empty((len(sims), kk), dtype=np.intp)
+    if kk == 0:
+        return out
+    kth = -np.partition(-sims, kk - 1, axis=1)[:, kk - 1]
+    for r in range(len(sims)):
+        cand = np.flatnonzero(sims[r] >= kth[r])
+        out[r] = cand[np.lexsort((ids[cand], -sims[r, cand]))[:kk]]
+    return out
+
+
+# --------------------------------------------------------------------------
 # E1: deterministic hashed n-gram embedding provider
 # --------------------------------------------------------------------------
 
-def _hashed_ngram_vector(text: str, dim: int, n_lo: int = 3, n_hi: int = 8) -> np.ndarray:
+#: the char n-gram lengths hashed into the E1 vector
+_NGRAM_LO, _NGRAM_HI = 3, 8
+
+
+def _hashed_ngram_vector(text: str, dim: int) -> np.ndarray:
     vec = np.zeros(dim, dtype=np.float64)
     if text:
         t = text.lower()
-        for n in range(n_lo, n_hi + 1):
+        for n in range(_NGRAM_LO, _NGRAM_HI + 1):
             if len(t) < n:
                 break
             for i in range(len(t) - n + 1):
                 g = t[i : i + n]
                 vec[zlib.crc32(g.encode("utf-8")) % dim] += 1.0
-    vec = np.log1p(vec)
-    norm = np.linalg.norm(vec)
-    if norm > 0:
-        vec /= norm
-    return vec.astype(np.float32)
+    return l2_normalize(np.log1p(vec)).astype(np.float32)
 
 
 def embed_text(
@@ -79,7 +142,7 @@ def embed_text(
 
 
 # --------------------------------------------------------------------------
-# E2: exact brute-force cosine kNN (broadcast corpus + mapInPandas matmul)
+# E2: exact brute-force cosine kNN (broadcast corpus + mapInPandas)
 # --------------------------------------------------------------------------
 
 def knn_topk(
@@ -90,13 +153,12 @@ def knn_topk(
     query_vec: str = "embedding",
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
-    normalize: bool = True,
 ) -> DataFrame:
     """E2: exact top-k cosine neighbours of every query row.
 
     The corpus (smaller side) is collected to the driver ONCE, L2-normalized,
-    and broadcast; ``mapInPandas`` over the query side computes the block
-    matmul per Arrow batch and keeps the per-row top-k with ``argpartition``.
+    and broadcast; ``mapInPandas`` over the query side scores each Arrow
+    batch with ``dot_rows`` and keeps the per-row top-k with ``topk_rows``.
     Output: (query_id, neighbor_id, score) — exact, deterministic (ties broken
     by neighbor id).
     """
@@ -108,12 +170,7 @@ def knn_topk(
     # array (lexsort-able), not dtype=object as pandas would hand back
     ids = np.array(corpus_pdf[corpus_id].tolist())
     mat = np.array(corpus_pdf[corpus_vec].tolist(), dtype=np.float64)
-    if normalize and mat.size:
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        mat = mat / norms
-    bc = spark.sparkContext.broadcast((ids, mat))
-    kk = min(k, len(ids))
+    bc = spark.sparkContext.broadcast((ids, l2_normalize(mat)))
 
     out_schema = T.StructType(
         [
@@ -128,19 +185,11 @@ def knn_topk(
         for pdf in batches:
             if pdf.empty or not len(c_ids):
                 continue
-            q = np.array(pdf[query_vec].tolist(), dtype=np.float64)
-            if normalize:
-                qn = np.linalg.norm(q, axis=1, keepdims=True)
-                qn[qn == 0] = 1.0
-                q = q / qn
-            sims = q @ c_mat.T  # (batch, corpus)
-            # top-k with deterministic tie-break by (−score, id)
-            idx = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
+            q = l2_normalize(np.array(pdf[query_vec].tolist(), dtype=np.float64))
+            sims = dot_rows(q, c_mat)  # (batch, corpus)
             rows = []
-            for r in range(sims.shape[0]):
-                cand = idx[r]
-                order = np.lexsort((c_ids[cand], -sims[r, cand]))
-                for j in cand[order]:
+            for r, top in enumerate(topk_rows(sims, c_ids, k)):
+                for j in top:
                     rows.append((pdf[query_id].iloc[r], c_ids[j], float(sims[r, j])))
             yield pd.DataFrame(rows, columns=[query_id, "neighbor_id", "score"])
 
@@ -155,21 +204,19 @@ def simhash_buckets_udf(dim: int, n_bits: int, n_tables: int, seed: int = 42):
     """Random-hyperplane SimHash of an array<float> column → array of
     ``n_tables`` bucket ids (one independent hyperplane set per table).
     Hyperplanes are generated ONCE here (seeded, so deterministic) and
-    shipped in the UDF closure — the previous shape regenerated the
-    (n_tables·dim·n_bits) tensor inside the UDF body, paying the
-    standard_normal draw again for every Arrow batch (guide §4.5)."""
+    shipped in the UDF closure, not drawn again per Arrow batch."""
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_tables, dim, n_bits))
+    # one hyperplane normal per row, table-major: (n_tables·n_bits, dim)
+    normals = planes.transpose(0, 2, 1).reshape(n_tables * n_bits, dim)
     weights = (1 << np.arange(n_bits)).astype(np.int64)
+    offsets = np.arange(n_tables, dtype=np.int64) << n_bits
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def _sig(vecs: pd.Series) -> pd.Series:
         m = np.array(vecs.tolist(), dtype=np.float64)
-        per_table = []
-        for t in range(n_tables):
-            bits = (m @ planes[t]) > 0
-            per_table.append((bits @ weights).astype(np.int64) + (t << n_bits))
-        stacked = np.stack(per_table, axis=1).astype(np.int32)
+        bits = (dot_rows(m, normals) > 0).reshape(len(m), n_tables, n_bits)
+        stacked = (bits @ weights + offsets).astype(np.int32)
         return pd.Series([row.tolist() for row in stacked])
 
     return _sig
@@ -177,14 +224,13 @@ def simhash_buckets_udf(dim: int, n_bits: int, n_tables: int, seed: int = 42):
 
 def cosine_pairs_udf():
     """Row-wise cosine of two array<float/double> columns as ONE
-    Arrow-batched numpy kernel: dot/(‖q‖·‖c‖), 0.0 when either norm is 0
-    or either vector is null — the same rule as the SQL-expressible
-    ``aggregate``/``zip_with`` form, which runs as interpreted non-codegen
-    HOFs costing ~dim interpreted ops per candidate pair; this crosses the
-    Arrow boundary once per batch and does the arithmetic in BLAS.  Not
-    bit-identical to that form: it upcasts to float64 before multiplying
-    (the expression form multiplies array<float> elements in float32) and
-    sums in a different order, so scores can differ in the last bits."""
+    Arrow-batched numpy kernel: normalize each side, then ``fixed_dot`` (the
+    algebra of ``knn_topk``, so a pair scores the same bits on every path);
+    0.0 when either norm is 0 or either vector is null — the rule of the
+    SQL-expressible ``aggregate``/``zip_with`` form, which runs ~dim
+    interpreted non-codegen HOF ops per pair.  Not bit-identical to that
+    form, which multiplies array<float> elements in float32 and divides by
+    the norms last: scores can differ in the last bits."""
 
     @F.pandas_udf(T.DoubleType())
     def _cos(qs: pd.Series, cs: pd.Series) -> pd.Series:
@@ -193,12 +239,22 @@ def cosine_pairs_udf():
         if ok.any():
             q = np.array(qs[ok].tolist(), dtype=np.float64)
             c = np.array(cs[ok].tolist(), dtype=np.float64)
-            dot = np.einsum("ij,ij->i", q, c)
-            denom = np.linalg.norm(q, axis=1) * np.linalg.norm(c, axis=1)
-            out[ok] = np.where(denom > 0, dot / np.where(denom > 0, denom, 1.0), 0.0)
+            out[ok] = fixed_dot(l2_normalize(q), l2_normalize(c))
         return pd.Series(out)
 
     return _cos
+
+
+def _top_k_per_query(scored: DataFrame, k: int, query_id: str) -> DataFrame:
+    """Top ``k`` rows per ``q_id`` of (q_id, neighbor_id, score) in
+    (−score, id) order — ``topk_rows``' rule over a shuffled candidate set."""
+    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .drop("_rn")
+        .withColumnRenamed("q_id", query_id)
+    )
 
 
 def knn_topk_lsh(
@@ -239,13 +295,7 @@ def knn_topk_lsh(
         "neighbor_id",
         cosine_pairs_udf()(F.col("q_vec"), F.col("c_vec")).alias("score"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-        .withColumnRenamed("q_id", query_id)
-    )
+    return _top_k_per_query(scored, k, query_id)
 
 
 # --------------------------------------------------------------------------
@@ -290,20 +340,16 @@ def train_ivf_centroids(
         # (knn_topk_ivf) treat a zero-row centroid matrix as "no results",
         # mirroring the empty-corpus guard on the LSH path.
         return np.zeros((0, 0), dtype=np.float64)
-    norms = np.linalg.norm(m, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    m = m / norms
+    m = l2_normalize(m)
     rng = np.random.default_rng(seed)
     cents = m[rng.choice(len(m), size=min(n_cells, len(m)), replace=False)]
     for _ in range(iters):
-        assign = np.argmax(m @ cents.T, axis=1)
+        assign = np.argmax(dot_rows(m, cents), axis=1)
         for c in range(len(cents)):
             members = m[assign == c]
             if len(members):
                 cents[c] = members.mean(axis=0)
-        cn = np.linalg.norm(cents, axis=1, keepdims=True)
-        cn[cn == 0] = 1.0
-        cents = cents / cn
+        cents = l2_normalize(cents)
     return cents
 
 
@@ -330,79 +376,52 @@ def knn_topk_ivf(
     - **query side ≤ ``max_broadcast_queries``** (the common retrieval
       shape): the normalized query matrix + per-query probe sets are
       broadcast and ONE ``mapInPandas`` over the corpus assigns cells,
-      GEMMs each batch against all queries and emits only the
+      scores each batch against all queries and emits only the
       probed-cell candidates — the corpus is never shuffled and each
-      corpus vector crosses the Arrow boundary once (the join form
-      duplicated q_vec/c_vec per candidate PAIR and paid a corpus
-      exchange + three separate Python evals).  The only exchange left
+      corpus vector crosses the Arrow boundary once; the only exchange
       is the candidate-sized top-k window.
     - **larger query sides** fall back to the cell-key join (both sides
       exchange once on the cell id — the shape that needs no driver
       collect of either side).
 
-    Candidate sets are identical by construction (same centroid math, same
-    argmax/argpartition), and scores follow ``knn_topk``'s exact sequence
-    (normalize each side, float64 GEMM) — the brute-force-oracle-verified
-    arithmetic.  The centroid matrix is tiny (n_cells × dim); at scale the
-    corpus assignment is computed once and persisted as the index."""
+    Both shapes return identical rows: the same cells (first-max ``argmax``,
+    probe cells by ``topk_rows``, ties to the lowest cell) and the same
+    score bits as ``knn_topk`` (normalize each side, then ``fixed_dot``) —
+    the brute-force-oracle-verified arithmetic.  The centroid matrix is tiny
+    (n_cells × dim); at scale the corpus assignment is computed once and
+    persisted as the index."""
     spark = queries.sparkSession
+    out_schema = T.StructType(
+        [
+            T.StructField("q_id", queries.schema[query_id].dataType),
+            T.StructField("neighbor_id", corpus.schema[corpus_id].dataType),
+            T.StructField("score", T.DoubleType()),
+        ]
+    )
     if centroids is None:
         centroids = train_ivf_centroids(corpus, n_cells, vec_col=vec_col)
     if len(centroids) == 0:
         # empty corpus: return an empty top-k frame with the documented
         # schema, like knn_topk / knn_topk_lsh do.
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField(query_id, queries.schema[query_id].dataType),
-                    T.StructField("neighbor_id", corpus.schema[corpus_id].dataType),
-                    T.StructField("score", T.DoubleType()),
-                ]
-            ),
-        )
+        return spark.createDataFrame([], out_schema).withColumnRenamed("q_id", query_id)
     bc = spark.sparkContext.broadcast(centroids)
-    probe = min(n_probe, len(centroids))
-
-    def _normalized(m: np.ndarray) -> np.ndarray:
-        norms = np.linalg.norm(m, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        return m / norms
+    cell_ids = np.arange(len(centroids))
 
     q_pdf = queries.select(query_id, vec_col).limit(
         max_broadcast_queries + 1
     ).toPandas()
     if len(q_pdf) <= max_broadcast_queries:
         if len(q_pdf) == 0:
-            return spark.createDataFrame(
-                [],
-                T.StructType(
-                    [
-                        T.StructField(query_id, queries.schema[query_id].dataType),
-                        T.StructField(
-                            "neighbor_id", corpus.schema[corpus_id].dataType
-                        ),
-                        T.StructField("score", T.DoubleType()),
-                    ]
-                ),
+            return spark.createDataFrame([], out_schema).withColumnRenamed(
+                "q_id", query_id
             )
         q_ids = np.array(q_pdf[query_id].tolist())
-        qn = _normalized(np.array(q_pdf[vec_col].tolist(), dtype=np.float64))
-        q_sims = qn @ centroids.T
-        probe_idx = np.argpartition(-q_sims, probe - 1, axis=1)[:, :probe]
+        qn = l2_normalize(np.array(q_pdf[vec_col].tolist(), dtype=np.float64))
+        probe_idx = topk_rows(dot_rows(qn, centroids), cell_ids, n_probe)
         # (n_cells, n_q) membership: cell c probed by query j
         member = np.zeros((len(centroids), len(q_ids)), dtype=bool)
-        for j in range(len(q_ids)):
-            member[probe_idx[j], j] = True
+        member[probe_idx.T, np.arange(len(q_ids))] = True
         bq = spark.sparkContext.broadcast((q_ids, qn, member))
-
-        out_schema = T.StructType(
-            [
-                T.StructField("q_id", queries.schema[query_id].dataType),
-                T.StructField("neighbor_id", corpus.schema[corpus_id].dataType),
-                T.StructField("score", T.DoubleType()),
-            ]
-        )
 
         def _score(batches):
             cents = bc.value
@@ -410,20 +429,13 @@ def knn_topk_ivf(
             for pdf in batches:
                 if pdf.empty:
                     continue
-                cm = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                cn = _normalized(cm)
-                cell = np.argmax(cn @ cents.T, axis=1)
-                sims = cn @ qmat.T  # (batch, n_q)
-                mask = memb[cell]  # (batch, n_q)
-                rows, cols = np.nonzero(mask)
+                cn = l2_normalize(np.array(pdf[vec_col].tolist(), dtype=np.float64))
+                cell = np.argmax(dot_rows(cn, cents), axis=1)
+                sims = dot_rows(cn, qmat)  # (batch, n_q)
+                rows, cols = np.nonzero(memb[cell])  # probed (corpus, query)
                 c_ids = pdf[corpus_id].to_numpy()
-                yield pd.DataFrame(
-                    {
-                        "q_id": ids_q[cols],
-                        "neighbor_id": c_ids[rows],
-                        "score": sims[rows, cols],
-                    }
-                )
+                yield pd.DataFrame({"q_id": ids_q[cols], "neighbor_id": c_ids[rows],
+                                    "score": sims[rows, cols]})
 
         scored = corpus.select(corpus_id, vec_col).mapInPandas(_score, out_schema)
     else:
@@ -433,17 +445,15 @@ def knn_topk_ivf(
             cents = bc.value
             m = np.array(vecs.tolist(), dtype=np.float64)
             return pd.Series(
-                np.argmax(_normalized(m) @ cents.T, axis=1).astype(np.int32)
+                np.argmax(dot_rows(l2_normalize(m), cents), axis=1).astype(np.int32)
             )
 
         @F.pandas_udf(T.ArrayType(T.IntegerType()))
         def _probe_cells(vecs: pd.Series) -> pd.Series:
             cents = bc.value
             m = np.array(vecs.tolist(), dtype=np.float64)
-            sims = _normalized(m) @ cents.T
-            idx = np.argpartition(-sims, probe - 1, axis=1)[:, :probe].astype(
-                np.int32
-            )
+            sims = dot_rows(l2_normalize(m), cents)
+            idx = topk_rows(sims, cell_ids, n_probe).astype(np.int32)
             return pd.Series([row.tolist() for row in idx])
 
         c = corpus.select(
@@ -458,13 +468,7 @@ def knn_topk_ivf(
             cosine_pairs_udf()(F.col("q_vec"), F.col("c_vec")).alias("score"),
         )
 
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-        .withColumnRenamed("q_id", query_id)
-    )
+    return _top_k_per_query(scored, k, query_id)
 
 
 # --------------------------------------------------------------------------

@@ -32,7 +32,9 @@ from magneto_matcher_spark.functions.cleaning import (
     remove_invalid_characters_expr,
 )
 from magneto_matcher_spark.localframe import local_df
-from magneto_matcher_spark.operators.embedding import embed_text, knn_topk
+from magneto_matcher_spark.operators.embedding import (
+    _hashed_ngram_vector, dot_rows, embed_text, knn_topk, l2_normalize, topk_rows,
+)
 from magneto_matcher_spark.operators.profile import profile_rows_multi
 from magneto_matcher_spark.operators.serialize import serialize_profiles
 from magneto_matcher_spark.schemas import MATCHES_SCHEMA
@@ -206,11 +208,10 @@ def _embedding_pairs(
     src_prof_rows: list, tgt_prof_rows: list, params: dict, priority: int = 2
 ) -> list[tuple]:
     """Numpy twin of embedding_candidates → knn_topk: serialize → hashed
-    n-gram embed → normalized matmul → per-row top-k (argpartition + lexsort
-    tie-break, the exact sequence of operators/embedding.py:knn_topk)."""
+    n-gram embed → ``l2_normalize`` → ``dot_rows`` → ``topk_rows``, the
+    kernel and sequence of operators/embedding.py:knn_topk."""
     import numpy as np
 
-    from magneto_matcher_spark.operators.embedding import _hashed_ngram_vector
     from magneto_matcher_spark.operators.serialize import serialize_text
 
     mode, dim = params["encoding_mode"], params["embedding_dim"]
@@ -218,27 +219,19 @@ def _embedding_pairs(
     def embed(rows):
         texts = [serialize_text(mode, r[1], r[3], r[10]) for r in rows]
         # float32 first (embed_text stores array<float>), then f64
-        return np.array(
+        return l2_normalize(np.array(
             [_hashed_ngram_vector(t or "", dim) for t in texts], dtype=np.float64
-        )
+        ))
 
     if not src_prof_rows or not tgt_prof_rows:
         return []
-    q, c = embed(src_prof_rows), embed(tgt_prof_rows)
-    for m in (q, c):
-        norms = np.linalg.norm(m, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        m /= norms
     c_ids = np.array([r[1] for r in tgt_prof_rows])
-    sims = q @ c.T
-    kk = min(params["topk"], len(c_ids))
-    idx = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
+    sims = dot_rows(embed(src_prof_rows), embed(tgt_prof_rows))
+    top = topk_rows(sims, c_ids, params["topk"])
     out = []
     threshold = params["embedding_threshold"]
     for r, src in enumerate([row[1] for row in src_prof_rows]):
-        cand = idx[r]
-        order = np.lexsort((c_ids[cand], -sims[r, cand]))
-        for j in cand[order]:
+        for j in top[r]:
             score = float(sims[r, j])
             if score >= threshold:
                 out.append((src, str(c_ids[j]), score, "embedding", priority))

@@ -39,7 +39,7 @@ def sequential_replay_oracle(events):
 
 # ---- array-form reference kernels --------------------------------------
 # The split-array and higher-order-function formulations that the package's
-# regexp / BLAS kernels replaced; tests pin the package kernels to them.
+# regexp / numpy kernels replaced; tests pin the package kernels to them.
 
 def tokens_expr(text):
     """Whitespace tokenization with empty-token filtering."""

@@ -149,14 +149,13 @@ def _reference_matches(spark, src, tgt, topk, order=None, **params):
 
 def test_driver_vs_distributed_cascade_parity(spark, pair):
     """The driver-local cascade must reproduce the cascade built from the
-    DataFrame operators: identical (src, tgt, rank, strategy-priority) sets,
-    scores equal to 1e-9 (last-ULP matmul differences between the driver
-    process and the pandas-UDF worker are expected and harmless)."""
+    DataFrame operators: identical (src, tgt, rank, strategy-priority) sets
+    and bit-identical scores (both score with the one similarity kernel)."""
     src, tgt, _ = pair
 
     def norm(df):
         return sorted(
-            (r["src_col"], r["tgt_col"], r["rank"], round(r["score"], 9))
+            (r["src_col"], r["tgt_col"], r["rank"], r["score"])
             for r in df.collect()
         )
 
