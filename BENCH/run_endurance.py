@@ -85,8 +85,6 @@ def main():
         )
         engine = CdcEngine(
             table,
-            dedup_strategy="salted",
-            n_salts=32,
             auto_compact_ratio=AUTO_COMPACT_RATIO,
             expire_keep=EXPIRE_KEEP,
         )
@@ -95,7 +93,7 @@ def main():
             spark, f"{work}/warm_table", schema, key=TRANSCRIPT_KEY,
             n_buckets=32, write_mode="mor",
         )
-        CdcEngine(warm_t, dedup_strategy="salted", n_salts=32).replay(paths[:2])
+        CdcEngine(warm_t).replay(paths[:2])
 
         t0 = time.time()
         metrics = engine.replay(paths)
@@ -122,8 +120,7 @@ def main():
 
         # correctness: replayed state == single-shot dedup of the whole feed
         winners = (
-            dedup_max_lsn(normalize_payload(feed), key=TRANSCRIPT_KEY,
-                          strategy="agg")
+            dedup_max_lsn(normalize_payload(feed), key=TRANSCRIPT_KEY)
             .filter("op <> 'D'")
             .drop("op")
         )
@@ -159,7 +156,7 @@ def main():
         md = f"""# BENCH/ENDURANCE.md — sustained-ingest endurance (maintenance on)
 
 One MoR table, {n_batches} micro-batches of a {n_events:,}-event Zipf feed
-(salted dedup, n_buckets=32), with the production maintenance policy live:
+(max-LSN dedup, n_buckets=32), with the production maintenance policy live:
 `auto_compact_ratio={AUTO_COMPACT_RATIO}` (compact when delta rows exceed
 that fraction of data rows) and `expire_keep={EXPIRE_KEEP}` (snapshot log
 bound + orphan GC after every commit).  local[32], tmpfs, untimed 2-batch

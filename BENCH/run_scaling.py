@@ -275,7 +275,7 @@ def main():
 ## CDC MERGE replay throughput (headline, north rule)
 
 Same job, same deterministic input (seed 42, {n_events:,} change events,
-{n_batches} micro-batches, Zipf hot-key fraction 0.2, bucket/salt/feed layout
+{n_batches} micro-batches, Zipf hot-key fraction 0.2, bucket/feed layout
 and shuffle partitioning fixed across levels — only executor thread count
 varies), measured at local[{{{','.join(str(c) for c in levels)}}}].  Two N-vs-4N
 executor-count pairs are the sandbox surrogate for the north rule's
@@ -348,7 +348,7 @@ ingest-optimized, the mode a 10^10-event ingest would run).
 ## 10^10-event positioning (honest extrapolation, not a measurement)
 
 The measured replay profile is the sf-scaled local proxy. At 10^10 events the
-same plan shape holds: dedup is a partial-aggregated (salted) shuffle of each
+same plan shape holds: dedup is one aggregated shuffle of each
 micro-batch, MERGE touches only the buckets the batch hits (mor: appends only
 delta files), and every stage scales with executors — but numbers above are
 single-node; real-cluster throughput depends on shuffle fabric and

@@ -61,7 +61,7 @@ def main():
         )
 
     def mk_engine(table):
-        return CdcEngine(table, dedup_strategy="salted", n_salts=32)
+        return CdcEngine(table)
 
     try:
         feed = generate_change_feed(
@@ -146,7 +146,7 @@ def main():
 
 Same {n_events:,}-event feed ({n_batches} batch dirs x ~{files_per_batch}
 contiguous-LSN files, WAL-ordered mtimes), same MoR table config
-(n_buckets=32, salted dedup), same JVM (local[32], tmpfs), interleaved
+(n_buckets=32, max-LSN dedup), same JVM (local[32], tmpfs), interleaved
 min-of-2 per path: drained by `CdcEngine.run_streaming` (Structured
 Streaming file source → `foreachBatch`, availableNow, checkpointed) at two
 trigger grains — maxFilesPerTrigger={files_per_batch} (finest) and

@@ -56,7 +56,7 @@ def main():
             spark, f"{work_dir}/warm_lake", schema, key=TRANSCRIPT_KEY,
             n_buckets=32, write_mode=write_mode,
         )
-        CdcEngine(wt, dedup_strategy="salted").replay(wpaths)
+        CdcEngine(wt).replay(wpaths)
 
     feed = generate_change_feed(
         spark, n_events, n_convs=max(50, n_events // 2000), turns_per_conv=50,
@@ -67,7 +67,7 @@ def main():
         spark, f"{work_dir}/lake", schema, key=TRANSCRIPT_KEY, n_buckets=32,
         write_mode=write_mode,
     )
-    engine = CdcEngine(table, dedup_strategy="salted")
+    engine = CdcEngine(table)
     t0 = time.time()
     metrics = engine.replay(paths, concurrency=4)
     wall = time.time() - t0

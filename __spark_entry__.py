@@ -41,9 +41,7 @@ def entry(spark: SparkSession) -> DataFrame:
         "value",
         "props",
     )
-    winners = dedup_max_lsn(
-        feed, key=["user_id", "event_type"], lsn_col="lsn", strategy="salted"
-    )
+    winners = dedup_max_lsn(feed, key=["user_id", "event_type"], lsn_col="lsn")
     return winners.filter(F.col("op") != "D").orderBy("user_id", "event_type")
 
 

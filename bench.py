@@ -2,7 +2,7 @@
 
 Headline: end-to-end CDC MERGE replay throughput — generate a deterministic
 change feed (seed 42, Zipf-skewed hot keys), split into micro-batches on disk,
-replay through the full engine path (normalize → salted max-LSN dedup →
+replay through the full engine path (normalize → max-LSN dedup →
 bucket-pruned MERGE into the Iceberg-semantics table, snapshot commit with
 offsets) and report applied change-events/sec.  This is the sf-scaled local
 proxy of the north rule's 10^10-event replay profile (BASELINE.md).
@@ -47,7 +47,7 @@ BENCH_QUERIES = [
 
 def prepare_feed(spark, out_dir: str, n_events: int, n_batches: int):
     """Generate the deterministic replay input: a 500k-event warm-up feed and
-    the timed feed.  Feed layout, bucket count and salt count are FIXED (not
+    the timed feed.  Feed layout and bucket count are FIXED (not
     derived from cpus) so every parallelism level replays the byte-identical
     job — only thread count and shuffle-partition count differ."""
     from magneto_matcher_spark.sources.changefeed import (
@@ -191,8 +191,7 @@ def run_cdc_replay(
             spark, f"{tmp}/warm_lake", schema, key=TRANSCRIPT_KEY,
             n_buckets=n_buckets,
         )
-        dedup = os.environ.get("SPARK_GRAFT_DEDUP", "agg")
-        CdcEngine(warm_table, dedup_strategy=dedup, n_salts=32).replay(warm_paths)
+        CdcEngine(warm_table).replay(warm_paths)
 
         # reps > 1: replay the same feed into a fresh table several times and
         # report the best — the sandbox VM's CPU is bursty (2-3x swings
@@ -205,7 +204,7 @@ def run_cdc_replay(
                 spark, f"{tmp}/lake_{r}", schema, key=TRANSCRIPT_KEY,
                 n_buckets=n_buckets, write_mode=write_mode,
             )
-            engine = CdcEngine(table, dedup_strategy=dedup, n_salts=32)
+            engine = CdcEngine(table)
             # MoR batches stage concurrently (commits stay serial, in feed
             # order) — fills stage-barrier bubbles; no-op for CoW
             conc = int(os.environ.get("SPARK_GRAFT_CONCURRENCY", "4"))

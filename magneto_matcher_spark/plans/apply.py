@@ -3,23 +3,16 @@
 Per micro-batch: normalize payload (P8-style expressions, no per-row Python) →
 max-LSN dedup per (conv_id, turn_idx) → MERGE into the current table state.
 
-Dedup strategies (all semantically identical; tests assert equality):
-
-- ``window``  — the literal north-star shape: ``row_number() over (partition by
-  conv_id, turn_idx order by lsn desc) = 1``.  One full shuffle of every row of
-  the batch; a hot conversation key lands on one task.
-- ``agg``     — ``groupBy(key).agg(max_by(payload, lsn))``.  Same answer, but
-  Catalyst plans it as partial + final aggregation: with a free layout the
-  partial half combines hot keys map-side BELOW the exchange; with the
-  keyhash pin (``n_partitions``) the explicit repartition IS the exchange
-  and both halves sit above it — one exchange of raw rows, combine after
-  the wire (the measured one-exchange tradeoff; see merge_into_frame's
-  plan-shape note).  This is the scale-default.
-- ``salted``  — the explicit two-phase version of ``agg`` for when the payload
-  is too wide for map-side combine to help (wide rows blow the hash-agg memory
-  budget and spill): add ``salt = pmod(xxhash64(lsn), n_salts)``, take the
-  per-(key, salt) winner, then the global per-key winner.  Winner is global,
-  not per-salt — max is associative, so two-phase max_by is exact.
+The max-LSN dedup is ONE aggregation, ``groupBy(key).agg(max_by(payload,
+lsn))``.  Catalyst plans it as partial + final aggregation: with a free
+layout the partial half combines hot keys map-side BELOW the exchange; with
+the keyhash pin (``n_partitions``) the explicit repartition IS the exchange
+and both halves sit above it — one exchange of raw rows, combine after the
+wire (the measured one-exchange tradeoff; see merge_into_frame's plan-shape
+note).  A two-phase salted form (spread a hot key over salt reducers, then
+take the global winner) measured slower than this one aggregation on a
+50%-hot-key feed in both write modes (ROADMAP item 2); it survives only as
+the registry's ``w4_salted_dedup`` query.
 
 At 100 TB: the batch is the small side; dedup is the only full shuffle of the
 batch and it shrinks the batch to ≤ |keys| rows *before* the MERGE aggregation.
@@ -27,7 +20,7 @@ batch and it shrinks the batch to ≤ |keys| rows *before* the MERGE aggregation
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from magneto_matcher_spark.functions.cleaning import null_normalize_expr
@@ -63,77 +56,41 @@ def dedup_max_lsn(
     batch: DataFrame,
     key: list[str] | None = None,
     lsn_col: str = "lsn",
-    strategy: str = "agg",
-    n_salts: int = 32,
     n_partitions: int | None = None,
 ) -> DataFrame:
     """W4 (SURVEY.md §2.5): keep only the max-LSN event per key.
 
     Returns a DataFrame with the same schema as ``batch``, ≤ one row per key.
 
-    ``n_partitions`` pins the FINAL exchange to ``repartition(n, *key)``
-    (which satisfies the agg/window distribution, so no extra exchange
-    appears).  With a keyhash-bucketed table and ``n = n_buckets``, the
-    dedup shuffle IS the bucket layout — partition p holds exactly bucket
-    p's rows (see sources/lake.py bucket_expr_keyhash) and the delta/merge
-    write skips its own repartition.
+    ``n_partitions`` pins the exchange to ``repartition(n, *key)`` (which
+    satisfies the aggregation's distribution, so no extra exchange appears).
+    With a keyhash-bucketed table and ``n = n_buckets``, the dedup shuffle
+    IS the bucket layout — partition p holds exactly bucket p's rows (see
+    sources/lake.py bucket_expr_keyhash) and the delta/merge write skips its
+    own repartition.
+
+    Per-column max_by, NOT max_by(struct(payload), lsn): a struct-typed
+    aggregation buffer is immutable, which forces the whole aggregate into
+    SortAggregate (two full sorts of every batch row — measured 0.37 s vs
+    0.26 s on a 1M-row feed); per-column buffers are scalars, so columns the
+    caller never reads (e.g. a string op) are PRUNED by Catalyst and the
+    all-primitive remainder runs as a partial+final HashAggregate.  Exact
+    under the engine's WAL contract (LSN unique per key, stamp_root total
+    order): every max_by shares the one ordering column, so all columns come
+    from the same winning row; equal-LSN rows are exact redeliveries
+    (identical payloads), for which column mixing is a no-op.
     """
     key = key or TRANSCRIPT_KEY
-
-    def pin(df: DataFrame) -> DataFrame:
-        if n_partitions is None:
-            return df
-        return df.repartition(n_partitions, *[F.col(c) for c in key])
-
-    if strategy == "window":
-        w = Window.partitionBy(*key).orderBy(F.col(lsn_col).desc())
-        return (
-            pin(batch).withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-
-    payload_cols = list(batch.columns)
-
-    # Per-column max_by, NOT max_by(struct(payload), lsn): a struct-typed
-    # aggregation buffer is immutable, which forces the whole aggregate into
-    # SortAggregate (two full sorts of every batch row — measured 0.37 s vs
-    # 0.26 s on a 1M-row feed); per-column buffers are scalars, so columns
-    # the caller never reads (e.g. a string op) are PRUNED by Catalyst and
-    # the all-primitive remainder runs as a partial+final HashAggregate.
-    # Exact under the engine's WAL contract (LSN unique per key, stamp_root
-    # total order): every max_by shares the one ordering column, so all
-    # columns come from the same winning row; equal-LSN rows are exact
-    # redeliveries (identical payloads), for which column mixing is a no-op
-    # — the struct form was equally order-nondeterministic there.
-    def winners(src: DataFrame, group: list[str], order_col: str) -> DataFrame:
-        aggs = [
-            F.max(order_col).alias(c)
-            if c == order_col
-            else F.max_by(F.col(c), F.col(order_col)).alias(c)
-            for c in payload_cols
-            if c not in group
-        ]
-        return src.groupBy(*group).agg(*aggs).select(*payload_cols)
-
-    if strategy == "agg":
-        return winners(pin(batch), key, lsn_col)
-
-    if strategy == "salted":
-        # phase 1: per-(key, salt) winner — salt spreads a hot key's rows over
-        # n_salts reducers; phase 2: global winner per key. Exact because max
-        # is associative (SURVEY.md §4 custom-work item 2).
-        salted = batch.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(lsn_col)), F.lit(n_salts))
-        )
-        phase1 = winners(
-            salted.repartition(*[F.col(c) for c in key + ["_salt"]]),
-            key + ["_salt"],
-            lsn_col,
-        )
-        return winners(pin(phase1), key, lsn_col)
-
-    raise ValueError(f"unknown dedup strategy: {strategy}")
+    if n_partitions is not None:
+        batch = batch.repartition(n_partitions, *[F.col(c) for c in key])
+    aggs = [
+        F.max(lsn_col).alias(c)
+        if c == lsn_col
+        else F.max_by(F.col(c), F.col(lsn_col)).alias(c)
+        for c in batch.columns
+        if c not in key
+    ]
+    return batch.groupBy(*key).agg(*aggs).select(*batch.columns)
 
 
 def merge_into_frame(
@@ -165,7 +122,7 @@ def merge_into_frame(
     bucket layout.  Both aggregate halves then sit above that exchange (rows cross
     the wire un-combined); measured ~1.6x faster on delta writes than
     combining below a default exchange and shuffling again to the bucket
-    layout.  Hot-key batches route to the salted dedup first."""
+    layout."""
     key = key or TRANSCRIPT_KEY
     cols = target.columns
     unioned = target.withColumn("_tgt", F.lit(1)).unionByName(

@@ -73,7 +73,7 @@ def w4_max_lsn_dedup(spark, sf_dir):
     from magneto_matcher_spark.plans.apply import dedup_max_lsn
 
     feed = _events_feed(spark, sf_dir)
-    return dedup_max_lsn(feed, key=["user_id", "event_type"], strategy="agg").select(
+    return dedup_max_lsn(feed, key=["user_id", "event_type"]).select(
         "user_id", "event_type", "lsn", "value"
     )
 
@@ -83,12 +83,19 @@ def w4_max_lsn_dedup(spark, sf_dir):
     ORACLES.get("w4_max_lsn_dedup"),
 )
 def w4_salted_dedup(spark, sf_dir):
+    """W4 two-phase: a salt spreads a hot key's rows over 16 reducers, phase 1
+    keeps the per-(key, salt) winner, phase 2 the global one — exact because
+    max is associative."""
     from magneto_matcher_spark.plans.apply import dedup_max_lsn
 
-    feed = _events_feed(spark, sf_dir)
-    return dedup_max_lsn(
-        feed, key=["user_id", "event_type"], strategy="salted", n_salts=16
-    ).select("user_id", "event_type", "lsn", "value")
+    key = ["user_id", "event_type"]
+    salted = _events_feed(spark, sf_dir).withColumn(
+        "_salt", F.pmod(F.xxhash64(F.col("lsn")), F.lit(16))
+    )
+    phase1 = dedup_max_lsn(
+        salted.repartition(*key, "_salt"), key=[*key, "_salt"]
+    ).drop("_salt")
+    return dedup_max_lsn(phase1, key=key).select(*key, "lsn", "value")
 
 
 @q(
@@ -96,12 +103,14 @@ def w4_salted_dedup(spark, sf_dir):
     ORACLES.get("w4_max_lsn_dedup"),
 )
 def w4_window_dedup(spark, sf_dir):
-    from magneto_matcher_spark.plans.apply import dedup_max_lsn
-
-    feed = _events_feed(spark, sf_dir)
-    return dedup_max_lsn(
-        feed, key=["user_id", "event_type"], strategy="window"
-    ).select("user_id", "event_type", "lsn", "value")
+    """W4 as the literal ``row_number() over (partition by key order by lsn
+    desc) = 1``."""
+    w = Window.partitionBy("user_id", "event_type").orderBy(F.col("lsn").desc())
+    return (
+        _events_feed(spark, sf_dir).withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select("user_id", "event_type", "lsn", "value")
+    )
 
 
 @q(
@@ -126,7 +135,7 @@ def cdc_replay_final_state(spark, sf_dir):
     from magneto_matcher_spark.plans.apply import dedup_max_lsn
 
     feed = _events_feed(spark, sf_dir)
-    winners = dedup_max_lsn(feed, key=["user_id", "event_type"], strategy="agg")
+    winners = dedup_max_lsn(feed, key=["user_id", "event_type"])
     return winners.filter(F.col("lsn") % 10 != 0).select(
         "user_id", "event_type", "lsn", "value"
     )
@@ -2724,9 +2733,7 @@ def cdc_schema_drift(spark, sf_dir):
     table = LakeTable.create(
         spark, root, schema, key=["user_id", "event_type"], n_buckets=8
     )
-    engine = CdcEngine(
-        table, dedup_strategy="agg", drift_resolver=matcher_drift_resolver
-    )
+    engine = CdcEngine(table, drift_resolver=matcher_drift_resolver)
     engine.apply_batch(batch1, source_desc="b1")
     engine.apply_batch(batch2, source_desc="b2")
     out = table.read().select(

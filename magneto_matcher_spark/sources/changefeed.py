@@ -16,7 +16,7 @@ Semantics of the feed (documented, tested):
   final state a pure function of the per-key max-LSN winner — the LSN
   permutation invariance property the pytest suite checks.
 - Zipf-ish skew: a configurable fraction of events lands on conversation 0
-  (the hot key) to exercise salting.
+  (the hot key) to exercise key skew.
 """
 
 from __future__ import annotations

@@ -352,8 +352,7 @@ class LakeTable:
                 base.withColumn("op", F.lit("U")).unionByName(
                     self._read_manifest(overlay, read_schema_id, extra_cols=("op",))
                 ),
-                key=self.key, lsn_col=self.lsn_col, strategy="agg",
-                n_partitions=n_partitions,
+                key=self.key, lsn_col=self.lsn_col, n_partitions=n_partitions,
             )
             if not keep_tombstones:
                 winners = winners.filter(F.col("op") != F.lit("D")).drop("op")
@@ -561,23 +560,15 @@ class LakeTable:
             "append", s, base_segs=self._segs_of(cur), new_entries=new_entries
         )
 
-    def merge(
-        self,
-        batch: DataFrame,
-        summary: dict | None = None,
-        dedup_strategy: str = "agg",
-        n_salts: int = 32,
-    ) -> int:
+    def merge(self, batch: DataFrame, summary: dict | None = None) -> int:
         """J6: key-partition-pruned MERGE (SURVEY §2.3).
 
         ``batch`` = the raw (normalized) change events: ``op`` column plus the
         current payload columns, any number of rows per key.  For CoW the
         max-LSN dedup is FUSED into the merge aggregation itself — the batch
-        dedup and the merge are ONE shuffle of target ∪ batch;
-        ``dedup_strategy='salted'`` still pre-shrinks a hot-key batch
-        two-phase before the fused agg.  Semantics: the MERGE kernel's
-        (plans/apply.py ``merge_into_frame``; ties keep the target row, so
-        equal-LSN redelivery is a no-op).
+        dedup and the merge are ONE shuffle of target ∪ batch.  Semantics:
+        the MERGE kernel's (plans/apply.py ``merge_into_frame``; ties keep
+        the target row, so equal-LSN redelivery is a no-op).
 
         Physical plan: bucket the batch, prune the manifest to touched buckets,
         merge ONLY those buckets' rows with the batch (one hash aggregation),
@@ -599,18 +590,14 @@ class LakeTable:
         """
         from magneto_matcher_spark.plans.apply import dedup_max_lsn
 
-        is_mor = self.meta["write_mode"] == "mor"
-        if is_mor or dedup_strategy == "salted":
-            # MoR delta files stay ≤1 row/key (read-amplification bound);
-            # a hot-key CoW batch pre-shrinks two-phase before the fused agg.
-            # MoR pins the dedup's final exchange to n_buckets partitions so
-            # the delta write reuses it (ONE exchange).
+        if self.meta["write_mode"] == "mor":
+            # MoR delta files stay ≤1 row/key (read-amplification bound); the
+            # dedup's exchange is pinned to n_buckets partitions so the delta
+            # write reuses it (ONE exchange).
             batch = dedup_max_lsn(
                 batch, key=self.key, lsn_col=self.lsn_col,
-                strategy=dedup_strategy, n_salts=n_salts,
-                n_partitions=self.n_buckets if is_mor else None,
+                n_partitions=self.n_buckets,
             )
-        if is_mor:
             return self.commit_delta(self.stage_delta(batch), summary)
 
         snapshot_id = self._next_snapshot_id()

@@ -6,9 +6,9 @@ delivers it (``apply_batch``/``foreachBatch``, sequential or concurrent
 
 - **stage** (``CdcEngine._stage``): footer/scan stats → empty / null-LSN /
   committed-watermark skip → schema-drift resolve (Magneto matcher between
-  batch and table column profiles) → normalize payload (P8) → dedup
-  strategy pick.  MoR then runs the max-LSN dedup and writes the batch's
-  delta files uncommitted (``LakeTable.stage_delta``); CoW writes nothing.
+  batch and table column profiles) → normalize payload (P8).  MoR then
+  runs the max-LSN dedup and writes the batch's delta files uncommitted
+  (``LakeTable.stage_delta``); CoW writes nothing.
 - **commit** (``CdcEngine._commit``): re-check the watermark, then ONE
   snapshot commit stamped with offsets + per-file lineage —
   ``commit_delta`` for MoR, the fused ``merge`` for CoW (its MERGE reads
@@ -83,20 +83,17 @@ class BatchMetrics(dict):
     ``"offsets<=committed(<watermark>)"``).  Applied batches add
     ``snapshot_id``, ``rows_written`` and ``buckets_rewritten`` (from the
     batch's own commit summary, taken before maintenance), ``compacted``,
-    ``dedup_used``, ``hot_key_frac_est`` (None unless 'auto' sampled),
     ``events_per_sec`` and ``lsn_lag``."""
 
 
 @dataclass
 class _Staged:
-    """A batch between stage and commit: its record so far, lineage spans
-    and dedup pick, plus what the commit writes — MoR's staged delta
-    entries, or CoW's normalized frame (merged at commit)."""
+    """A batch between stage and commit: its record so far and lineage
+    spans, plus what the commit writes — MoR's staged delta entries, or
+    CoW's normalized frame (merged at commit)."""
 
     metrics: BatchMetrics
     spans: dict[str, list[int]]
-    strategy: str = "agg"
-    hot_est: float | None = None
     frame: DataFrame | None = None
     entries: list[dict] | None = None
 
@@ -110,8 +107,6 @@ class CdcEngine:
         drift_resolver=None,
         metrics_sink: str | None = None,
         auto_compact_ratio: float | None = None,
-        hot_key_threshold: float = 0.05,
-        auto_min_events: int = 50_000,
         expire_keep: int | None = None,
     ):
         """``drift_resolver``: callable (batch_df, table) →
@@ -124,11 +119,10 @@ class CdcEngine:
         ``table.compact()`` (read-amplification bound; the Iceberg
         rewrite_data_files analog).  None disables; ignored for CoW tables.
 
-        ``dedup_strategy='auto'`` (SURVEY §2.13 per-batch hot-key detection):
-        each batch runs a cheap seeded-sample key-count (A1) and picks
-        'salted' when the estimated hottest key exceeds ``hot_key_threshold``
-        of the batch, else 'agg'.  Batches below ``auto_min_events`` skip
-        detection (the sample job would cost more than any possible skew).
+        ``dedup_strategy``/``n_salts``: kept so existing callers (the repo
+        benchmark passes ``dedup_strategy="agg", n_salts=32``) still run;
+        the one max-LSN dedup is :func:`dedup_max_lsn`, so ``"agg"`` is the
+        only accepted strategy and ``n_salts`` is ignored.
 
         ``expire_keep``: after each commit, expire all but the newest N
         snapshots and GC their orphaned files/segments
@@ -138,39 +132,17 @@ class CdcEngine:
         redelivery skipping survives expiry (``expired_offset_end``).
         None disables (keep full history / time travel).
         """
+        if dedup_strategy != "agg":
+            raise ValueError(
+                f"dedup_strategy={dedup_strategy!r}: the 'salted', 'window' "
+                "and 'auto' strategies were removed; only 'agg' remains"
+            )
         self.table = table
-        self.dedup_strategy = dedup_strategy
-        self.n_salts = n_salts
         self.drift_resolver = drift_resolver or exact_name_drift_resolver
         self.metrics_sink = metrics_sink
         self.auto_compact_ratio = auto_compact_ratio
-        self.hot_key_threshold = hot_key_threshold
-        self.auto_min_events = auto_min_events
         self.expire_keep = expire_keep
         self.metrics_log: list[BatchMetrics] = []
-
-    def _resolve_dedup_strategy(
-        self, batch: DataFrame, n_events: int
-    ) -> tuple[str, float | None]:
-        """Per-batch strategy pick for 'auto': sample ≤200k events, count per
-        key, estimate the hottest key's share of the batch.  One small extra
-        aggregation; everything else passes dedup_strategy through."""
-        if self.dedup_strategy != "auto":
-            return self.dedup_strategy, None
-        if n_events < self.auto_min_events:
-            return "agg", None
-        frac = min(1.0, 200_000 / n_events)
-        sample = batch if frac >= 1.0 else batch.sample(fraction=frac, seed=42)
-        row = (
-            sample.groupBy(*self.table.key)
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(F.max("c").alias("mx"), F.sum("c").alias("n"))
-            .collect()[0]
-        )
-        if not row["n"]:
-            return "agg", 0.0
-        est = row["mx"] / row["n"]
-        return ("salted" if est >= self.hot_key_threshold else "agg"), est
 
     # ------------- drift handling -------------
 
@@ -305,9 +277,6 @@ class CdcEngine:
             # name-keyed normalizer runs, or renamed payloads would be
             # written un-normalized (null-normalize/trim/cast skipped).
             batch = normalize_payload(self._resolve_drift(batch))
-            staged.strategy, staged.hot_est = self._resolve_dedup_strategy(
-                batch, n_events
-            )
             if self.table.meta["write_mode"] == "mor":
                 # MoR consumes winners exactly once (the delta write) — dedup
                 # up front so delta files stay ≤1 row/key.  The dedup's final
@@ -317,8 +286,6 @@ class CdcEngine:
                     batch,
                     key=self.table.key,
                     lsn_col=lsn_col,
-                    strategy=staged.strategy,
-                    n_salts=self.n_salts,
                     n_partitions=self.table.n_buckets,
                 )
                 staged.entries = self.table.stage_delta(winners)
@@ -358,14 +325,8 @@ class CdcEngine:
                 snapshot_id = self.table.commit_delta(staged.entries, summary=summary)
             else:
                 # fused path: the max-LSN dedup happens INSIDE the merge
-                # aggregation — one partial-aggregated shuffle of target ∪
-                # batch; 'salted' batches still pre-shrink two-phase there
-                snapshot_id = self.table.merge(
-                    staged.frame,
-                    summary=summary,
-                    dedup_strategy=staged.strategy,
-                    n_salts=self.n_salts,
-                )
+                # aggregation — one shuffle of target ∪ batch
+                snapshot_id = self.table.merge(staged.frame, summary=summary)
             # this commit's summary, captured BEFORE compaction/expiry —
             # afterwards the current snapshot may be the compaction's (whose
             # rows-written describes the rewrite, not this batch) and expiry
@@ -379,10 +340,6 @@ class CdcEngine:
                 rows_written=int(summ.get("rows-written", -1)),
                 buckets_rewritten=int(summ.get("buckets-rewritten", -1)),
                 compacted=compacted,
-                dedup_used=staged.strategy if mor else f"fused-{staged.strategy}",
-                hot_key_frac_est=(
-                    None if staged.hot_est is None else round(staged.hot_est, 4)
-                ),
                 lsn_lag=hi - lo,
             )
         commit_s = time.perf_counter() - t0

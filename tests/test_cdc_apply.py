@@ -73,9 +73,9 @@ def test_feed_invariants(small_feed):
     assert hot > 0.25 * len(rows)
 
 
-@pytest.mark.parametrize("strategy", ["window", "agg", "salted"])
-def test_dedup_strategies_agree(small_feed, strategy):
-    winners = dedup_max_lsn(small_feed, strategy=strategy).collect()
+@pytest.mark.parametrize("n_partitions", [None, 4])
+def test_dedup_max_lsn_matches_oracle(small_feed, n_partitions):
+    winners = dedup_max_lsn(small_feed, n_partitions=n_partitions).collect()
     expected = {}
     for r in small_feed.collect():
         k = (r["conv_id"], r["turn_idx"])
@@ -83,7 +83,7 @@ def test_dedup_strategies_agree(small_feed, strategy):
             expected[k] = r
     assert len(winners) == len(expected)
     for r in winners:
-        assert r["lsn"] == expected[(r["conv_id"], r["turn_idx"])]["lsn"]
+        assert r.asDict() == expected[(r["conv_id"], r["turn_idx"])].asDict()
 
 
 def test_single_batch_apply_matches_sequential_oracle(spark, small_feed):

@@ -17,9 +17,10 @@ from magneto_matcher_spark.streaming.engine import CdcEngine
 TABLE_SCHEMA = T.StructType([f for f in CHANGE_FEED_SCHEMA.fields if f.name != "op"])
 
 
-def _mk_table(spark, tmp_path, name="t"):
+def _mk_table(spark, tmp_path, name="t", write_mode="cow"):
     return LakeTable.create(
-        spark, str(tmp_path / name), TABLE_SCHEMA, key=TRANSCRIPT_KEY, n_buckets=8
+        spark, str(tmp_path / name), TABLE_SCHEMA, key=TRANSCRIPT_KEY,
+        n_buckets=8, write_mode=write_mode,
     )
 
 
@@ -48,16 +49,26 @@ def feed(spark):
     ).cache()
 
 
-def test_replay_matches_oracle_and_emits_metrics(spark, tmp_path, feed):
+@pytest.mark.parametrize("write_mode", ["cow", "mor"])
+def test_replay_matches_oracle_and_emits_metrics(spark, tmp_path, feed, write_mode):
+    """A hot-key feed (a quarter of the events on one conversation) replays
+    to the sequential oracle's state in both write modes."""
     paths = write_change_files(feed, str(tmp_path / "feed"), n_batches=5)
-    table = _mk_table(spark, tmp_path)
-    engine = CdcEngine(table, dedup_strategy="salted", n_salts=8)
-    metrics = engine.replay(paths)
+    table = _mk_table(spark, tmp_path, write_mode=write_mode)
+    metrics = CdcEngine(table).replay(paths)
     assert len(metrics) == 5
     assert all(not m["skipped"] for m in metrics)
     assert all(m["events_per_sec"] > 0 for m in metrics)
     assert sum(m["events_in"] for m in metrics) == 3000
     assert _state_dict(table) == _oracle(feed.collect())
+
+
+@pytest.mark.parametrize("strategy", ["salted", "auto", "window"])
+def test_removed_dedup_strategies_fail_loud(spark, tmp_path, strategy):
+    """The max-LSN dedup has one form; a caller still asking for a removed
+    strategy gets an error naming it instead of a silent fallback."""
+    with pytest.raises(ValueError, match=f"dedup_strategy={strategy!r}"):
+        CdcEngine(_mk_table(spark, tmp_path), dedup_strategy=strategy)
 
 
 def test_replay_resume_skips_committed(spark, tmp_path, feed):
@@ -554,36 +565,6 @@ def _count_keys(feed):
         else:
             state[k] = r
     return len(state)
-
-
-def test_auto_dedup_picks_salted_on_hot_feed(spark, tmp_path):
-    """SURVEY §2.13: dedup_strategy='auto' must detect a hot key per batch
-    (A1 sample count over keys) and switch to 'salted', with the final state
-    identical to a plain agg-strategy replay."""
-    hot = generate_change_feed(spark, 2000, n_convs=25, turns_per_conv=6,
-                               seed=7, hot_frac=0.5)
-    paths = write_change_files(hot, str(tmp_path / "hotfeed"), 2)
-
-    auto_t = _mk_table(spark, tmp_path, "auto_t")
-    auto_eng = CdcEngine(auto_t, dedup_strategy="auto", n_salts=8,
-                         hot_key_threshold=0.02, auto_min_events=0)
-    metrics = auto_eng.replay(paths)
-    assert all(m["dedup_used"].endswith("salted") for m in metrics)
-    assert all(m["hot_key_frac_est"] > 0.02 for m in metrics)
-
-    # cold feed → stays on agg
-    cold = generate_change_feed(spark, 1000, n_convs=200, turns_per_conv=6,
-                                seed=8, hot_frac=0.0)
-    cold_paths = write_change_files(cold, str(tmp_path / "coldfeed"), 1)
-    cold_t = _mk_table(spark, tmp_path, "cold_t")
-    cold_eng = CdcEngine(cold_t, dedup_strategy="auto",
-                         hot_key_threshold=0.02, auto_min_events=0)
-    cm = cold_eng.replay(cold_paths)
-    assert cm[0]["dedup_used"].endswith("agg")
-
-    ref_t = _mk_table(spark, tmp_path, "ref_t")
-    CdcEngine(ref_t, dedup_strategy="agg").replay(paths)
-    assert _state_dict(auto_t) == _state_dict(ref_t)
 
 
 def test_drift_renamed_column_is_normalized(spark, tmp_path):
