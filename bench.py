@@ -12,10 +12,15 @@ $SPARK_GRAFT_SF_DIR.
 
 Env:
   SPARK_GRAFT_SF_DIR   input dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[N] parallelism (default 32)
+  SPARK_GRAFT_CPUS     local[N] parallelism (default: the host's CPU count)
   SPARK_GRAFT_EVENTS   replay feed size (default 2_000_000)
   SPARK_GRAFT_BATCHES  micro-batch count (default 5)
   SPARK_GRAFT_BUCKETS  table bucket count (default 32 — the fixed layout)
+
+Fixed: 64 shuffle partitions, both write modes (cow, mor), min-of-2 replay
+reps with 4 MoR batches staged concurrently, min-of-2 interleaved query
+sweeps, work dirs on /dev/shm when it exists.  The gated, layer-by-layer
+benchmark is ``perfbench/run.py``.
 """
 
 from __future__ import annotations
@@ -43,6 +48,21 @@ BENCH_QUERIES = [
     "magneto_e2e_matches",
     "w_sessionize_gaps",
 ]
+
+#: shuffle partitioning is part of the JOB, not the host: a constant keeps
+#: the task graph identical at every parallelism level, so only the
+#: executor thread count differs
+SHUFFLE_PARTITIONS = 64
+WRITE_MODES = ("cow", "mor")
+#: min-of-2: the host's CPU is bursty (2-7x swings between byte-identical
+#: runs measured), so one extra rep makes the number estimate the engine
+REPLAY_REPS = 2
+QUERY_REPS = 2
+#: MoR batches staged concurrently (commits stay serial); no-op for CoW
+REPLAY_CONCURRENCY = 4
+#: RAM-backed work dir: one shared disk does not scale with threads the way
+#: a cluster's I/O scales with executors
+WORKDIR = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
 
 
 def prepare_feed(spark, out_dir: str, n_events: int, n_batches: int):
@@ -85,36 +105,11 @@ def _count_feed_events(paths) -> int:
     return n
 
 
-def _feed_from_env_or_generate(spark, tmp: str, n_events: int, n_batches: int):
-    """SPARK_GRAFT_FEED_DIR: pre-generated shared feed (see prepare_feed) —
-    byte-identical input across parallelism levels and reps, and the (untimed
-    but slow) generation isn't re-paid per JVM."""
-    feed_dir = os.environ.get("SPARK_GRAFT_FEED_DIR", "")
-    if feed_dir and os.path.isdir(f"{feed_dir}/feed") and os.path.isdir(
-        f"{feed_dir}/warm"
-    ):
-        warm_paths = sorted(
-            f"{feed_dir}/warm/{d}"
-            for d in os.listdir(f"{feed_dir}/warm")
-            if d.startswith("batch_")
-        )
-        paths = sorted(
-            f"{feed_dir}/feed/{d}"
-            for d in os.listdir(f"{feed_dir}/feed")
-            if d.startswith("batch_")
-        )
-        return warm_paths, paths
-    return prepare_feed(spark, tmp, n_events, n_batches)
-
-
 def _jvm_gc_millis(spark) -> int:
     """Cumulative stop-the-world GC time of the driver/executor JVM (local
     mode: one JVM) via GarbageCollectorMXBeans — no JVM flags needed.  The
-    per-run delta attributes wall time to GC directly.  Motivation: the
-    large-grain 32-thread investigation (BENCH/BASELINE_BIGBATCH_COW_8X.md)
-    had to FALSIFY a GC hypothesis with paired heap-size A/B runs because
-    wall clocks alone can't separate GC share from host-burst noise; this
-    metric makes that attribution direct next time."""
+    per-run delta attributes wall time to GC directly, which wall clocks
+    alone cannot separate from host-burst noise."""
     try:
         beans = (
             spark._jvm.java.lang.management.ManagementFactory
@@ -129,63 +124,29 @@ def _jvm_gc_millis(spark) -> int:
 
 
 def run_cdc_replay(
-    spark,
-    n_events: int,
-    n_batches: int,
-    reps: int | None = None,
-    write_mode: str = "cow",
-    feed_paths=None,
+    spark, feed_paths, n_batches: int, write_mode: str = "cow"
 ) -> dict:
+    """Replay ``feed_paths`` = (warm-up dirs, timed dirs) into fresh tables
+    ``REPLAY_REPS`` times; return the fastest rep's record."""
     from pyspark.sql import types as T
 
     from magneto_matcher_spark.schemas import CHANGE_FEED_SCHEMA, TRANSCRIPT_KEY
-    from magneto_matcher_spark.sources.changefeed import (
-        generate_change_feed,
-        write_change_files,
-    )
     from magneto_matcher_spark.sources.lake import LakeTable
     from magneto_matcher_spark.streaming.engine import CdcEngine
 
-    # RAM-backed work dir: on this single box the shuffle/write device is one
-    # shared disk, which does NOT scale with threads the way a real cluster's
-    # I/O scales with executors; tmpfs removes that artifact so the N-vs-4N
-    # surrogate measures the engine, not /dev/vda (documented in
-    # BENCH/BASELINE.md)
-    base = os.environ.get(
-        "SPARK_GRAFT_WORKDIR",
-        "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir(),
-    )
-    tmp = tempfile.mkdtemp(prefix="bench_cdc_", dir=base)
-    # default min-of-2: this VM's CPU is bursty (2-7x swings between
-    # byte-identical runs measured) — one extra rep costs ~15 s and makes
-    # the recorded number estimate the engine rather than a host burst
-    reps = reps if reps is not None else int(os.environ.get("SPARK_GRAFT_REPS", "2"))
+    warm_paths, paths = feed_paths
+    tmp = tempfile.mkdtemp(prefix="bench_cdc_", dir=WORKDIR)
     try:
         schema = T.StructType(
             [f for f in CHANGE_FEED_SCHEMA.fields if f.name != "op"]
         )
-
-        if feed_paths is not None:
-            warm_paths, paths = feed_paths
-        else:
-            warm_paths, paths = _feed_from_env_or_generate(
-                spark, tmp, n_events, n_batches
-            )
-        # events/sec must be computed from the feed ACTUALLY replayed, not
-        # the env request — a pre-generated SPARK_GRAFT_FEED_DIR built with
-        # a different event count would otherwise silently mis-scale the
-        # headline.  Footer reads, driver-side, untimed.
+        # events/sec from the feed ACTUALLY replayed, not the env request
+        # (footer reads, driver-side, untimed)
         n_events = _count_feed_events(paths)
 
         # untimed warm-up: a replay big enough to drive JIT/whole-stage-codegen
         # to steady state (measured: per-batch throughput keeps rising for the
         # first ~1M processed events in a fresh JVM)
-        # SPARK_GRAFT_BUCKETS: table bucket count (default 32, the FIXED
-        # layout of the official scaling table).  Provisioned-layout
-        # supplements size it to the parallelism level instead — real
-        # deployments provision partition counts to the cluster, so holding
-        # it fixed across levels understates high-N scaling for CoW, whose
-        # rewrite wave is n_buckets tasks (see BASELINE_PROVISIONED_COW.md).
         n_buckets = int(os.environ.get("SPARK_GRAFT_BUCKETS", "32"))
         warm_table = LakeTable.create(
             spark, f"{tmp}/warm_lake", schema, key=TRANSCRIPT_KEY,
@@ -193,24 +154,17 @@ def run_cdc_replay(
         )
         CdcEngine(warm_table).replay(warm_paths)
 
-        # reps > 1: replay the same feed into a fresh table several times and
-        # report the best — the sandbox VM's CPU is bursty (2-3x swings
-        # between identical runs measured), so min-of-R is the
-        # noise-robust estimator of engine throughput
         runs = []
         best = None
-        for r in range(reps):
+        for r in range(REPLAY_REPS):
             table = LakeTable.create(
                 spark, f"{tmp}/lake_{r}", schema, key=TRANSCRIPT_KEY,
                 n_buckets=n_buckets, write_mode=write_mode,
             )
             engine = CdcEngine(table)
-            # MoR batches stage concurrently (commits stay serial, in feed
-            # order) — fills stage-barrier bubbles; no-op for CoW
-            conc = int(os.environ.get("SPARK_GRAFT_CONCURRENCY", "4"))
             gc0 = _jvm_gc_millis(spark)
             t0 = time.time()
-            metrics = engine.replay(paths, concurrency=conc)
+            metrics = engine.replay(paths, concurrency=REPLAY_CONCURRENCY)
             dur = time.time() - t0
             runs.append(round(dur, 3))
             rec = {
@@ -237,48 +191,28 @@ def run_cdc_replay(
 
 
 def main():
+    from magneto_matcher_spark.queries import build_queries
+    from magneto_matcher_spark.session import get_spark, local_cpus
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     n_events = int(os.environ.get("SPARK_GRAFT_EVENTS", "2000000"))
     n_batches = int(os.environ.get("SPARK_GRAFT_BATCHES", "5"))
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
-    from magneto_matcher_spark.queries import build_queries
-    from magneto_matcher_spark.session import get_spark
-
-    shuffle_dir = os.environ.get(
-        "SPARK_GRAFT_WORKDIR",
-        "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir(),
-    )
-    # shuffle partitioning is part of the JOB, not the cluster: every
-    # parallelism level runs the identical task graph (a constant 64 shuffle
-    # partitions, AQE coalescing identical); only the executor thread count
-    # differs — exactly how an N vs 4N executor comparison works on a real
-    # cluster.  NOT max(64, cpus): that would change the task graph above 64
-    # cores and break the fixed-layout invariant.
     spark = get_spark(
         app_name="bench",
         master=f"local[{cpus}]",
-        # 64 = 2 partitions per core at the top level (classic 2-3x guidance):
-        # measured faster than 32 at BOTH 8 and 32 cores (straggler
-        # tolerance), and part of the FIXED job layout across levels
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "64")),
-        extra_conf={"spark.local.dir": f"{shuffle_dir}/spark_local_{cpus}"},
+        shuffle_partitions=SHUFFLE_PARTITIONS,
+        extra_conf={"spark.local.dir": f"{WORKDIR}/spark_local_{cpus}"},
     )
 
-    modes = os.environ.get("SPARK_GRAFT_WRITE_MODES", "cow,mor").split(",")
-    base = os.environ.get(
-        "SPARK_GRAFT_WORKDIR",
-        "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir(),
-    )
-    feed_tmp = tempfile.mkdtemp(prefix="bench_feed_", dir=base)
+    feed_tmp = tempfile.mkdtemp(prefix="bench_feed_", dir=WORKDIR)
     try:
-        feed_paths = _feed_from_env_or_generate(spark, feed_tmp, n_events, n_batches)
+        feed_paths = prepare_feed(spark, feed_tmp, n_events, n_batches)
         by_mode = {
-            m: run_cdc_replay(
-                spark, n_events, n_batches, write_mode=m, feed_paths=feed_paths
-            )
-            for m in modes
+            m: run_cdc_replay(spark, feed_paths, n_batches, write_mode=m)
+            for m in WRITE_MODES
         }
     finally:
         shutil.rmtree(feed_tmp, ignore_errors=True)
@@ -286,27 +220,21 @@ def main():
     # are all in by_write_mode
     headline = max(by_mode.values(), key=lambda m: m["events_per_sec"])
 
+    queries = build_queries()
     q_times = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_MODE") != "cdc_only":
-        queries = build_queries()
-        # min-of-N with INTERLEAVED passes (full sweep 1, then full sweep 2),
-        # matching the headline's rep discipline: this VM shows documented
-        # 2-7x burst swings, so single-shot per-query timings made
-        # round-over-round deltas uninterpretable (r02→r03 showed 2x+
-        # "regressions" on untouched queries).  Interleaving the sweeps
-        # decorrelates a burst from any single query's reps.
-        reps = int(os.environ.get("SPARK_GRAFT_QUERY_REPS", "2"))
-        for _rep in range(reps):
-            for name in BENCH_QUERIES:
-                t0 = time.time()
-                df = queries[name](spark, sf_dir)
-                # noop sink, NOT count(): count() lets Catalyst prune every
-                # unreferenced select expression, so the computation being
-                # "benchmarked" (quality score, lang id, ...) would largely
-                # never execute and the timing would be a bare scan
-                df.write.format("noop").mode("overwrite").save()
-                dt = round(time.time() - t0, 3)
-                q_times[name] = min(q_times.get(name, dt), dt)
+    # min-of-N with INTERLEAVED sweeps (full sweep 1, then full sweep 2), so
+    # a host burst is decorrelated from any single query's reps
+    for _rep in range(QUERY_REPS):
+        for name in BENCH_QUERIES:
+            t0 = time.time()
+            df = queries[name](spark, sf_dir)
+            # noop sink, NOT count(): count() lets Catalyst prune every
+            # unreferenced select expression, so the computation being
+            # "benchmarked" (quality score, lang id, ...) would largely
+            # never execute and the timing would be a bare scan
+            df.write.format("noop").mode("overwrite").save()
+            dt = round(time.time() - t0, 3)
+            q_times[name] = min(q_times.get(name, dt), dt)
 
     out = {
         "metric": "cdc_merge_replay_events_per_sec",

@@ -22,11 +22,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so the
-    bench harness can run the identical job at two parallelism levels — the
-    sandbox surrogate for the north rule's N vs 4N executor clusters.
+    ``master`` defaults to ``local[N]`` with N = :func:`local_cpus`.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -53,6 +51,12 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_cpus() -> int:
+    """``local[N]`` parallelism: ``$SPARK_GRAFT_CPUS``, else the host's CPU
+    count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
 
 
 def _parse_local_threads(master: str) -> int:

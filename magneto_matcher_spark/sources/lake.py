@@ -44,6 +44,7 @@ import json
 import os
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -82,6 +83,16 @@ def _str_to_type(s: str) -> T.DataType:
         return _SIMPLE_TYPES[s]
     # array<...>, map<...>, decimal(...) etc. — Spark parses its own simpleString
     return T._parse_datatype_string(s)  # noqa: SLF001
+
+
+def footer_map(fn, files: list[str]) -> list:
+    """``fn`` over each file in a thread pool: footer reads are tiny
+    driver-side I/O and pyarrow releases the GIL, so the per-batch metadata
+    stretch doesn't grow with file count."""
+    if len(files) <= 1:
+        return [fn(f) for f in files]
+    with ThreadPoolExecutor(max_workers=min(16, len(files))) as pool:
+        return list(pool.map(fn, files))
 
 
 def bucket_expr_keyhash(cols: list[str], n_buckets: int) -> F.Column:
@@ -460,20 +471,10 @@ class LakeTable:
             .parquet(out_dir)
         )
         import pyarrow.parquet as pq
-        from concurrent.futures import ThreadPoolExecutor
 
         pattern = os.path.join(out_dir, *[f"{c}=*" for c in part_cols], "*.parquet")
         paths = sorted(glob.glob(pattern))
-        # footer reads are tiny I/O ops and pyarrow releases the GIL — a
-        # thread pool keeps this driver-serial stretch off the commit path's
-        # critical section at high parallelism
-        if len(paths) > 1:
-            with ThreadPoolExecutor(max_workers=min(16, len(paths))) as pool:
-                n_rows = list(
-                    pool.map(lambda p: pq.ParquetFile(p).metadata.num_rows, paths)
-                )
-        else:
-            n_rows = [pq.ParquetFile(p).metadata.num_rows for p in paths]
+        n_rows = footer_map(lambda p: pq.ParquetFile(p).metadata.num_rows, paths)
         entries = []
         for path, rows in zip(paths, n_rows):
             bucket = int(path.split("_bucket=")[1].split(os.sep)[0])

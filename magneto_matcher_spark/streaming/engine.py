@@ -39,7 +39,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from magneto_matcher_spark.plans.apply import dedup_max_lsn, normalize_payload
-from magneto_matcher_spark.sources.lake import SAFE_PROMOTIONS, LakeTable
+from magneto_matcher_spark.sources.lake import (
+    SAFE_PROMOTIONS, LakeTable, footer_map,
+)
 
 #: engine-internal columns that are never payload
 _SYSTEM_COLS = {"op"}
@@ -409,11 +411,26 @@ class CdcEngine:
         enforced at the serial commit.  CoW tables (whose merge runs at
         commit, after the previous one) and feeds whose on-disk schema
         deviates from the live schema (drift must serialize) stage one batch
-        at a time."""
+        at a time.
+
+        A failure at batch *i* (its stage or its commit) leaves what the
+        sequential driver leaves: batches before *i* committed, the staged
+        files of every batch after *i* discarded, the error re-raised.  The
+        failing batch's own files are kept — its commit may have landed
+        before maintenance raised."""
         if concurrency > 1 and self._can_replay_concurrently(batch_paths):
             with ThreadPoolExecutor(max_workers=concurrency) as pool:
-                staged = list(pool.map(self._stage, batch_paths))
-            return [self._commit(s) for s in staged]
+                futures = [pool.submit(self._stage, p) for p in batch_paths]
+            out = []
+            for i, fut in enumerate(futures):
+                try:
+                    out.append(self._commit(fut.result()))
+                except BaseException:
+                    for later in futures[i + 1:]:
+                        if later.exception() is None and later.result().entries:
+                            self.table.discard_staged(later.result().entries)
+                    raise
+            return out
         return [self._commit(self._stage(path)) for path in batch_paths]
 
     def _can_replay_concurrently(self, batch_paths: list[str]) -> bool:
@@ -448,7 +465,7 @@ class CdcEngine:
                     return False
             return True
 
-        return all(_footer_map(_ok, files))
+        return all(footer_map(_ok, files))
 
     def run_streaming(
         self,
@@ -513,16 +530,6 @@ def _parquet_files(path: str) -> list[str]:
     return sorted(glob.glob(os.path.join(path, "*.parquet")))
 
 
-def _footer_map(fn, files: list[str]) -> list:
-    """``fn`` over each file in a thread pool: footer reads are tiny
-    driver-side I/O and pyarrow releases the GIL, so the per-batch metadata
-    stretch doesn't grow with file count."""
-    if len(files) <= 1:
-        return [fn(f) for f in files]
-    with ThreadPoolExecutor(max_workers=min(16, len(files))) as pool:
-        return list(pool.map(fn, files))
-
-
 def _read_batch_dir(spark, path: str) -> DataFrame:
     """Read one replay batch dir.  When every file carries the same (name,
     raw arrow type) schema this is a plain ``spark.read.parquet(path)``.
@@ -547,7 +554,7 @@ def _read_batch_dir(spark, path: str) -> DataFrame:
     files = _parquet_files(path)
     groups: dict[tuple, list[str]] = {}
     arrow_types: dict[tuple, list] = {}
-    for fp, schema in zip(files, _footer_map(pq.read_schema, files)):
+    for fp, schema in zip(files, footer_map(pq.read_schema, files)):
         sig = tuple((f.name, str(f.type)) for f in schema)
         groups.setdefault(sig, []).append(fp)
         arrow_types[sig] = [(f.name, f.type) for f in schema]
@@ -747,7 +754,7 @@ def _footer_stats(
             f_hi = st.max if f_hi is None else max(f_hi, st.max)
         return (md.num_rows, f_lo, f_hi, f_null)
 
-    results = _footer_map(_one, files)
+    results = footer_map(_one, files)
     n = 0
     n_null = 0
     lo = hi = None

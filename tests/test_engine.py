@@ -197,6 +197,43 @@ def test_concurrent_replay_crash_mid_commit_resumes(spark, tmp_path, feed):
     assert _state_dict(table2) == _oracle(feed_rows)
 
 
+def test_failed_stage_leaves_same_table_under_both_replay_drivers(
+    spark, tmp_path, feed
+):
+    """Batch 3 of 4 carries one null LSN, so it fails to stage.  Sequential
+    and concurrent replay both raise and leave the same table: batches 1-2
+    committed, and no staged delta dir that the snapshot does not
+    reference (the concurrent driver staged batch 4 before the failure)."""
+    import glob
+    import os
+
+    paths = write_change_files(feed, str(tmp_path / "feed"), n_batches=4)
+    third = spark.read.parquet(paths[2])
+    lo = third.agg(F.min("lsn")).first()[0]
+    paths[2] = str(tmp_path / "dirty" / "batch_00002")
+    third.withColumn(
+        "lsn", F.when(F.col("lsn") == lo, F.lit(None)).otherwise(F.col("lsn"))
+    ).write.parquet(paths[2])
+    wm = _batch_his(spark, paths[:2])[1]
+    want = _oracle([r for r in feed.collect() if r["lsn"] <= wm])
+
+    for concurrency in (1, 3):
+        table = _mk_table(spark, tmp_path, f"c{concurrency}", write_mode="mor")
+        with pytest.raises(ValueError, match="null 'lsn'"):
+            CdcEngine(table).replay(paths, concurrency=concurrency)
+        assert table.committed_offset_end() == wm, concurrency
+        assert _state_dict(table) == want, concurrency
+        referenced = {
+            os.path.join(*e["path"].split(os.sep)[:2])
+            for e in table.manifest(table.current_snapshot())
+        }
+        staged = {
+            os.path.relpath(d, table.root)
+            for d in glob.glob(os.path.join(table.root, "data", "delta-stage-*"))
+        }
+        assert staged <= referenced, (concurrency, staged - referenced)
+
+
 def test_per_turn_text_equality_stable_ordering(spark, tmp_path, feed):
     """The north rule's verification invariant, verbatim: after a full
     replay, per-turn TEXT equality vs the sequential oracle under stable

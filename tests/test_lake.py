@@ -358,10 +358,11 @@ def test_mor_read_prunes_clean_buckets(spark, mor_table):
 
 
 def test_compact_restores_plain_scan_reads(spark, mor_table):
-    """Read-amplification bound (BENCH/read_amp.py's structural twin): a
-    delta-deep table resolves through a dedup Exchange; after compact() the
-    full-table read is a PLAIN SCAN (zero Exchanges, zero delta entries)
-    with byte-identical contents."""
+    """Read-amplification bound: a delta-deep table resolves through a
+    dedup Exchange; after compact() the full-table read is a PLAIN SCAN
+    (zero Exchanges, zero delta entries) with byte-identical contents.
+    ``perfbench``'s ``serve_mor`` reports the same cost as
+    ``lake.delta_files_at_read`` and ``lake.read_*``."""
     for i in range(5):  # depth-5: five incremental delta batches
         b = spark.createDataFrame(
             [_ev(10 * i + j, "I" if i == 0 else "U", f"conv{j}", 0, f"t{i}")

@@ -111,3 +111,56 @@ def test_window_covers_lsh_simhash_ivf_families():
     assert "ann_lsh_top1_selfmatch" in oracles
     assert "w6_ordered_head" not in _DRIVER_WINDOW
     assert "w6_ordered_head" in oracles
+
+
+def test_bench_emits_every_driver_contract_key(tmp_path):
+    """``bench.py`` at a tiny scale, in its own JVM: its one JSON line keeps
+    every key of the driver contract."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from tests.test_oracles_full import SF_DIR
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SF_DIR=SF_DIR,
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_EVENTS="20000",
+        SPARK_GRAFT_BATCHES="2",
+        SPARK_DRIVER_MEM="2g",
+        # Python workers import the package too; the cwd is not the repo
+        PYTHONPATH=os.pathsep.join(
+            p for p in (repo, os.environ.get("PYTHONPATH")) if p
+        ),
+    )
+    out = subprocess.run(
+        [sys.executable, os.path.join(repo, "bench.py")],
+        capture_output=True, text=True, timeout=900, env=env,
+        cwd=str(tmp_path),
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
+    assert len(lines) == 1, out.stdout[-2000:]
+    rec = json.loads(lines[0])
+    assert set(rec) == {
+        "by_write_mode", "cpus", "headline", "metric", "queries", "sf",
+        "unit", "value",
+    }
+    replay_keys = {
+        "batches", "duration_s", "events", "events_per_sec",
+        "final_rows_last_rewrite", "gc_ms", "per_batch_events_per_sec",
+        "rep_durations_s", "write_mode",
+    }
+    assert set(rec["headline"]) == replay_keys
+    assert set(rec["by_write_mode"]) == {"cow", "mor"}
+    for mode in ("cow", "mor"):
+        assert set(rec["by_write_mode"][mode]) == replay_keys, mode
+    assert set(rec["queries"]) == {
+        "w4_max_lsn_dedup", "cdc_replay_final_state", "dedup_exact",
+        "dedup_minhash_lsh", "dedup_simhash", "ann_bruteforce_topk",
+        "ann_ivf_topk", "text_quality_score", "text_lang_id",
+        "magneto_get_matches_f4", "magneto_e2e_matches", "w_sessionize_gaps",
+    }
