@@ -200,6 +200,12 @@ def main():
     n_batches = int(os.environ.get("SPARK_GRAFT_BATCHES", "5"))
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
+    # the Python workers the JVM starts import the package too, from
+    # whatever the working directory is
+    repo = os.path.dirname(os.path.abspath(__file__))
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, os.environ.get("PYTHONPATH")) if p
+    )
     spark = get_spark(
         app_name="bench",
         master=f"local[{cpus}]",

@@ -37,6 +37,12 @@ def local_df(spark: SparkSession, rows: list, schema) -> DataFrame:
             raise ValueError("empty rows need an explicit typed schema")
         schema = None
 
+    if not rows:
+        # PySpark builds an empty pandas frame as an RDD scan; an empty
+        # Arrow table stays a LocalRelation
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
     pdf = pd.DataFrame(list(rows), columns=names)
     if schema is not None:
         return spark.createDataFrame(pdf, schema=schema)

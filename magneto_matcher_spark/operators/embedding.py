@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from magneto_matcher_spark.localframe import local_df
+
 DEFAULT_DIM = 256
 
 
@@ -403,7 +405,7 @@ def knn_topk_ivf(
     if len(centroids) == 0:
         # empty corpus: return an empty top-k frame with the documented
         # schema, like knn_topk / knn_topk_lsh do.
-        return spark.createDataFrame([], out_schema).withColumnRenamed("q_id", query_id)
+        return local_df(spark, [], out_schema).withColumnRenamed("q_id", query_id)
     bc = spark.sparkContext.broadcast(centroids)
     cell_ids = np.arange(len(centroids))
 
@@ -412,7 +414,7 @@ def knn_topk_ivf(
     ).toPandas()
     if len(q_pdf) <= max_broadcast_queries:
         if len(q_pdf) == 0:
-            return spark.createDataFrame([], out_schema).withColumnRenamed(
+            return local_df(spark, [], out_schema).withColumnRenamed(
                 "q_id", query_id
             )
         q_ids = np.array(q_pdf[query_id].tolist())

@@ -315,7 +315,7 @@ def get_matches(
         params["_priorities"] = dict(DEFAULT_PRIORITIES)
 
     if not source_df.columns or not target_df.columns:  # P12 empty guard
-        return spark.createDataFrame([], MATCHES_OUT_SCHEMA)
+        return local_df(spark, [], MATCHES_OUT_SCHEMA)
 
     if clean:
         source_df = clean_df(source_df)
@@ -325,7 +325,7 @@ def get_matches(
         source_df, target_df, params, profiles
     )
     if matches is None:
-        return spark.createDataFrame([], MATCHES_OUT_SCHEMA)
+        return local_df(spark, [], MATCHES_OUT_SCHEMA)
 
     if params["use_bp_reranker"]:
         from magneto_matcher_spark.operators.rerank import bp_rerank

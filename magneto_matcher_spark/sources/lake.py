@@ -51,6 +51,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from magneto_matcher_spark.localframe import local_df
+
 # --- type (de)serialization -------------------------------------------------
 
 _SIMPLE_TYPES = {
@@ -112,7 +114,14 @@ def bucket_expr_keyhash(cols: list[str], n_buckets: int) -> F.Column:
 
 
 class LakeTable:
-    """A key-bucketed, snapshot-versioned table (single writer)."""
+    """A key-bucketed, snapshot-versioned table (single writer).
+
+    Scans are planned from table metadata: every manifest entry records the
+    schema id its file was written under, writes cast to that schema, and
+    reads pass it to Spark with the explicit file list.  Building
+    :meth:`read` therefore runs no footer-inference job, and in a
+    ``get_spark`` session (driver-side listing of explicit paths) no Spark
+    job at all, however many files the snapshot holds."""
 
     def __init__(self, spark: SparkSession, root: str, meta: dict):
         self.spark = spark
@@ -337,7 +346,6 @@ class LakeTable:
         shuffle.partitions, not bucket count)."""
         dirty = {e["bucket"] for e in manifest if e["kind"] == "delta"}
         clean = [e for e in manifest if e["bucket"] not in dirty]
-        empty = self.spark.createDataFrame([], self._schema_for(read_schema_id))
         parts: list[DataFrame] = []
         data = [e for e in clean if e["kind"] == "data"]
         if data:
@@ -358,7 +366,10 @@ class LakeTable:
             overlay = [e for e in sub if e["kind"] == "delta"] + [
                 e for e in sub if e["kind"] == "tombstone"
             ]
-            base = self._read_manifest(data, read_schema_id) if data else empty
+            base = (
+                self._read_manifest(data, read_schema_id) if data
+                else self._empty(read_schema_id)
+            )
             winners = dedup_max_lsn(
                 base.withColumn("op", F.lit("U")).unionByName(
                     self._read_manifest(overlay, read_schema_id, extra_cols=("op",))
@@ -370,8 +381,14 @@ class LakeTable:
             parts.append(winners)
 
         if not parts:
+            empty = self._empty(read_schema_id)
             return empty.withColumn("op", F.lit("U")) if keep_tombstones else empty
         return reduce(DataFrame.unionByName, parts)
+
+    def _empty(self, schema_id: int) -> DataFrame:
+        """A typed empty frame as a LocalRelation: no RDD, no Python-worker
+        scan in the plans that union it."""
+        return local_df(self.spark, [], self._schema_for(schema_id))
 
     def _schema_for(self, schema_id: int) -> T.StructType:
         return T.StructType(
@@ -387,8 +404,13 @@ class LakeTable:
         read_schema_id: int,
         extra_cols: tuple[str, ...] = (),
     ) -> DataFrame:
-        """``extra_cols``: system columns present in the files verbatim
-        (outside the field-ID schema), e.g. delta files' ``op``."""
+        """``extra_cols``: string system columns present in the files
+        verbatim (outside the field-ID schema), e.g. delta files' ``op``.
+
+        Planned from metadata alone: each entry's ``schema_id`` names the
+        schema its file was written under (``_write_data_files`` casts to
+        it), so every file group is read with that schema given, and Spark
+        infers nothing from the footers."""
         target_fields = self._schema_by_id(read_schema_id)["fields"]
         by_schema: dict[int, list[str]] = {}
         for entry in manifest:
@@ -399,7 +421,10 @@ class LakeTable:
         for schema_id, paths in by_schema.items():
             file_fields = self._schema_by_id(schema_id)["fields"]
             by_field_id = {f["id"]: f["name"] for f in file_fields}
-            df = self.spark.read.parquet(*paths)
+            file_schema = self._schema_for(schema_id)
+            for c in extra_cols:
+                file_schema = file_schema.add(c, T.StringType())
+            df = self.spark.read.schema(file_schema).parquet(*paths)
             cols = []
             for tf in target_fields:
                 src_name = by_field_id.get(tf["id"])
@@ -458,6 +483,12 @@ class LakeTable:
         two writes to drop one ~zero-entropy column would double the job
         count on the hottest path."""
         out_dir = os.path.join(self.root, "data", dirname)
+        # the files' physical types must be the current schema's: reads
+        # take them from the entry's schema_id, not from the footers
+        want = {f.name: f.dataType for f in self.schema.fields}
+        for f in df.schema.fields:
+            if f.name in want and f.dataType.simpleString() != want[f.name].simpleString():
+                df = df.withColumn(f.name, F.col(f.name).cast(want[f.name]))
         part_cols = ["_bucket"]
         if split_tombstones_on is not None:
             df = df.withColumn(

@@ -780,3 +780,79 @@ def test_every_write_path_writes_one_file_per_bucket_and_kind(spark, tmp_path):
     one_per(Counter((e["bucket"], e["kind"]) for e in staged), {"delta"})
     mor.commit_delta(staged)
     one_per(written(mor, mor.compact), {"data", "tombstone"})
+
+
+def _build_jobs(spark, build):
+    """``build()``'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"build-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, "jobs run while building a frame")
+    try:
+        df = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_is_planned_from_metadata_with_zero_jobs(spark, tmp_path):
+    """Building ``read()`` runs no Spark job: each file group is read with
+    the schema its manifest entries name (no footer inference), and the
+    file index over more than 32 explicit paths is listed on the driver (no
+    parallel-listing job)."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "mor8"), TABLE_SCHEMA, key=TRANSCRIPT_KEY,
+        n_buckets=8, write_mode="mor",
+    )
+    for i in range(6):
+        b = spark.createDataFrame(
+            [_ev(100 * i + j, "I" if i == 0 else "U", f"conv{j}", 0, f"t{i}")
+             for j in range(64)],
+            CHANGE_FEED_SCHEMA,
+        )
+        t.merge(dedup_max_lsn(b))
+    manifest = t.manifest(t.current_snapshot())
+    assert len(manifest) == 48 and {e["kind"] for e in manifest} == {"delta"}
+
+    df, jobs = _build_jobs(spark, t.read)
+    assert jobs == 0
+    rows = df.collect()
+    assert len(rows) == 64 and {r["text"] for r in rows} == {"t5"}
+
+
+def test_empty_table_plans_scan_no_rdd(spark, table):
+    """The typed empty frame behind an empty table's read and its first
+    merge is a LocalRelation: no ``Scan ExistingRDD`` (a parallelize and a
+    Python-worker scan) in either executed plan."""
+    from magneto_matcher_spark.localframe import local_df
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "ExistingRDD" not in plan(table.read())
+    batch = local_df(spark, [_ev(1, "I", "c1", 0), _ev(2, "U", "c2", 0)],
+                     CHANGE_FEED_SCHEMA)
+    touched = list(range(table.n_buckets))
+    assert "ExistingRDD" not in plan(table.merged_frame(batch, touched))
+    table.merge(batch)
+    assert table.read().count() == 2
+
+
+def test_files_are_written_in_the_table_schema_types(spark, table):
+    """A frame whose column types differ from the table's (``turn_idx``
+    inferred as bigint, table int) is cast on write, so the schema id a
+    manifest entry records is its file's physical schema — the schema its
+    read passes to Spark."""
+    import pyarrow.parquet as pq
+
+    df = spark.createDataFrame(
+        [(1, "c1", 0, "user", "x", "grep", datetime.datetime(2024, 1, 1))],
+        ["lsn", "conv_id", "turn_idx", "role", "text", "tool", "ts"],
+    )
+    assert dict(df.dtypes)["turn_idx"] == "bigint"
+    table.append(df)
+    (entry,) = table.manifest(table.current_snapshot())
+    footer = pq.read_schema(os.path.join(table.root, entry["path"]))
+    assert str(footer.field("turn_idx").type) == "int32"
+    assert [(r["conv_id"], r["turn_idx"]) for r in table.read().collect()] == [("c1", 0)]

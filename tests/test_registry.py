@@ -114,8 +114,9 @@ def test_window_covers_lsh_simhash_ivf_families():
 
 
 def test_bench_emits_every_driver_contract_key(tmp_path):
-    """``bench.py`` at a tiny scale, in its own JVM: its one JSON line keeps
-    every key of the driver contract."""
+    """``bench.py`` at a tiny scale, in its own JVM, started from a directory
+    outside the repo: its one JSON line keeps every key of the driver
+    contract."""
     import json
     import os
     import subprocess
@@ -131,10 +132,6 @@ def test_bench_emits_every_driver_contract_key(tmp_path):
         SPARK_GRAFT_EVENTS="20000",
         SPARK_GRAFT_BATCHES="2",
         SPARK_DRIVER_MEM="2g",
-        # Python workers import the package too; the cwd is not the repo
-        PYTHONPATH=os.pathsep.join(
-            p for p in (repo, os.environ.get("PYTHONPATH")) if p
-        ),
     )
     out = subprocess.run(
         [sys.executable, os.path.join(repo, "bench.py")],
