@@ -3,15 +3,21 @@
 Per micro-batch: normalize payload (P8-style expressions, no per-row Python) →
 max-LSN dedup per (conv_id, turn_idx) → MERGE into the current table state.
 
-The max-LSN dedup is ONE aggregation, ``groupBy(key).agg(max_by(payload,
-lsn))``.  Catalyst plans it as partial + final aggregation: with a free
-layout the partial half combines hot keys map-side BELOW the exchange; with
-the keyhash pin (``n_partitions``) the explicit repartition IS the exchange
-and both halves sit above it — one exchange of raw rows, combine after the
-wire (the measured one-exchange tradeoff; see merge_into_frame's plan-shape
-note).  A two-phase salted form (spread a hot key over salt reducers, then
-take the global winner) measured slower than this one aggregation on a
-50%-hot-key feed in both write modes (ROADMAP item 2); it survives only as
+The max-LSN dedup (:func:`dedup_max_lsn`) takes its physical form from the
+batch's column types.  A payload with a variable-width column (the
+transcripts' strings) keeps each key's row with ``row_number() over
+(partition by key order by lsn desc) = 1``: ``Sort`` + ``WindowGroupLimit``
++ ``Window``, with a partial ``WindowGroupLimit`` below the exchange when the
+layout is free.  An all-fixed-width payload runs per-column ``max_by`` as a
+partial+final ``HashAggregate``.  With the keyhash pin (``n_partitions``)
+the explicit repartition IS the exchange and the whole dedup sits above it
+— one exchange of raw rows (the measured one-exchange tradeoff; see
+merge_into_frame's plan-shape note).  Rejected forms (ROADMAP item 1): a
+hash ``max(lsn)`` joined back to the batch (slower, and the join
+re-shuffles, losing one file per bucket) and ``max_by`` over a struct (a
+``SortAggregate`` too).  A two-phase salted form (spread a hot key over
+salt reducers, then take the global winner) measured slower than one
+aggregation on a 50%-hot-key feed in both write modes; it survives only as
 the registry's ``w4_salted_dedup`` query.
 
 At 100 TB: the batch is the small side; dedup is the only full shuffle of the
@@ -20,8 +26,9 @@ batch and it shrinks the batch to ≤ |keys| rows *before* the MERGE aggregation
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from magneto_matcher_spark.functions.cleaning import null_normalize_expr
 from magneto_matcher_spark.schemas import TRANSCRIPT_KEY
@@ -52,6 +59,16 @@ def normalize_payload(batch: DataFrame) -> DataFrame:
     return out
 
 
+#: types an aggregation buffer can hold in place in an ``UnsafeRow`` (Spark's
+#: ``UnsafeRow.isMutable``): a ``max_by`` over only these plans as a
+#: codegen'd ``HashAggregate``; any other type forces ``SortAggregate``.
+_FIXED_WIDTH = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.DecimalType, T.DateType, T.TimestampType,
+    T.TimestampNTZType,
+)
+
+
 def dedup_max_lsn(
     batch: DataFrame,
     key: list[str] | None = None,
@@ -63,34 +80,52 @@ def dedup_max_lsn(
     Returns a DataFrame with the same schema as ``batch``, ≤ one row per key.
 
     ``n_partitions`` pins the exchange to ``repartition(n, *key)`` (which
-    satisfies the aggregation's distribution, so no extra exchange appears).
+    satisfies the dedup's distribution, so no extra exchange appears).
     With a keyhash-bucketed table and ``n = n_buckets``, the dedup shuffle
     IS the bucket layout — partition p holds exactly bucket p's rows (see
     sources/lake.py bucket_expr_keyhash) and the delta/merge write skips its
     own repartition.
 
-    Per-column max_by, NOT max_by(struct(payload), lsn): a struct-typed
-    aggregation buffer is immutable, which forces the whole aggregate into
-    SortAggregate (two full sorts of every batch row — measured 0.37 s vs
-    0.26 s on a 1M-row feed); per-column buffers are scalars, so columns the
-    caller never reads (e.g. a string op) are PRUNED by Catalyst and the
-    all-primitive remainder runs as a partial+final HashAggregate.  Exact
-    under the engine's WAL contract (LSN unique per key, stamp_root total
-    order): every max_by shares the one ordering column, so all columns come
-    from the same winning row; equal-LSN rows are exact redeliveries
-    (identical payloads), for which column mixing is a no-op.
+    The physical form follows the non-key column types:
+
+    - **all fixed-width** (``_FIXED_WIDTH``): per-column ``max_by``, a
+      codegen'd partial+final ``HashAggregate``.  Every ``max_by`` shares the
+      one ordering column, so all columns come from the same winning row
+      under the WAL contract (LSN unique per key).  On ``w4_max_lsn_dedup``
+      at sf0.1 (7,500 winners) the window form took 0.37 s against 0.25 s
+      (0.62 against 0.59 JVM CPU-s), hence the split.
+    - **any variable-width column** (the engine's string payloads): keep the
+      row with ``row_number() over (partition by key order by lsn desc) =
+      1`` — ``Sort`` + ``WindowGroupLimit`` + ``Window``, never the
+      interpreted ``SortAggregate`` that string ``max_by`` buffers force.
+      On ``perfbench`` ``serve_mor`` (11 interleaved pairs, 4 vCPUs)
+      ``cpu_per_op_s`` fell 1.901 → 1.604 s and ``lake.write_task_s``
+      0.36–0.46 → 0.25–0.31 s.  Ties on the max LSN keep exactly one whole
+      input row; columns are never mixed across rows.
+
+    Null LSNs lose in both forms: a key resolves to its max non-null-LSN
+    row.  A key whose LSNs are all null gets its key with every other
+    column null from ``max_by``, and one of its rows from the window (the
+    engine rejects null LSNs before it dedups).
     """
     key = key or TRANSCRIPT_KEY
     if n_partitions is not None:
         batch = batch.repartition(n_partitions, *[F.col(c) for c in key])
-    aggs = [
-        F.max(lsn_col).alias(c)
-        if c == lsn_col
-        else F.max_by(F.col(c), F.col(lsn_col)).alias(c)
-        for c in batch.columns
-        if c not in key
-    ]
-    return batch.groupBy(*key).agg(*aggs).select(*batch.columns)
+    payload = [f for f in batch.schema.fields if f.name not in key]
+    if all(isinstance(f.dataType, _FIXED_WIDTH) for f in payload):
+        aggs = [
+            F.max(lsn_col).alias(f.name)
+            if f.name == lsn_col
+            else F.max_by(F.col(f.name), F.col(lsn_col)).alias(f.name)
+            for f in payload
+        ]
+        return batch.groupBy(*key).agg(*aggs).select(*batch.columns)
+    order = Window.partitionBy(*key).orderBy(F.col(lsn_col).desc())
+    return (
+        batch.withColumn("_rn", F.row_number().over(order))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
 
 
 def merge_into_frame(

@@ -72,7 +72,7 @@ def _events_feed(spark, sf_dir):
 def w4_max_lsn_dedup(spark, sf_dir):
     from magneto_matcher_spark.plans.apply import dedup_max_lsn
 
-    feed = _events_feed(spark, sf_dir)
+    feed = _events_feed(spark, sf_dir).drop("op")
     return dedup_max_lsn(feed, key=["user_id", "event_type"]).select(
         "user_id", "event_type", "lsn", "value"
     )
@@ -89,7 +89,7 @@ def w4_salted_dedup(spark, sf_dir):
     from magneto_matcher_spark.plans.apply import dedup_max_lsn
 
     key = ["user_id", "event_type"]
-    salted = _events_feed(spark, sf_dir).withColumn(
+    salted = _events_feed(spark, sf_dir).drop("op").withColumn(
         "_salt", F.pmod(F.xxhash64(F.col("lsn")), F.lit(16))
     )
     phase1 = dedup_max_lsn(
@@ -129,12 +129,12 @@ def cdc_replay_final_state(spark, sf_dir):
 
     The delete filter tests the winner's lsn directly (op is DERIVED from
     lsn in this feed: op='D' ⟺ lsn % 10 == 0, see _events_feed), so the
-    string op column is never consumed downstream of the dedup — Catalyst
-    prunes its max_by and the all-primitive aggregate stays a
-    HashAggregate instead of falling back to SortAggregate."""
+    string op column is dropped before the dedup: every non-key column is
+    then fixed-width and ``dedup_max_lsn`` plans a HashAggregate instead of
+    its window form."""
     from magneto_matcher_spark.plans.apply import dedup_max_lsn
 
-    feed = _events_feed(spark, sf_dir)
+    feed = _events_feed(spark, sf_dir).drop("op")
     winners = dedup_max_lsn(feed, key=["user_id", "event_type"])
     return winners.filter(F.col("lsn") % 10 != 0).select(
         "user_id", "event_type", "lsn", "value"

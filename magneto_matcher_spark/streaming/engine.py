@@ -37,6 +37,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from magneto_matcher_spark.plans.apply import dedup_max_lsn, normalize_payload
 from magneto_matcher_spark.sources.lake import (
@@ -530,9 +531,46 @@ def _parquet_files(path: str) -> list[str]:
     return sorted(glob.glob(os.path.join(path, "*.parquet")))
 
 
+#: the footer key under which Spark's parquet writer stores its schema
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _inferred_schema(arrow_schema) -> T.StructType | None:
+    """The schema ``spark.read.parquet`` infers from a file with this
+    footer, or None where that is not certain.  Spark reads back the schema
+    its own writer stored in the footer.  Other writers' arrow types map
+    through ``from_arrow_schema`` where ``_arrow_type_str`` classifies them,
+    except two that are left to Spark: nanosecond timestamps (arrow shows
+    an INT96 timestamp, which Spark reads as ``timestamp``, the same way)
+    and ``date64`` (which ``from_arrow_schema`` rejects)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    stored = (arrow_schema.metadata or {}).get(_SPARK_ROW_METADATA)
+    if stored is not None:
+        return T.StructType.fromJson(json.loads(stored))
+    if all(
+        _arrow_type_str(t) is not None
+        and not pa.types.is_date64(t)
+        and getattr(t, "unit", None) != "ns"
+        for t in arrow_schema.types
+    ):
+        return from_arrow_schema(arrow_schema, prefer_timestamp_ntz=True)
+    return None
+
+
+def _read_parquet(spark, arrow_schema, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with the schema taken from a footer
+    already in hand, so building the read runs no inference job."""
+    schema = _inferred_schema(arrow_schema)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
+
+
 def _read_batch_dir(spark, path: str) -> DataFrame:
     """Read one replay batch dir.  When every file carries the same (name,
-    raw arrow type) schema this is a plain ``spark.read.parquet(path)``.
+    raw arrow type) schema this is a plain ``spark.read.parquet(path)``,
+    given the schema from the footers (:func:`_read_parquet`).
 
     Files that disagree (a producer-side change landed mid-batch) can't be
     read that way: single-footer inference either fails at scan time
@@ -553,13 +591,15 @@ def _read_batch_dir(spark, path: str) -> DataFrame:
 
     files = _parquet_files(path)
     groups: dict[tuple, list[str]] = {}
-    arrow_types: dict[tuple, list] = {}
+    arrow_schemas: dict[tuple, object] = {}
     for fp, schema in zip(files, footer_map(pq.read_schema, files)):
         sig = tuple((f.name, str(f.type)) for f in schema)
         groups.setdefault(sig, []).append(fp)
-        arrow_types[sig] = [(f.name, f.type) for f in schema]
-    if len(groups) <= 1:
+        arrow_schemas[sig] = schema
+    if not groups:
         return spark.read.parquet(path)
+    if len(groups) == 1:
+        return _read_parquet(spark, *arrow_schemas.values(), path)
 
     # per-column raw variants across groups
     raw_variants: dict[str, set] = {}
@@ -571,8 +611,8 @@ def _read_batch_dir(spark, path: str) -> DataFrame:
     union_types: dict[str, str] = {}
     classified: dict[tuple, str | None] = {}
     for sig in groups:
-        for name, atype in arrow_types[sig]:
-            classified[(name, str(atype))] = _arrow_type_str(atype)
+        for f in arrow_schemas[sig]:
+            classified[(f.name, str(f.type))] = _arrow_type_str(f.type)
     for name, variants in raw_variants.items():
         if len(variants) == 1:
             continue
@@ -600,7 +640,7 @@ def _read_batch_dir(spark, path: str) -> DataFrame:
 
     parts = []
     for sig, group_files in groups.items():
-        df = spark.read.parquet(*group_files)
+        df = _read_parquet(spark, arrow_schemas[sig], *group_files)
         for name, raw in sig:
             want = union_types.get(name)
             if want is not None and classified[(name, raw)] != want:

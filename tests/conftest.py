@@ -21,6 +21,20 @@ def spark():
     yield s
 
 
+def build_jobs(spark, build):
+    """``build()``'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"build-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, "jobs run while building a frame")
+    try:
+        df = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def sequential_replay_oracle(events):
     """Pure-Python oracle: apply change events one-by-one in LSN order.
 

@@ -86,6 +86,42 @@ def test_dedup_max_lsn_matches_oracle(small_feed, n_partitions):
         assert r.asDict() == expected[(r["conv_id"], r["turn_idx"])].asDict()
 
 
+
+@pytest.mark.parametrize("n_partitions", [None, 3])
+def test_dedup_max_lsn_tie_keeps_one_whole_row(spark, n_partitions):
+    """Two events of one key share its max LSN but carry different string
+    payloads: exactly one row comes back, and it is one of the inputs (no
+    columns mixed from both)."""
+    rows = [
+        ("k", 1, 5, "user", "first", None),
+        ("k", 1, 5, "assistant", None, "grep"),
+        ("k", 1, 3, "tool", "old", "ls"),
+        ("j", 0, 2, "user", "other", None),
+    ]
+    batch = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, lsn long, role string, text string, tool string",
+    ).repartition(4)
+    out = dedup_max_lsn(batch, n_partitions=n_partitions).collect()
+    by_key = {(r["conv_id"], r["turn_idx"]): tuple(r) for r in out}
+    assert len(out) == 2
+    assert by_key[("k", 1)] in {tuple(r) for r in rows[:2]}
+    assert by_key[("j", 0)] == rows[3]
+
+
+@pytest.mark.parametrize("payload", ["text string", "score double"])
+def test_dedup_max_lsn_null_lsn_loses(spark, payload):
+    """A key with null and non-null LSNs resolves to its max non-null-LSN
+    row, in the window form (string payload) and the aggregate form
+    (fixed-width payload) alike."""
+    value = (lambda v: f"v{v}") if payload.startswith("text") else float
+    rows = [("k", 0, None, value(9)), ("k", 0, 4, value(4)),
+            ("k", 0, 7, value(7)), ("k", 0, None, value(8))]
+    batch = spark.createDataFrame(
+        rows, f"conv_id string, turn_idx int, lsn long, {payload}"
+    ).repartition(3)
+    assert [tuple(r) for r in dedup_max_lsn(batch).collect()] == [rows[2]]
+
 def test_single_batch_apply_matches_sequential_oracle(spark, small_feed):
     state = apply_batch_to_frame(_empty_target(spark), small_feed)
     events = [r.asDict() for r in small_feed.collect()]

@@ -14,6 +14,8 @@ from magneto_matcher_spark.sources.changefeed import (
 from magneto_matcher_spark.sources.lake import LakeTable
 from magneto_matcher_spark.streaming.engine import CdcEngine
 
+from tests.conftest import build_jobs
+
 TABLE_SCHEMA = T.StructType([f for f in CHANGE_FEED_SCHEMA.fields if f.name != "op"])
 
 
@@ -1202,3 +1204,53 @@ def test_stage_commit_call_pattern(spark, tmp_path, feed, monkeypatch):
         }
         got = {attr: calls.get(attr, 0) for attr in want}
         assert got == want, (mode, concurrency)
+
+
+def test_batch_read_is_planned_from_footers_with_zero_jobs(spark, tmp_path, feed):
+    """Building a replay batch's read runs no Spark job: the schema comes
+    from the footers the engine has already read, and it equals what
+    ``spark.read.parquet`` infers — for the Spark-written feed (INT96
+    timestamps) and for a pyarrow-written dir with a UTC timestamp, an
+    int32 ``turn_idx``, an all-null string ``tool`` and a timestamp without
+    a time zone."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from magneto_matcher_spark.streaming.engine import _read_batch_dir
+
+    spark_dir = write_change_files(feed, str(tmp_path / "feed"), n_batches=2)[0]
+    arrow_dir = tmp_path / "arrow"
+    arrow_dir.mkdir()
+    utc = datetime.timezone.utc
+    for i in range(2):
+        pq.write_table(
+            pa.table({
+                "lsn": pa.array([2 * i, 2 * i + 1], pa.int64()),
+                "op": ["I", "U"],
+                "conv_id": ["c1", "c2"],
+                "turn_idx": pa.array([0, i], pa.int32()),
+                "text": ["a", "b"],
+                "tool": pa.array([None, None], pa.string()),
+                "ts": pa.array(
+                    [datetime.datetime(2024, 1, 1, i, tzinfo=utc)] * 2,
+                    pa.timestamp("us", tz="UTC"),
+                ),
+                "local_ts": pa.array(
+                    [datetime.datetime(2024, 1, 1, i)] * 2, pa.timestamp("us")
+                ),
+            }),
+            str(arrow_dir / f"part-{i}.parquet"),
+        )
+    for path in (spark_dir, str(arrow_dir)):
+        df, jobs = build_jobs(spark, lambda: _read_batch_dir(spark, path))
+        inferred = spark.read.parquet(path)
+        assert jobs == 0, path
+        assert df.schema == inferred.schema, path
+        assert sorted(df.collect()) == sorted(inferred.collect())
+    types = {f.name: f.dataType for f in df.schema.fields}
+    assert types["ts"] == T.TimestampType()
+    assert types["turn_idx"] == T.IntegerType()
+    assert types["tool"] == T.StringType()
+    assert types["local_ts"] == T.TimestampNTZType()

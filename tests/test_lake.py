@@ -13,6 +13,8 @@ from magneto_matcher_spark.plans.apply import dedup_max_lsn
 from magneto_matcher_spark.schemas import CHANGE_FEED_SCHEMA, TRANSCRIPT_KEY
 from magneto_matcher_spark.sources.lake import LakeTable, bucket_expr_keyhash
 
+from tests.conftest import build_jobs
+
 TABLE_SCHEMA = T.StructType([f for f in CHANGE_FEED_SCHEMA.fields if f.name != "op"])
 
 
@@ -782,18 +784,62 @@ def test_every_write_path_writes_one_file_per_bucket_and_kind(spark, tmp_path):
     one_per(written(mor, mor.compact), {"data", "tombstone"})
 
 
-def _build_jobs(spark, build):
-    """``build()``'s result and the number of Spark jobs it ran."""
-    sc = spark.sparkContext
-    group = f"build-{os.urandom(4).hex()}"
-    sc.setJobGroup(group, "jobs run while building a frame")
-    try:
-        df = build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+def test_mor_dedup_plans_window_group_limit_not_sort_aggregate(
+    spark, tmp_path, mor_table, monkeypatch
+):
+    """Every merge-on-read dedup — the engine's staged dedup, MoR
+    ``merge``, ``read()`` over dirty buckets and ``compact()`` — keeps each
+    key's max-LSN row with a ``row_number() = 1`` window
+    (``WindowGroupLimit``), never a ``SortAggregate``; the paths pinned to
+    the bucket layout keep exactly one exchange."""
+    from magneto_matcher_spark.sources.changefeed import write_change_files
+    from magneto_matcher_spark.streaming.engine import CdcEngine
+
+    def executed(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "WindowGroupLimit" in plan and "SortAggregate" not in plan, plan
+        return plan
+
+    def one_exchange(plan):
+        # a cached input prints its final and its initial plan
+        assert plan.split("== Initial Plan ==")[0].count("Exchange") == 1, plan
+
+    written = []
+    write = LakeTable._write_data_files
+
+    def spy(self, df, *a, **k):
+        written.append(executed(df))
+        return write(self, df, *a, **k)
+
+    monkeypatch.setattr(LakeTable, "_write_data_files", spy)
+
+    feed = spark.createDataFrame(
+        [_ev(i, "I" if i < 8 else "U", f"conv{i % 8}", 0, f"t{i}") for i in range(24)],
+        CHANGE_FEED_SCHEMA,
+    )
+    paths = write_change_files(feed, str(tmp_path / "feed"), n_batches=2)
+    CdcEngine(mor_table).replay(paths)
+    assert len(written) == 2
+    mor_table.merge(
+        spark.createDataFrame(
+            [_ev(30 + j, "U", f"conv{j}", 0, "m") for j in range(4)]
+            + [_ev(40, "D", "conv5", 0)],
+            CHANGE_FEED_SCHEMA,
+        )
+    )
+    assert len(written) == 3
+    for plan in written:
+        one_exchange(plan)
+    executed(mor_table.read())
+    before = {(r["conv_id"], r["text"]) for r in mor_table.read().collect()}
+
+    written.clear()
+    mor_table.compact()
+    assert len(written) == 2  # data, then tombstones
+    for plan in written:
+        one_exchange(plan)
+    after = {(r["conv_id"], r["text"]) for r in mor_table.read().collect()}
+    assert after == before and len(after) == 7
 
 
 def test_read_is_planned_from_metadata_with_zero_jobs(spark, tmp_path):
@@ -815,7 +861,7 @@ def test_read_is_planned_from_metadata_with_zero_jobs(spark, tmp_path):
     manifest = t.manifest(t.current_snapshot())
     assert len(manifest) == 48 and {e["kind"] for e in manifest} == {"delta"}
 
-    df, jobs = _build_jobs(spark, t.read)
+    df, jobs = build_jobs(spark, t.read)
     assert jobs == 0
     rows = df.collect()
     assert len(rows) == 64 and {r["text"] for r in rows} == {"t5"}

@@ -246,3 +246,16 @@ def test_cdc_replay_final_state_equals_op_filtered_dedup(spark):
     want = winners.filter(F.col("op") != "D").select(*cols).collect()
     got = cdc_replay_final_state(spark, SF001_DIR).select(*cols).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+@pytest.mark.parametrize("name", ["w4_max_lsn_dedup", "cdc_replay_final_state"])
+def test_registry_dedup_queries_plan_hash_aggregate(spark, name):
+    """The registry's max-LSN dedups drop the unused string ``op`` before
+    ``dedup_max_lsn``, so every non-key column is fixed-width and the dedup
+    is a partial+final HashAggregate, not the window form."""
+    from magneto_matcher_spark.queries import build_queries
+
+    df = build_queries()[name](spark, SF001_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" in plan, plan
+    assert "Window" not in plan and "SortAggregate" not in plan, plan
