@@ -82,9 +82,10 @@ def dedup_max_lsn(
     ``n_partitions`` pins the exchange to ``repartition(n, *key)`` (which
     satisfies the dedup's distribution, so no extra exchange appears).
     With a keyhash-bucketed table and ``n = n_buckets``, the dedup shuffle
-    IS the bucket layout — partition p holds exactly bucket p's rows (see
+    IS the bucket layout — each bucket's rows are in exactly one task (see
     sources/lake.py bucket_expr_keyhash) and the delta/merge write skips its
-    own repartition.
+    own repartition, running the dedup and the write in at most one task
+    per core.
 
     The physical form follows the non-key column types:
 
@@ -152,9 +153,11 @@ def merge_into_frame(
     aggregation is the within-batch max-LSN dedup.
 
     ``n_partitions`` pins the exchange to ``repartition(n, *key)``, which
-    satisfies the groupBy's distribution, so with ``n = n_buckets`` the
-    table rewrite adds no repartition — ONE exchange for dedup + merge +
-    bucket layout.  Both aggregate halves then sit above that exchange (rows cross
+    satisfies the groupBy's distribution, so with ``n = n_buckets`` each
+    bucket's rows are in exactly one task and the table rewrite adds no
+    repartition — ONE exchange for dedup + merge + bucket layout, with the
+    merge and the write in at most one task per core.  Both aggregate
+    halves then sit above that exchange (rows cross
     the wire un-combined); measured ~1.6x faster on delta writes than
     combining below a default exchange and shuffling again to the bucket
     layout."""

@@ -103,11 +103,13 @@ def bucket_expr_keyhash(cols: list[str], n_buckets: int) -> F.Column:
     ``F.hash`` is the same murmur3(seed 42) Spark's ``HashPartitioning``
     uses, and partition index = pmod(hash, numPartitions) — so for a frame
     whose last exchange is ``repartition(n_buckets, *key)`` (or any multiple
-    of n_buckets), every task already holds exactly the rows of one bucket
-    (partition p ≡ bucket p mod n_buckets).  That lets the delta/merge
-    writes reuse the dedup shuffle as the bucket layout and skip their own
-    repartition — ONE exchange per micro-batch instead of two (measured
-    8→32-core scaling 0.44 → 0.67 and ~1.6x absolute at 32 cores)."""
+    of n_buckets), each bucket's rows are in exactly one task (partition p
+    holds bucket p mod n_buckets).  That lets the delta/merge writes reuse
+    the dedup shuffle as the bucket layout and skip their own repartition —
+    ONE exchange per micro-batch instead of two (measured 8→32-core scaling
+    0.44 → 0.67 and ~1.6x absolute at 32 cores).  The writer then
+    coalesces to at most one task per core, which keeps each bucket in one
+    task (:meth:`LakeTable._write_data_files`)."""
     return F.pmod(
         F.hash(*[F.col(c) for c in cols]), F.lit(n_buckets)
     ).cast("int")
@@ -468,11 +470,15 @@ class LakeTable:
         marks merge-on-read change files (payload + ``op``).
 
         Contract: ``df``'s last exchange is ``repartition(n_buckets, *key)``,
-        so every task already holds exactly one bucket's rows
+        so each bucket's rows are in exactly one task
         (:func:`bucket_expr_keyhash`) and the write adds no shuffle of its
-        own — one file per bucket.  ``partitionBy`` routes rows by value, so
-        a caller that breaks the contract stays correct (more files per
-        bucket).
+        own — one file per bucket.  The write runs in ``min(n_buckets,
+        defaultParallelism)`` tasks: a narrow ``coalesce`` merges whole
+        buckets into each task, so each bucket stays in one task and the
+        per-task fixed cost (the Hadoop configuration every write task
+        deserializes) is paid at most once per core.  ``partitionBy`` routes
+        rows by value, so a caller that breaks the contract stays correct
+        (more files per bucket).
 
         ``split_tombstones_on='op'``: ONE write job routes delete winners
         (op='D') into ``kind='tombstone'`` files and everything else into
@@ -495,8 +501,15 @@ class LakeTable:
                 "_tomb", (F.col(split_tombstones_on) == F.lit("D")).cast("int")
             )
             part_cols = ["_tomb", "_bucket"]
+        # each write task deserializes the session's Hadoop conf twice (job
+        # description + stats tracker): one task per core, not per bucket
+        n_tasks = min(self.n_buckets, self.spark.sparkContext.defaultParallelism)
         (
-            df.sortWithinPartitions(*self.key)  # W7: file-level determinism
+            df.coalesce(n_tasks)
+            # W7: file-level determinism.  The partition columns lead: the
+            # writer needs that order, and a key-only sort was dropped under
+            # the partition-column sort the planned write added above it
+            .sortWithinPartitions(*part_cols, *self.key)
             .write.partitionBy(*part_cols)
             .mode("overwrite")
             .parquet(out_dir)
@@ -694,7 +707,8 @@ class LakeTable:
         window: callers must resolve drift before staging (the engine
         serializes on drift).  ``winners`` holds ≤1 row per key and its last
         exchange is ``repartition(n_buckets, *key)`` — ``dedup_max_lsn(...,
-        n_partitions=n_buckets)`` — so the write adds no shuffle."""
+        n_partitions=n_buckets)`` — so each bucket is in one task, the write
+        adds no shuffle and runs in at most one task per core."""
         if self.meta["write_mode"] != "mor":
             raise ValueError("stage_delta requires write_mode='mor'")
         batch = self._with_bucket(winners.select(*self.column_names, "op"))

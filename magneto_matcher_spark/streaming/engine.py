@@ -253,9 +253,10 @@ class CdcEngine:
         lsn_col = self.table.lsn_col
         stats = None
         if batch is None:
-            stats = _footer_stats(source, lsn_col)
+            footers = _batch_footers(source)
+            stats = _footer_stats(source, lsn_col, footers)
             if stats is None or stats[0]:
-                batch = _read_batch_dir(self.table.spark, source)
+                batch = _read_batch_dir(self.table.spark, source, footers)
         n_events, lo, hi, spans = stats or _scan_stats(batch, lsn_col)
         metrics = BatchMetrics(
             source=source, events_in=n_events, offsets_start=lo,
@@ -531,6 +532,19 @@ def _parquet_files(path: str) -> list[str]:
     return sorted(glob.glob(os.path.join(path, "*.parquet")))
 
 
+def _batch_footers(path: str) -> list[tuple[str, object]]:
+    """(file, parquet ``FileMetaData``) for each file of a batch dir, each
+    file opened once: the LSN stats and the read's schema both come from
+    it."""
+    import pyarrow.parquet as pq
+
+    def _open(fp: str) -> tuple[str, object]:
+        with pq.ParquetFile(fp) as pf:
+            return fp, pf.metadata
+
+    return footer_map(_open, _parquet_files(path))
+
+
 #: the footer key under which Spark's parquet writer stores its schema
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
@@ -567,7 +581,7 @@ def _read_parquet(spark, arrow_schema, *paths: str) -> DataFrame:
     return reader.parquet(*paths)
 
 
-def _read_batch_dir(spark, path: str) -> DataFrame:
+def _read_batch_dir(spark, path: str, footers=None) -> DataFrame:
     """Read one replay batch dir.  When every file carries the same (name,
     raw arrow type) schema this is a plain ``spark.read.parquet(path)``,
     given the schema from the footers (:func:`_read_parquet`).
@@ -586,13 +600,14 @@ def _read_batch_dir(spark, path: str) -> DataFrame:
     classifiable or not — needs no cast and passes through untouched.  A
     column whose raw types DIFFER and include an unclassifiable one fails
     loud ('not provably identical' takes the safe path), same contract as
-    the drift resolver."""
-    import pyarrow.parquet as pq
-
-    files = _parquet_files(path)
+    the drift resolver.  ``footers``: the dir's :func:`_batch_footers`,
+    when the caller has them already."""
+    if footers is None:
+        footers = _batch_footers(path)
     groups: dict[tuple, list[str]] = {}
     arrow_schemas: dict[tuple, object] = {}
-    for fp, schema in zip(files, footer_map(pq.read_schema, files)):
+    for fp, md in footers:
+        schema = md.schema.to_arrow_schema()
         sig = tuple((f.name, str(f.type)) for f in schema)
         groups.setdefault(sig, []).append(fp)
         arrow_schemas[sig] = schema
@@ -759,7 +774,7 @@ def _lineage_keys(uris: list[str], encoded: bool = True) -> list[str]:
 
 
 def _footer_stats(
-    path: str, lsn_col: str
+    path: str, lsn_col: str, footers=None
 ) -> tuple[int, int, int, dict[str, list[int]]] | None:
     """(n_rows, min_lsn, max_lsn, per_file) from the parquet footers of a
     batch dir, where per_file maps each file's ``_lineage_keys`` label
@@ -768,15 +783,16 @@ def _footer_stats(
     lineage recorded in every snapshot summary (``source.lineage.files``,
     the BASELINE.json north-star checkbox).
     Returns None when any file lacks column statistics (falls back to a scan).
+    ``footers``: the dir's :func:`_batch_footers`, when the caller has them
+    already.
     """
-    import pyarrow.parquet as pq
-
-    files = _parquet_files(path)
-    if not files:
+    if footers is None:
+        footers = _batch_footers(path)
+    if not footers:
         return (0, None, None, {})
+    files = [fp for fp, _ in footers]
 
-    def _one(f: str) -> tuple[int, int | None, int | None, int] | None:
-        md = pq.ParquetFile(f).metadata
+    def _one(md) -> tuple[int, int | None, int | None, int] | None:
         try:
             idx = md.schema.names.index(lsn_col)
         except ValueError:
@@ -794,7 +810,7 @@ def _footer_stats(
             f_hi = st.max if f_hi is None else max(f_hi, st.max)
         return (md.num_rows, f_lo, f_hi, f_null)
 
-    results = footer_map(_one, files)
+    results = [_one(md) for _, md in footers]
     n = 0
     n_null = 0
     lo = hi = None

@@ -857,6 +857,36 @@ def test_footer_stats_match_scan(spark, tmp_path, feed):
     assert _footer_stats(str(empty), "lsn") == (0, None, None, {})
 
 
+@pytest.mark.parametrize("write_mode", ["cow", "mor"])
+def test_stage_opens_each_batch_file_once(
+    spark, tmp_path, feed, write_mode, monkeypatch
+):
+    """Staging a replay batch dir reads each file's footer once: the LSN
+    stats and the read's schema come from the same open."""
+    import glob
+    import os
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    opens = Counter()
+
+    def counted(open_footer):
+        def wrapper(source, *a, **k):
+            opens[os.path.realpath(source)] += 1
+            return open_footer(source, *a, **k)
+        return wrapper
+
+    for name in ("ParquetFile", "read_schema", "read_metadata"):
+        monkeypatch.setattr(pq, name, counted(getattr(pq, name)))
+    paths = write_change_files(feed, str(tmp_path / "feed"), n_batches=2)
+    files = [os.path.realpath(f) for p in paths for f in glob.glob(f"{p}/*.parquet")]
+    table = _mk_table(spark, tmp_path, write_mode=write_mode)
+    metrics = CdcEngine(table).replay(paths)
+    assert not any(m["skipped"] for m in metrics)
+    assert files and {f: opens[f] for f in files} == {f: 1 for f in files}
+
+
 def test_replay_lineage_reproducible_after_restart(spark, tmp_path, feed):
     """North-star: snapshot summaries record per-file lineage (source →
     per-file LSN spans), and a restart-resumed replay over the same batch

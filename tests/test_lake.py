@@ -738,14 +738,36 @@ def test_load_rejects_non_keyhash_transform(spark, tmp_path, table):
         LakeTable.load(spark, table.root)
 
 
-def test_every_write_path_writes_one_file_per_bucket_and_kind(spark, tmp_path):
-    """Every write path hands the file writer a frame whose last exchange is
-    ``repartition(n_buckets, *key)``, so each (bucket, kind) it writes gets
-    exactly one file; a path that lost that exchange would spread a bucket's
-    rows over several tasks, hence several files."""
-    inserts = [_ev(i, "I", f"conv{i}", i % 3) for i in range(1, 41)]
-    dups = [_ev(50 + i, "U", f"conv{i}", i % 3, "u") for i in range(1, 41, 2)]
-    deletes = [_ev(100 + i, "D", f"conv{i}", i % 3) for i in range(1, 41, 4)]
+def _keys_by_bucket(spark, n_buckets, per_bucket):
+    """``per_bucket`` keys (conv_id, turn_idx) of each keyhash bucket, so
+    a test can give every bucket rows of every kind."""
+    rows = spark.createDataFrame(
+        [(f"conv{i}", i % 3) for i in range(40 * n_buckets)],
+        "conv_id string, turn_idx int",
+    ).select("*", bucket_expr_keyhash(TRANSCRIPT_KEY, n_buckets).alias("b")).collect()
+    keys = {b: [] for b in range(n_buckets)}
+    for r in rows:
+        if len(keys[r["b"]]) < per_bucket:
+            keys[r["b"]].append((r["conv_id"], r["turn_idx"]))
+    assert all(len(k) == per_bucket for k in keys.values())
+    return keys
+
+
+def _every_writer(spark, tmp_path, n_buckets, check):
+    """Run every lake write path on fresh ``n_buckets`` tables — append, the
+    CoW merge, the MoR merge, ``stage_delta`` and both ``compact()`` writes
+    — with every bucket holding inserts, updates and deletes.  ``check(
+    written, kinds)`` sees each call's new (bucket, kind) file counts."""
+    keys = _keys_by_bucket(spark, n_buckets, 6)
+    inserts, dups, deletes = [], [], []
+    for b, ks in keys.items():
+        for j, (conv, turn) in enumerate(ks):
+            lsn = 10 * (b * 6 + j) + 1
+            inserts.append(_ev(lsn, "I", conv, turn))
+            if j < 3:
+                dups.append(_ev(100_000 + lsn, "U", conv, turn, "u"))
+            if j in (2, 3):
+                deletes.append(_ev(200_000 + lsn, "D", conv, turn))
 
     def frame(rows):
         return spark.createDataFrame(rows, CHANGE_FEED_SCHEMA).repartition(3)
@@ -758,30 +780,110 @@ def test_every_write_path_writes_one_file_per_bucket_and_kind(spark, tmp_path):
             for e in t.manifest(t.current_snapshot()) if e["path"] not in before
         )
 
-    def one_per(counts, kinds):
-        assert set(counts.values()) == {1}, counts
-        assert {k for _, k in counts} == kinds, counts
-        assert {b for b, _ in counts} == set(range(4)), counts
-
     cow = LakeTable.create(
-        spark, str(tmp_path / "cow"), TABLE_SCHEMA, key=TRANSCRIPT_KEY, n_buckets=4
+        spark, str(tmp_path / "cow"), TABLE_SCHEMA, key=TRANSCRIPT_KEY,
+        n_buckets=n_buckets,
     )
-    one_per(written(cow, lambda: cow.append(frame(inserts).drop("op"))), {"data"})
-    one_per(
+    check(written(cow, lambda: cow.append(frame(inserts).drop("op"))), {"data"})
+    check(
         written(cow, lambda: cow.merge(frame(dups + deletes))), {"data", "tombstone"}
     )
 
     mor = LakeTable.create(
         spark, str(tmp_path / "mor"), TABLE_SCHEMA, key=TRANSCRIPT_KEY,
-        n_buckets=4, write_mode="mor",
+        n_buckets=n_buckets, write_mode="mor",
     )
-    one_per(written(mor, lambda: mor.merge(frame(inserts + dups))), {"delta"})
+    check(written(mor, lambda: mor.merge(frame(inserts + dups))), {"delta"})
     staged = mor.stage_delta(
         dedup_max_lsn(frame(dups + deletes), n_partitions=mor.n_buckets)
     )
-    one_per(Counter((e["bucket"], e["kind"]) for e in staged), {"delta"})
+    check(Counter((e["bucket"], e["kind"]) for e in staged), {"delta"})
     mor.commit_delta(staged)
-    one_per(written(mor, mor.compact), {"data", "tombstone"})
+    check(written(mor, mor.compact), {"data", "tombstone"})
+
+
+@pytest.mark.parametrize("n_buckets", [4, 16])
+def test_every_write_path_writes_one_file_per_bucket_and_kind(
+    spark, tmp_path, n_buckets
+):
+    """Every write path hands the file writer a frame whose last exchange is
+    ``repartition(n_buckets, *key)``, so each (bucket, kind) it writes gets
+    exactly one file; a path that lost that exchange would spread a bucket's
+    rows over several tasks, hence several files.  At 16 buckets on the
+    session's 4 cores the writer coalesces several buckets into each task,
+    which must keep every bucket in one task."""
+
+    def one_per(counts, kinds):
+        assert set(counts.values()) == {1}, counts
+        assert {k for _, k in counts} == kinds, counts
+        assert {b for b, _ in counts} == set(range(n_buckets)), counts
+
+    _every_writer(spark, tmp_path, n_buckets, one_per)
+
+
+def test_every_write_path_runs_at_most_one_write_task_per_core(
+    spark, tmp_path, monkeypatch
+):
+    """Every write task deserializes the session's Hadoop configuration, a
+    fixed cost per task, so a 16-bucket table on 4 cores writes in at most
+    4 tasks, not one per bucket."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    write_tasks = []
+    parquet = DataFrameWriter.parquet
+
+    def counted(self, path, *a, **k):
+        group = f"write-{os.urandom(4).hex()}"
+        sc.setJobGroup(group, "lake write")
+        try:
+            return parquet(self, path, *a, **k)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            # the write is the group's last job; its result stage (the
+            # job's last stage) is the one that runs the write tasks
+            job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+            write_tasks.append(tracker.getStageInfo(max(job.stageIds)).numTasks)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counted)
+    calls = []
+    _every_writer(spark, tmp_path, 16, lambda counts, kinds: calls.append(kinds))
+    assert len(calls) == 5 and len(write_tasks) == 6, write_tasks  # compact: 2
+    assert max(write_tasks) <= sc.defaultParallelism, write_tasks
+
+
+def test_bucket_files_are_deterministic_under_coalescing(spark, tmp_path):
+    """W7: the same frame written into two fresh 16-bucket tables (several
+    buckets per write task on 4 cores) gives each bucket a file with the
+    same rows in the same key order."""
+    import pyarrow.parquet as pq
+
+    # 37 and 5 are coprime: 185 distinct keys
+    rows = [_ev(i, "I", f"conv{i % 37}", i % 5, f"t{i}") for i in range(185)]
+    df = spark.createDataFrame(rows, CHANGE_FEED_SCHEMA).drop("op").repartition(5)
+
+    def files_by_bucket(name):
+        t = LakeTable.create(
+            spark, str(tmp_path / name), TABLE_SCHEMA, key=TRANSCRIPT_KEY,
+            n_buckets=16,
+        )
+        t.append(df)
+        out = {}
+        for e in t.manifest(t.current_snapshot()):
+            assert e["bucket"] not in out, e
+            out[e["bucket"]] = pq.read_table(
+                os.path.join(t.root, e["path"])
+            ).to_pylist()
+        return out
+
+    a, b = files_by_bucket("a"), files_by_bucket("b")
+    assert a == b and len(a) == 16
+    for file_rows in a.values():
+        keys = [(r["conv_id"], r["turn_idx"]) for r in file_rows]
+        assert keys == sorted(keys)
 
 
 def test_mor_dedup_plans_window_group_limit_not_sort_aggregate(
