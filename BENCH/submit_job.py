@@ -1,8 +1,10 @@
 """spark-submit entry point — the multi-executor invocation path of the north
 rule.  Ships the engine as a zip via --py-files; everything importable from
-the zip only (no repo path assumptions on executors).
+the zip only (no repo path assumptions on executors).  The zip is not
+committed: build it from the current tree first, every time the package
+changes.
 
-    python BENCH/make_zip.py   # builds BENCH/engine.zip
+    python BENCH/make_zip.py   # builds BENCH/engine.zip (git-ignored)
     spark-submit --master local[8] --py-files BENCH/engine.zip \
         BENCH/submit_job.py <n_events> <n_batches> <work_dir>
 

@@ -3,30 +3,27 @@
 Per micro-batch: normalize payload (P8-style expressions, no per-row Python) →
 max-LSN dedup per (conv_id, turn_idx) → MERGE into the current table state.
 
-The max-LSN dedup (:func:`dedup_max_lsn`) takes its physical form from the
-batch's column types.  A payload with a variable-width column (the
-transcripts' strings) keeps each key's row with ``row_number() over
-(partition by key order by lsn desc) = 1``: ``Sort`` + ``WindowGroupLimit``
-+ ``Window``, with a partial ``WindowGroupLimit`` below the exchange when the
-layout is free.  An all-fixed-width payload runs per-column ``max_by`` as a
-partial+final ``HashAggregate``.  With the keyhash pin (``n_partitions``)
-the explicit repartition IS the exchange and the whole dedup sits above it
-— one exchange of raw rows (the measured one-exchange tradeoff; see
-merge_into_frame's plan-shape note).  Rejected forms (ROADMAP item 1): a
-hash ``max(lsn)`` joined back to the batch (slower, and the join
-re-shuffles, losing one file per bucket) and ``max_by`` over a struct (a
-``SortAggregate`` too).  A two-phase salted form (spread a hot key over
-salt reducers, then take the global winner) measured slower than one
-aggregation on a 50%-hot-key feed in both write modes; it survives only as
-the registry's ``w4_salted_dedup`` query.
+Every lake plan picks each key's winner with one window selection
+(:func:`_keep_first`, ``row_number() over (partition by key order by lsn
+desc) = 1``): the CoW MERGE (:func:`merge_into_frame`, which also orders by
+``is_target desc`` so the stored row wins ties), the MoR stage, the MoR read
+and compaction (:func:`dedup_max_lsn` over string payloads).  With the
+keyhash pin (``n_partitions``) the explicit repartition IS the window's
+exchange — one exchange of raw rows, each bucket in one task.  Only an
+all-fixed-width dedup (registry queries) runs per-column ``max_by`` as a
+``HashAggregate``, which is cheaper there.  Rejected forms (ROADMAP item
+1): a hash ``max(lsn)`` joined back to the batch (slower, and the join
+re-shuffles, losing one file per bucket), ``max_by`` over a struct (an
+interpreted ``SortAggregate``), and a two-phase salted form (slower on a
+50%-hot-key feed; it survives only as the ``w4_salted_dedup`` query).
 
 At 100 TB: the batch is the small side; dedup is the only full shuffle of the
-batch and it shrinks the batch to ≤ |keys| rows *before* the MERGE aggregation.
+batch and it shrinks the batch to ≤ |keys| rows *before* the MERGE.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -95,14 +92,10 @@ def dedup_max_lsn(
       under the WAL contract (LSN unique per key).  On ``w4_max_lsn_dedup``
       at sf0.1 (7,500 winners) the window form took 0.37 s against 0.25 s
       (0.62 against 0.59 JVM CPU-s), hence the split.
-    - **any variable-width column** (the engine's string payloads): keep the
-      row with ``row_number() over (partition by key order by lsn desc) =
-      1`` — ``Sort`` + ``WindowGroupLimit`` + ``Window``, never the
-      interpreted ``SortAggregate`` that string ``max_by`` buffers force.
-      On ``perfbench`` ``serve_mor`` (11 interleaved pairs, 4 vCPUs)
-      ``cpu_per_op_s`` fell 1.901 → 1.604 s and ``lake.write_task_s``
-      0.36–0.46 → 0.25–0.31 s.  Ties on the max LSN keep exactly one whole
-      input row; columns are never mixed across rows.
+    - **any variable-width column** (the engine's string payloads): the
+      window selection :func:`_keep_first`, never the interpreted
+      ``SortAggregate`` that string ``max_by`` buffers force.  Ties on the
+      max LSN keep exactly one whole input row.
 
     Null LSNs lose in both forms: a key resolves to its max non-null-LSN
     row.  A key whose LSNs are all null gets its key with every other
@@ -121,9 +114,16 @@ def dedup_max_lsn(
             for f in payload
         ]
         return batch.groupBy(*key).agg(*aggs).select(*batch.columns)
-    order = Window.partitionBy(*key).orderBy(F.col(lsn_col).desc())
+    return _keep_first(batch, key, F.col(lsn_col).desc())
+
+
+def _keep_first(frame: DataFrame, key: list[str], *order: Column) -> DataFrame:
+    """Each key's first row under ``order`` (descending sorts put nulls
+    last): ``row_number() over (partition by key order by ...) = 1``,
+    planned as ``Sort`` + ``WindowGroupLimit`` + ``Window``."""
+    w = Window.partitionBy(*key).orderBy(*order)
     return (
-        batch.withColumn("_rn", F.row_number().over(order))
+        frame.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
@@ -144,23 +144,25 @@ def merge_into_frame(
         WHEN MATCHED AND s.lsn > t.lsn THEN UPDATE SET *
         WHEN NOT MATCHED AND s.op != 'D' THEN INSERT *
 
-    as ONE aggregation: (target ∪ batch) → ``max_by(row, struct(lsn,
-    is_target))`` per key.  Both sides carry ``target``'s columns, ``op``
-    included; delete winners stay in the output as ``op='D'`` tombstones, so
-    a stale 'U' below a delete's LSN cannot resurrect the key.  The
-    ``is_target`` tiebreak keeps the stored row on an equal-LSN redelivery
-    (replay is idempotent), and the batch need not be deduped: the same
-    aggregation is the within-batch max-LSN dedup.
+    as ONE window selection: (target ∪ batch) → each key's first row by
+    ``lsn desc, is_target desc`` (:func:`_keep_first`, the same selection as
+    :func:`dedup_max_lsn` over string payloads).  Both sides carry
+    ``target``'s columns, ``op`` included; delete winners stay in the output
+    as ``op='D'`` tombstones, so a stale 'U' below a delete's LSN cannot
+    resurrect the key.  The ``is_target`` tiebreak keeps the stored row on
+    an equal-LSN redelivery (replay is idempotent), and the batch need not
+    be deduped: the same selection is the within-batch max-LSN dedup.  Ties
+    inside the batch keep one whole input row; null LSNs sort last, so a
+    key whose LSNs are all null keeps the stored row.
 
     ``n_partitions`` pins the exchange to ``repartition(n, *key)``, which
-    satisfies the groupBy's distribution, so with ``n = n_buckets`` each
+    satisfies the window's distribution, so with ``n = n_buckets`` each
     bucket's rows are in exactly one task and the table rewrite adds no
     repartition — ONE exchange for dedup + merge + bucket layout, with the
-    merge and the write in at most one task per core.  Both aggregate
-    halves then sit above that exchange (rows cross
-    the wire un-combined); measured ~1.6x faster on delta writes than
-    combining below a default exchange and shuffling again to the bucket
-    layout."""
+    merge and the write in at most one task per core.  The whole selection
+    then sits above that exchange (rows cross the wire un-combined);
+    measured ~1.6x faster on delta writes than combining below a default
+    exchange and shuffling again to the bucket layout."""
     key = key or TRANSCRIPT_KEY
     cols = target.columns
     unioned = target.withColumn("_tgt", F.lit(1)).unionByName(
@@ -168,13 +170,9 @@ def merge_into_frame(
     )
     if n_partitions is not None:
         unioned = unioned.repartition(n_partitions, *[F.col(c) for c in key])
-    payload = F.struct(*[F.col(c) for c in cols])
-    order = F.struct(F.col(lsn_col), F.col("_tgt"))
-    return (
-        unioned.groupBy(*key)
-        .agg(F.max_by(payload, order).alias("_w"))
-        .select([F.col(f"_w.{c}").alias(c) for c in cols])
-    )
+    return _keep_first(
+        unioned, key, F.col(lsn_col).desc(), F.col("_tgt").desc()
+    ).drop("_tgt")
 
 
 def apply_batch_to_frame(

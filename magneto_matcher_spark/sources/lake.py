@@ -610,20 +610,20 @@ class LakeTable:
 
         ``batch`` = the raw (normalized) change events: ``op`` column plus the
         current payload columns, any number of rows per key.  For CoW the
-        max-LSN dedup is FUSED into the merge aggregation itself — the batch
-        dedup and the merge are ONE shuffle of target ∪ batch.  Semantics:
-        the MERGE kernel's (plans/apply.py ``merge_into_frame``; ties keep
-        the target row, so equal-LSN redelivery is a no-op).
+        batch dedup and the merge are ONE window selection over ONE shuffle
+        of target ∪ batch: the MERGE kernel's semantics (plans/apply.py
+        ``merge_into_frame``; ties keep the target row, so equal-LSN
+        redelivery is a no-op).
 
         Physical plan: bucket the batch, prune the manifest to touched buckets,
-        merge ONLY those buckets' rows with the batch (one hash aggregation),
-        rewrite those buckets, keep every untouched file by reference.
+        merge ONLY those buckets' rows with the batch (each bucket in one
+        task), rewrite those buckets, keep every untouched file by reference.
 
         Write modes (``create(write_mode=...)``):
 
-        - ``cow`` — copy-on-write: one fused max-LSN aggregation over
-          target ∪ batch, then rewrite the touched buckets.  Read is a plain
-          scan.  Right when batches are small relative to buckets or reads
+        - ``cow`` — copy-on-write: one max-LSN window selection over target
+          ∪ batch, then rewrite the touched buckets.  Read is a plain scan.
+          Right when batches are small relative to buckets or reads
           dominate.
         - ``mor`` — merge-on-read: max-LSN dedup pinned to the bucket
           layout, :meth:`stage_delta`, then :meth:`commit_delta` — append
@@ -686,9 +686,9 @@ class LakeTable:
 
         On a pure-CoW table the target view is a raw scan (see
         :meth:`_resolve`: no delta files, nothing to deduplicate), so the one
-        fused agg picks the winner across {base rows, tombstone rows, batch
-        rows} directly; buckets that carry delta files (mixed-mode tables)
-        are resolved first."""
+        window selection picks the winner across {base rows, tombstone rows,
+        batch rows} directly; buckets that carry delta files (mixed-mode
+        tables) are resolved first."""
         from magneto_matcher_spark.plans.apply import merge_into_frame
 
         return merge_into_frame(

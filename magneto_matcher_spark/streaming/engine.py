@@ -241,19 +241,21 @@ class CdcEngine:
 
     # ------------- the batch pipeline: stage → commit -------------
 
-    def _stage(self, source: str, batch: DataFrame | None = None) -> _Staged:
+    def _stage(
+        self, source: str, batch: DataFrame | None = None, footers=None
+    ) -> _Staged:
         """Everything before the commit.  ``batch=None`` means ``source`` is
         a replay batch dir: its stats (count, LSN range, each file's LSN
-        span) come from the parquet footers with zero Spark jobs, and an
-        empty dir is never read (schema inference on it would throw).  A
-        frame is stat'ed per SOURCE FILE with one aggregation scan (file
-        names, unlike scan partition ids, are stable across a
-        restart-resumed replay)."""
+        span) come from the parquet footers (``footers`` if read already)
+        with zero Spark jobs, and an empty dir is never read (schema
+        inference on it would throw).  A frame is stat'ed per SOURCE FILE
+        with one aggregation scan (file names, unlike scan partition ids,
+        are stable across a restart-resumed replay)."""
         t0 = time.perf_counter()
         lsn_col = self.table.lsn_col
         stats = None
         if batch is None:
-            footers = _batch_footers(source)
+            footers = _batch_footers(source) if footers is None else footers
             stats = _footer_stats(source, lsn_col, footers)
             if stats is None or stats[0]:
                 batch = _read_batch_dir(self.table.spark, source, footers)
@@ -328,8 +330,8 @@ class CdcEngine:
             if mor:
                 snapshot_id = self.table.commit_delta(staged.entries, summary=summary)
             else:
-                # fused path: the max-LSN dedup happens INSIDE the merge
-                # aggregation — one shuffle of target ∪ batch
+                # the max-LSN dedup happens INSIDE the merge's window
+                # selection — one shuffle of target ∪ batch
                 snapshot_id = self.table.merge(staged.frame, summary=summary)
             # this commit's summary, captured BEFORE compaction/expiry —
             # afterwards the current snapshot may be the compaction's (whose
@@ -402,7 +404,7 @@ class CdcEngine:
 
         Each dir is staged, then committed (``_stage`` → ``_commit``).  Batch
         stats (count + LSN range) come from the parquet footers — driver-side
-        metadata reads, no Spark job.
+        metadata reads, no Spark job, each file opened once per call.
 
         ``concurrency > 1`` (MoR tables, schema-stable feeds only): stage
         several batches in parallel driver threads — Spark schedules their
@@ -420,9 +422,13 @@ class CdcEngine:
         files of every batch after *i* discarded, the error re-raised.  The
         failing batch's own files are kept — its commit may have landed
         before maintenance raised."""
-        if concurrency > 1 and self._can_replay_concurrently(batch_paths):
+        footers = [None] * len(batch_paths)
+        if concurrency > 1:
+            footers = footer_map(_batch_footers, batch_paths)
+        pairs = list(zip(batch_paths, footers))
+        if concurrency > 1 and self._can_replay_concurrently(footers):
             with ThreadPoolExecutor(max_workers=concurrency) as pool:
-                futures = [pool.submit(self._stage, p) for p in batch_paths]
+                futures = [pool.submit(self._stage, p, footers=f) for p, f in pairs]
             out = []
             for i, fut in enumerate(futures):
                 try:
@@ -433,11 +439,10 @@ class CdcEngine:
                             self.table.discard_staged(later.result().entries)
                     raise
             return out
-        return [self._commit(self._stage(path)) for path in batch_paths]
+        return [self._commit(self._stage(p, footers=f)) for p, f in pairs]
 
-    def _can_replay_concurrently(self, batch_paths: list[str]) -> bool:
-        import pyarrow.parquet as pq
-
+    def _can_replay_concurrently(self, footers: list[list]) -> bool:
+        """Whether dirs with these :func:`_batch_footers` may stage concurrently."""
         if self.table.meta["write_mode"] != "mor":
             return False
         expect_names = set(self.table.column_names) | _SYSTEM_COLS
@@ -449,10 +454,8 @@ class CdcEngine:
         # (e.g. a foreign backfill straddling a producer-side widening)
         # must serialize through the drift path, and sampling files[0]
         # would let the drifted tail bypass promote/fail-loud entirely.
-        files = [fp for path in batch_paths for fp in _parquet_files(path)]
-
-        def _ok(fp: str) -> bool:
-            schema = pq.read_schema(fp)
+        def _ok(md) -> bool:
+            schema = md.schema.to_arrow_schema()
             if set(schema.names) != expect_names:
                 return False  # name drift present → serialize
             for field in schema:
@@ -467,7 +470,7 @@ class CdcEngine:
                     return False
             return True
 
-        return all(footer_map(_ok, files))
+        return all(_ok(md) for dir_footers in footers for _, md in dir_footers)
 
     def run_streaming(
         self,
@@ -526,23 +529,19 @@ class CdcEngine:
         return query
 
 
-def _parquet_files(path: str) -> list[str]:
-    import glob
-
-    return sorted(glob.glob(os.path.join(path, "*.parquet")))
-
-
 def _batch_footers(path: str) -> list[tuple[str, object]]:
     """(file, parquet ``FileMetaData``) for each file of a batch dir, each
-    file opened once: the LSN stats and the read's schema both come from
-    it."""
+    file opened once: the LSN stats, the read's schema and the concurrent
+    replay gate all come from it."""
+    import glob
+
     import pyarrow.parquet as pq
 
     def _open(fp: str) -> tuple[str, object]:
         with pq.ParquetFile(fp) as pf:
             return fp, pf.metadata
 
-    return footer_map(_open, _parquet_files(path))
+    return footer_map(_open, sorted(glob.glob(os.path.join(path, "*.parquet"))))
 
 
 #: the footer key under which Spark's parquet writer stores its schema
@@ -692,8 +691,8 @@ def _scan_stats(
     if 0 < n_null < n:
         # a PARTIALLY-null LSN column is a malformed feed: the null rows
         # can neither be ordered nor watermarked, and letting them through
-        # silently drops or corrupts them downstream (max_by/merge treat
-        # null as smallest).  All-null keeps the existing contract: the
+        # silently drops or corrupts them downstream (the dedup and merge
+        # rank null LSNs last).  All-null keeps the existing contract: the
         # caller fail-louds on hi is None.
         raise ValueError(
             f"batch has {n_null} of {n} rows with null '{lsn_col}' — "
@@ -835,7 +834,7 @@ def _footer_stats(
     if 0 < n_null < n:
         # same contract as _scan_stats: partially-null LSNs are a
         # malformed feed — null rows can't be ordered or watermarked, and
-        # downstream max_by/merge would silently drop or corrupt them
+        # the downstream dedup/merge would silently drop or corrupt them
         raise ValueError(
             f"batch {path!r} has {n_null} of {n} rows with null "
             f"'{lsn_col}' — cannot order or watermark them"

@@ -87,11 +87,23 @@ def test_dedup_max_lsn_matches_oracle(small_feed, n_partitions):
 
 
 
-@pytest.mark.parametrize("n_partitions", [None, 3])
+def _merge_winners(batch, target_rows=()):
+    """The MERGE kernel's winners of ``batch`` over a target of
+    ``target_rows`` (default: empty), both sides carrying ``op``."""
+    spark = batch.sparkSession
+    target = spark.createDataFrame(list(target_rows), batch.schema)
+    out = merge_into_frame(
+        target.withColumn("op", F.lit("U")), batch.withColumn("op", F.lit("U"))
+    )
+    return out.drop("op").collect()
+
+
+@pytest.mark.parametrize("n_partitions", [None, 3, "merge"])
 def test_dedup_max_lsn_tie_keeps_one_whole_row(spark, n_partitions):
     """Two events of one key share its max LSN but carry different string
     payloads: exactly one row comes back, and it is one of the inputs (no
-    columns mixed from both)."""
+    columns mixed from both).  ``merge``: the same batch through the MERGE
+    kernel over an empty target."""
     rows = [
         ("k", 1, 5, "user", "first", None),
         ("k", 1, 5, "assistant", None, "grep"),
@@ -102,25 +114,38 @@ def test_dedup_max_lsn_tie_keeps_one_whole_row(spark, n_partitions):
         rows,
         "conv_id string, turn_idx int, lsn long, role string, text string, tool string",
     ).repartition(4)
-    out = dedup_max_lsn(batch, n_partitions=n_partitions).collect()
+    if n_partitions == "merge":
+        out = _merge_winners(batch)
+    else:
+        out = dedup_max_lsn(batch, n_partitions=n_partitions).collect()
     by_key = {(r["conv_id"], r["turn_idx"]): tuple(r) for r in out}
     assert len(out) == 2
     assert by_key[("k", 1)] in {tuple(r) for r in rows[:2]}
     assert by_key[("j", 0)] == rows[3]
 
 
-@pytest.mark.parametrize("payload", ["text string", "score double"])
+@pytest.mark.parametrize("payload", ["text string", "score double", "merge"])
 def test_dedup_max_lsn_null_lsn_loses(spark, payload):
     """A key with null and non-null LSNs resolves to its max non-null-LSN
     row, in the window form (string payload) and the aggregate form
-    (fixed-width payload) alike."""
+    (fixed-width payload) alike.  ``merge``: the MERGE kernel gives the same
+    winner over an empty target, and a key whose batch LSNs are all null
+    keeps its stored row, whether that row's LSN is set or null too."""
+    merge = payload == "merge"
+    payload = "text string" if merge else payload
     value = (lambda v: f"v{v}") if payload.startswith("text") else float
     rows = [("k", 0, None, value(9)), ("k", 0, 4, value(4)),
             ("k", 0, 7, value(7)), ("k", 0, None, value(8))]
-    batch = spark.createDataFrame(
-        rows, f"conv_id string, turn_idx int, lsn long, {payload}"
-    ).repartition(3)
-    assert [tuple(r) for r in dedup_max_lsn(batch).collect()] == [rows[2]]
+    schema = f"conv_id string, turn_idx int, lsn long, {payload}"
+    batch = spark.createDataFrame(rows, schema).repartition(3)
+    winners = _merge_winners(batch) if merge else dedup_max_lsn(batch).collect()
+    assert [tuple(r) for r in winners] == [rows[2]]
+    if merge:
+        stored = [("j", 0, 2, "stored"), ("m", 0, None, "stored")]
+        nulls = [("j", 0, None, "new"), ("m", 0, None, "new"), ("m", 0, None, "newer")]
+        batch = spark.createDataFrame(rows + nulls, schema).repartition(3)
+        got = sorted(tuple(r) for r in _merge_winners(batch, stored))
+        assert got == sorted([rows[2], *stored])
 
 def test_single_batch_apply_matches_sequential_oracle(spark, small_feed):
     state = apply_batch_to_frame(_empty_target(spark), small_feed)
@@ -164,14 +189,15 @@ def test_out_of_order_delivery_within_batch(spark, small_feed):
 
 @pytest.mark.parametrize("keep_tombstones", [False, True])
 def test_apply_plan_is_one_aggregation_no_join(spark, small_feed, keep_tombstones):
-    """The frame-level MERGE is the kernel's union → max_by aggregation:
-    no Join anywhere in the executed plan."""
+    """The frame-level MERGE is the kernel's union → window selection: no
+    Join anywhere in the executed plan, and no interpreted aggregate."""
     state = apply_batch_to_frame(_empty_target(spark), small_feed)
     state = spark.createDataFrame(state.collect(), state.schema)
     out = apply_batch_to_frame(state, small_feed, keep_tombstones=keep_tombstones)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
-    assert "max_by" in plan
+    assert "WindowGroupLimit" in plan
+    assert "SortAggregate" not in plan and "ObjectHashAggregate" not in plan
 
 
 def test_delete_then_reinsert_across_batches(spark):

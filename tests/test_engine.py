@@ -12,7 +12,7 @@ from magneto_matcher_spark.sources.changefeed import (
     write_change_files,
 )
 from magneto_matcher_spark.sources.lake import LakeTable
-from magneto_matcher_spark.streaming.engine import CdcEngine
+from magneto_matcher_spark.streaming.engine import CdcEngine, _batch_footers
 
 from tests.conftest import build_jobs
 
@@ -586,7 +586,7 @@ def test_concurrent_replay_serializes_on_type_drift(spark, tmp_path):
     )
     paths = write_change_files(wide_feed, str(tmp_path / "feed"), n_batches=2)
     engine = CdcEngine(table)
-    assert engine._can_replay_concurrently(paths) is False
+    assert engine._can_replay_concurrently([_batch_footers(p) for p in paths]) is False
     metrics = engine.replay(paths, concurrency=3)
     assert all(not m["skipped"] for m in metrics)
     assert dict(table.read().dtypes)["latency_ms"] == "bigint"
@@ -726,8 +726,8 @@ def test_lineage_keys_progressive_disambiguation():
 
 def test_partially_null_lsn_fails_loud(spark, tmp_path, feed):
     """A batch where SOME rows carry a null LSN must raise, not silently
-    drop/corrupt those rows downstream (max_by/merge treat null as
-    smallest).  Covered on both stats paths: the aggregation scan
+    drop/corrupt those rows downstream (the dedup and merge rank null
+    LSNs last).  Covered on both stats paths: the aggregation scan
     (apply_batch on a frame) and the parquet-footer reader (replay)."""
     dirty = feed.withColumn(
         "lsn", F.when(F.col("lsn") == 7, F.lit(None)).otherwise(F.col("lsn"))
@@ -798,7 +798,7 @@ def test_mixed_schema_batch_dir_serializes(spark, tmp_path, feed):
         write_mode="mor",
     )
     engine = CdcEngine(table)
-    assert not engine._can_replay_concurrently([str(mixed_dir)])
+    assert not engine._can_replay_concurrently([_batch_footers(str(mixed_dir))])
     engine.replay([str(mixed_dir)], concurrency=4)
     # the widened column was promoted, and the state matches the oracle
     types = {f["name"]: f["type"] for f in table.current_schema_meta["fields"]}
@@ -857,18 +857,31 @@ def test_footer_stats_match_scan(spark, tmp_path, feed):
     assert _footer_stats(str(empty), "lsn") == (0, None, None, {})
 
 
-@pytest.mark.parametrize("write_mode", ["cow", "mor"])
+@pytest.mark.parametrize(
+    "write_mode,concurrency",
+    [
+        pytest.param("cow", 1, id="cow"),
+        pytest.param("mor", 1, id="mor"),
+        pytest.param("mor", 4, id="mor-concurrent"),
+    ],
+)
 def test_stage_opens_each_batch_file_once(
-    spark, tmp_path, feed, write_mode, monkeypatch
+    spark, tmp_path, feed, write_mode, concurrency, monkeypatch
 ):
-    """Staging a replay batch dir reads each file's footer once: the LSN
-    stats and the read's schema come from the same open."""
+    """A replay call reads each batch file's footer once: the LSN stats and
+    the read's schema come from the same open, and under concurrency the
+    concurrent-staging gate reads those same footers."""
     import glob
     import os
     from collections import Counter
 
     import pyarrow.parquet as pq
 
+    paths = write_change_files(feed, str(tmp_path / "feed"), n_batches=2)
+    files = [os.path.realpath(f) for p in paths for f in glob.glob(f"{p}/*.parquet")]
+    engine = CdcEngine(_mk_table(spark, tmp_path, write_mode=write_mode))
+    if concurrency > 1:
+        assert engine._can_replay_concurrently([_batch_footers(p) for p in paths])
     opens = Counter()
 
     def counted(open_footer):
@@ -879,11 +892,9 @@ def test_stage_opens_each_batch_file_once(
 
     for name in ("ParquetFile", "read_schema", "read_metadata"):
         monkeypatch.setattr(pq, name, counted(getattr(pq, name)))
-    paths = write_change_files(feed, str(tmp_path / "feed"), n_batches=2)
-    files = [os.path.realpath(f) for p in paths for f in glob.glob(f"{p}/*.parquet")]
-    table = _mk_table(spark, tmp_path, write_mode=write_mode)
-    metrics = CdcEngine(table).replay(paths)
+    metrics = engine.replay(paths, concurrency=concurrency)
     assert not any(m["skipped"] for m in metrics)
+    # lake writes open their own output files; count the batch files only
     assert files and {f: opens[f] for f in files} == {f: 1 for f in files}
 
 

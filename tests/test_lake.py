@@ -408,10 +408,10 @@ def test_mor_evolve_maps_old_delta_files(spark, mor_table):
 
 
 def test_cow_fused_merge_plan_single_exchange(spark, table):
-    """The CoW merge is ONE partial-aggregated shuffle: raw target scan
-    (data + tombstone files, unresolved) ∪ batch → max_by agg.  No join, no
-    pre-resolve of tombstoned buckets, exactly one Exchange before the
-    bucket-repartition write."""
+    """The CoW merge is ONE shuffle: raw target scan (data + tombstone
+    files, unresolved) ∪ batch → row_number() = 1 window selection.  No
+    join, no interpreted aggregate, no pre-resolve of tombstoned buckets,
+    exactly one Exchange before the bucket-repartition write."""
     b1 = spark.createDataFrame(
         [_ev(1, "I", "c1", 0), _ev(2, "I", "c2", 0), _ev(3, "D", "c2", 0)],
         CHANGE_FEED_SCHEMA,
@@ -426,8 +426,10 @@ def test_cow_fused_merge_plan_single_exchange(spark, table):
     )
     merged = table.merged_frame(b2, touched=list(range(table.n_buckets)))
     plan = merged._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1  # the key agg shuffle, nothing else
+    assert plan.count("Exchange") == 1  # the key window shuffle, nothing else
     assert "Join" not in plan
+    assert "WindowGroupLimit" in plan
+    assert "SortAggregate" not in plan and "ObjectHashAggregate" not in plan
 
     table.merge(b2)
     state = {(r["conv_id"], r["turn_idx"]): r["text"] for r in table.read().collect()}
